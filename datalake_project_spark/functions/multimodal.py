@@ -254,7 +254,7 @@ def dhash_chunk_candidates(h: DataFrame, max_df: int | None = None,
     if max_df is not None:
         df_counts = (chunks.groupBy("j", "cv")
                      .agg(F.count(F.lit(1)).alias("df"))
-                     .localCheckpoint(eager=False))
+                     .localCheckpoint(eager=False))  # keep: measured
         dropped = df_counts.where(F.col("df") > max_df)
         chunks = (chunks.join(df_counts.where(F.col("df") <= max_df)
                               .select("j", "cv"), ["j", "cv"]))

@@ -13,15 +13,15 @@ values — no filesystem walking in application code.
 
 Write semantics match the reference:
 - formatted: append per ``ingest_date`` (K2);
-- usage: overwrite per (``ingest_date``, ``run_ts``) — with
-  ``partitionOverwriteMode=dynamic`` (session factory) a re-run replaces
-  only its own partition, which makes re-runs idempotent WITHOUT the
-  whole-table truncation a naive overwrite would do at 100 TB (K3).
+- usage: overwrite per (``ingest_date``, ``run_ts``) — every overwrite
+  passes the ``partitionOverwriteMode=dynamic`` writer option, so a
+  re-run replaces only its own partition on any session, which makes
+  re-runs idempotent WITHOUT the whole-table truncation a naive
+  overwrite would do at 100 TB (K3).
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,41 +33,6 @@ class Lake:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-
-    @contextlib.contextmanager
-    def _dynamic_overwrite(self, session: SparkSession | None = None):
-        """Session-independent K3 semantics: overwrite must replace only
-        the partitions present in the written data. Scoped save/restore
-        (writes are eager, so the conf only needs to hold for the write
-        call) — constructing a Lake must NOT silently change overwrite
-        semantics for a caller's own unrelated writes on the same session.
-
-        The conf must be set on the session that OWNS the DataFrame being
-        written: Structured Streaming hands ``foreachBatch`` a DataFrame
-        bound to a cloned session with isolated conf, and setting the key
-        on the original session would leave the clone in static-overwrite
-        mode (each batch would truncate the whole table).
-        """
-        sess = session or self.spark
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = sess.conf.get(key, None)
-        if prev is not None and prev.lower() == "dynamic":
-            # already dynamic (the engine session default): nothing to
-            # toggle — and a read-only path here makes concurrent lake
-            # writes from driver threads safe (r12: run_pipeline
-            # overlaps independent per-account writes, guide §2.6;
-            # a set/unset pair racing across threads could strip the
-            # conf mid-write)
-            yield
-            return
-        sess.conf.set(key, "dynamic")
-        try:
-            yield
-        finally:
-            if prev is None:
-                sess.conf.unset(key)
-            else:
-                sess.conf.set(key, prev)
 
     # -- paths -------------------------------------------------------------
     def formatted_path(self, table: str) -> str:
@@ -86,12 +51,16 @@ class Lake:
     def write_usage(self, df: DataFrame, table: str, ingest_date: str,
                     run_ts: str) -> None:
         """Usage layer snapshot, dynamic-overwrite of exactly the
-        (ingest_date, run_ts) partition (K3)."""
-        with self._dynamic_overwrite(df.sparkSession):
-            (df.withColumn("ingest_date", F.lit(ingest_date))
-             .withColumn("run_ts", F.lit(run_ts))
-             .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
-             .parquet(self.usage_path(table)))
+        (ingest_date, run_ts) partition (K3). The writer option scopes
+        the mode to this write: session conf is never touched, so it
+        holds on a ``foreachBatch`` clone session and under concurrent
+        writes from several threads."""
+        (df.withColumn("ingest_date", F.lit(ingest_date))
+         .withColumn("run_ts", F.lit(run_ts))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("ingest_date", "run_ts")
+         .parquet(self.usage_path(table)))
 
     # -- readers -----------------------------------------------------------
     def read_usage(self, table: str, ingest_date: str | None = None,
@@ -139,6 +108,7 @@ class Lake:
         target = (self.read_usage(table, ingest_date, run_ts)
                   .drop("ingest_date", "run_ts"))
         keep = target.join(touched, keys, "left_anti")
+        # keep: overwrite-source — merged reads the partition it replaces
         merged = keep.unionByName(ups).localCheckpoint(eager=True)
         if not merged.take(1):
             # A merge that tombstones EVERY surviving row produces an
@@ -207,14 +177,16 @@ class Lake:
             # to overwrite a path it is still reading); at cluster scale a
             # write-to-staging + partition swap does the same job without
             # holding the partition in executor storage.
+            # keep: overwrite-source
             staged = part.drop("ingest_date", "run_ts").localCheckpoint(eager=True)
-            with self._dynamic_overwrite(staged.sparkSession):
-                (staged
-                 .repartition(target_files)
-                 .withColumn("ingest_date", F.lit(ingest_date))
-                 .withColumn("run_ts", F.lit(run_ts))
-                 .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
-                 .parquet(self.usage_path(table)))
+            (staged
+             .repartition(target_files)
+             .withColumn("ingest_date", F.lit(ingest_date))
+             .withColumn("run_ts", F.lit(run_ts))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("ingest_date", "run_ts")
+             .parquet(self.usage_path(table)))
         return before
 
     def latest_run_before(self, table: str, ingest_date: str,

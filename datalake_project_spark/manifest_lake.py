@@ -513,8 +513,7 @@ class ManifestLake(Lake):
                     continue  # base manifest expired mid-merge: re-read head
                 keep = target.join(touched, keys, "left_anti")
                 merged = keep.unionByName(ups)
-            files = self._stage(merged.localCheckpoint(eager=True)
-                                .drop("ingest_date", "run_ts"), table)
+            files = self._stage(merged.drop("ingest_date", "run_ts"), table)
             stats = self._collect_stats(files)
             key = [ingest_date, run_ts]
 

@@ -120,11 +120,9 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     sh = _doc_shingles(docs, id_col, text_col, n)
     if max_df is not None:
         # (_id, hash-array) feeds the candidate index AND both sides of
-        # the exact re-verify join; lazy localCheckpoint tokenizes and
-        # shingles the corpus ONCE (compact payload: 8 B per shingle)
+        # the exact re-verify join (compact payload: 8 B per shingle)
         hashed = sh.select("_id", F.transform(
-            "_shingles", lambda s: F.xxhash64(s)).alias("_hs")) \
-            .localCheckpoint(eager=False)
+            "_shingles", lambda s: F.xxhash64(s)).alias("_hs"))
         inv = hashed.select("_id", F.explode("_hs").alias("_s"))
         rare = (inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
                 .where(F.col("_df") <= max_df).select("_s"))
@@ -140,14 +138,12 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
             cands = cands.repartition(num_partitions, "a_id", "b_id")
         return _verify_pairs_exact(hashed, cands.distinct(), threshold)
 
-    # one tokenize+shingle+hash pass for the WHOLE query: the compact
-    # (_id, hash-array) table is lazily checkpointed and feeds the
-    # inverted index (both self-join sides) AND the size legs — before
-    # r12 the sizes leg re-ran the tokenizer from the parquet in its
-    # own (single-task at fixture scale) stage
+    # the compact (_id, hash-array) table feeds the inverted index (both
+    # self-join sides) AND the size legs; the tokenize pass has no
+    # exchange for ReuseExchange to share, so it is cut here once
     hashed = sh.select("_id", F.transform(
         "_shingles", lambda s: F.xxhash64(s)).alias("_hs")) \
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # keep: measured
     sizes = hashed.select("_id", F.size("_hs").alias("_n"))
     inv = hashed.select("_id", F.explode("_hs").alias("_s"))
     if num_partitions is not None:
@@ -240,11 +236,10 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     values are engine-exact.
     """
     sh = _doc_shingles(docs, id_col, text_col, n)
-    # one tokenize pass: hashed arrays checkpointed, index + size legs
-    # both derive from it (same r12 restructure as ngram_jaccard_pairs)
+    # index + size legs both derive from the hashed arrays (same shape
+    # as ngram_jaccard_pairs)
     hashed = sh.select("_id", F.transform(
-        "_shingles", lambda s: F.xxhash64(s)).alias("_hs")) \
-        .localCheckpoint(eager=False)
+        "_shingles", lambda s: F.xxhash64(s)).alias("_hs"))
     sizes = hashed.select("_id", F.size("_hs").alias("_n"))
     inv = hashed.select("_id", F.explode("_hs").alias("_s"))
     a, b = inv.alias("a"), inv.alias("b")
@@ -344,17 +339,13 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     params = _minhash_params(num_perm, seed)
 
     sh = _doc_shingles(docs, id_col, text_col, n)
-    # hash once: all minhash arithmetic and verification run on int64s.
-    # localCheckpoint (not cache): materializes once for the three uses
-    # below AND truncates lineage; the blocks are released when the RDD
-    # is garbage-collected, so repeated calls in a long-lived session
-    # don't accumulate executor storage the way never-unpersisted
-    # .cache() entries do.
+    # all minhash arithmetic and verification run on int64 hashes; the
+    # hashed arrays feed the signature AND both verify-join sides
     hashed = sh.select(
         "_id",
         F.transform("_shingles",
                     lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE31))).alias("_hs"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)  # keep: measured
 
     inv = hashed.select("_id", F.explode("_hs").alias("_h"))
     sig = inv.groupBy("_id").agg(*[
@@ -447,8 +438,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         else:
             # avoid setting the sign bit via overflow under ANSI mode
             sig_col = F.when(bit == 1, sig_col + F.lit(-9223372036854775808)).otherwise(sig_col)
-    # localCheckpoint, not cache: see minhash_lsh_pairs — blocks are
-    # released on GC instead of pinning executor storage forever.
+    # keep: measured
     sig = contribs.select("_id", sig_col.alias("_sig")).localCheckpoint(eager=True)
 
     chunk_cols = [
@@ -486,7 +476,7 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
     """
     und = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     edges = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v"))) \
-        .distinct().localCheckpoint(eager=True)
+        .distinct().localCheckpoint(eager=True)  # keep: multi-action
     labels = (edges.select("u").distinct()
               .withColumn("label", F.col("u")))
     for _ in range(max_iter):
@@ -501,7 +491,7 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
                .select("u", F.col("label").alias("_old"),
                        F.least("label", F.coalesce("_nl", "label"))
                        .alias("label"))
-               .localCheckpoint(eager=True))
+               .localCheckpoint(eager=True))  # keep: multi-action
         changed = upd.where(F.col("label") != F.col("_old")).count()
         labels = upd.select("u", "label")
         if changed == 0:

@@ -1026,7 +1026,7 @@ def q_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         if lake.exists("watermark"):
             wm = lake.read_usage("watermark", "state", "hw").first()["hw_ts"]
             batch_df = batch_df.where(F.col("ts") > wm)
-        landed = batch_df.localCheckpoint(eager=True)
+        landed = batch_df.localCheckpoint(eager=True)  # keep: multi-action
         n = landed.count()
         lake.write_formatted(landed, "events_landed", "all")
         new_wm = landed.agg(F.max("ts").alias("hw_ts"))
@@ -1215,6 +1215,9 @@ def q_replica_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
                       | ~F.col("order_count").eqNullSafe(F.col("b_cnt"))
                       | ~F.col("total_price").eqNullSafe(F.col("b_price")))
                .select("custkey", "order_count", "total_price"))
+    # damaged reads the replica the upsert rewrites, and is counted
+    # again after the repair
+    # keep: overwrite-source
     n_repaired = damaged.localCheckpoint(eager=True)
     lake.upsert(n_repaired, "replica", "1997-01-01", "r", keys=["custkey"])
 

@@ -307,12 +307,9 @@ def q_corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.text import shingles
 
     d = Catalog(spark, sf_dir).table("documents")
-    # the (source, shingle) index feeds BOTH sides of the self-join; a
-    # lazy localCheckpoint materializes the corpus explode+distinct
-    # once instead of per side (the q_text_collocations discipline)
+    # the (source, shingle) index feeds BOTH sides of the self-join
     sh = (d.select("source", F.explode(shingles(T.tokens("text"), 3)).alias("shingle"))
-          .distinct()
-          .localCheckpoint(eager=False))
+          .distinct())
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
@@ -775,8 +772,7 @@ def q_corpus_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (w.crossJoin(F.broadcast(tot))
             .withColumn("rem", F.pmod(scaled, F.col("wt")))
             .withColumn("bq", ((scaled - F.pmod(scaled, F.col("wt")))
-                               / F.col("wt")).cast("long"))
-            .localCheckpoint(eager=False))
+                               / F.col("wt")).cast("long")))
     extra = base.agg((n - F.sum("bq")).cast("long").alias("extra"))
     a = base.alias("a")
     b = base.select(F.col("source").alias("b_source"),
@@ -851,8 +847,7 @@ def q_split_ngram_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = split_assign(d, "doc_id")
     sh = (assigned.select("split",
                           F.explode(shingles(tokens("text"), 3)).alias("s"))
-          .distinct()
-          .localCheckpoint(eager=False))  # feeds train side and held-out side
+          .distinct())
     tr = sh.where(F.col("split") == "train").select("s")
     te = sh.where(F.col("split") != "train")
     hit = (te.join(tr.withColumn("_hit", F.lit(1)).distinct(), "s", "left")
@@ -1195,8 +1190,7 @@ def q_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
             if n > 1 else F.lit(0).cast("long")
 
     both = d.select(
-        "doc_id", assign(8).alias("s8"), assign(9).alias("s9")) \
-        .localCheckpoint(eager=False)
+        "doc_id", assign(8).alias("s8"), assign(9).alias("s9"))
     occ = (both.groupBy("s8").agg(F.count(F.lit(1)).alias("c"))
            .agg((F.max("c").cast("double") / F.min("c"))
                 .alias("imbalance")))

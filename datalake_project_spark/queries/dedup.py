@@ -717,8 +717,7 @@ def q_dedup_review_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     pairs = (D.ngram_jaccard_pairs(d, threshold=0.5,
                                    num_partitions=_pair_parts(spark, sf_dir))
-             .orderBy(F.desc("jaccard"), "a_id", "b_id").limit(10)
-             .localCheckpoint(eager=False))
+             .orderBy(F.desc("jaccard"), "a_id", "b_id").limit(10))
     da = d.select(F.col("doc_id").alias("a_id"),
                   F.substring("text", 1, 60).alias("a_snippet"))
     db = d.select(F.col("doc_id").alias("b_id"),
@@ -833,7 +832,7 @@ def q_dedup_winnow_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         "credit beyond exact; spans only beyond both) — the table that "
         "justifies each family's 100 TB compute spend. Engine side "
         "composes the existing operators (keep-first anti-join, the "
-        "checkpointed Jaccard index, min-label components, hashed span "
+        "hashed Jaccard index, min-label components, hashed span "
         "coverage); the oracle replays the identical ladder with a "
         "recursive-CTE closure. Integer token counts — hash-exact.",
 )
@@ -867,7 +866,7 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.tuning import fan_out_scan
     sp = fan_out_scan(d2, "doc_id").select("doc_id", F.posexplode(
         T.span_list(T.tokens("text"), 8)).alias("pos", "span"))
-    h = sp.withColumn("h", F.xxhash64("span")).localCheckpoint(eager=False)
+    h = sp.withColumn("h", F.xxhash64("span"))
     surv = (h.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
             .where(F.col("nd") >= 2).select("h"))
     # (the r8 spill attribution cleared this distinct: the left-semi
@@ -1198,8 +1197,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buys a full window pass)
     toks = (sh.select(F.col("_id").alias("doc_id"),
                       F.size("_shingles").alias("sz"),
-                      F.explode("_shingles").alias("tok"))
-            .localCheckpoint(eager=False))
+                      F.explode("_shingles").alias("tok")))
     # ONE tok exchange feeds df-count AND the rank join (r13, guide
     # §2.4 share-the-exchange: the old shape exchanged the token stream
     # by tok for the join, exchanged it AGAIN for the df groupBy, then
@@ -1215,7 +1213,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.row_number().over(w).alias("tr")))
     pref = (ranked.where(F.col("tr") <= F.col("sz")
                          - F.ceil(0.5 * F.col("sz")) + 1)
-            .select("doc_id", "tok").localCheckpoint(eager=False))
+            .select("doc_id", "tok"))
 
     def pair_count(idx):
         idx = idx.repartition(nparts, "tok")
@@ -1227,16 +1225,16 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .repartition(nparts, "a_id", "b_id")
                 .distinct())
 
-    cand_pref = pair_count(pref).localCheckpoint(eager=False)
+    cand_pref = pair_count(pref)
     truth = (D.ngram_jaccard_pairs(d, threshold=0.5,
                                    num_partitions=nparts)
-             .select("a_id", "b_id").localCheckpoint(eager=False))
+             .select("a_id", "b_id"))
     missed = truth.join(cand_pref, ["a_id", "b_id"], "left_anti")
     # The five audit scalars assemble through ONE union-of-aggregates
     # pass instead of a chain of five broadcast crossJoins (r13: each
     # broadcast was its own build + exchange; the union's independent
     # leaf stages still materialize concurrently, and the final pivot
-    # touches 5 rows). n_docs counts distinct ids off the checkpointed
+    # touches 5 rows). n_docs counts distinct ids off the token
     # index (r12: _doc_shingles no longer filters empties; this avoids
     # a second corpus tokenize pass).
     cnt = F.count(F.lit(1)).cast("long")
@@ -1346,7 +1344,7 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (D.ngram_jaccard_pairs(
         d, threshold=0.2, num_partitions=_pair_parts(spark, sf_dir))
              .select("a_id", "b_id", "jaccard")
-             .localCheckpoint(eager=False))
+             .localCheckpoint(eager=False))  # keep: measured
     ids = (truth.select(F.col("a_id").alias("_id"))
            .union(truth.select("b_id")).distinct())
     sh = D._doc_shingles(d, "doc_id", "text", 3).join(ids, "_id")
@@ -1364,7 +1362,7 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("_id", "j")
            .agg(F.min((F.col("a") * F.col("h") + F.col("b")) % P)
                 .alias("mh"))
-           .localCheckpoint(eager=False))
+           .localCheckpoint(eager=False))  # keep: measured
     sa = sig.select(F.col("_id").alias("a_id"), "j",
                     F.col("mh").alias("mha"))
     sb = sig.select(F.col("_id").alias("b2"),
@@ -1469,7 +1467,7 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (D.ngram_jaccard_pairs(d, threshold=0.5,
                                    num_partitions=_pair_parts(spark, sf_dir))
              .select("a_id", "b_id", "jaccard")
-             .localCheckpoint(eager=False))
+             .localCheckpoint(eager=False))  # keep: measured
     ids = (truth.select(F.col("a_id").alias("_id"))
            .union(truth.select("b_id")).distinct())
     from datalake_project_spark.functions.text import tokens
@@ -1554,7 +1552,7 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engines, so the valve is part of the spec, not a recall "
         "leak. Intersection weight rides the index join (SUM(idf) "
         "per pair); per-doc total weight is one groupBy off the same "
-        "checkpointed index — one corpus pass, cost ~ sum(df^2) over "
+        "index — one corpus pass, cost ~ sum(df^2) over "
         "kept shingles, never n^2.",
 )
 def q_dedup_idf_weighted_jaccard(spark: SparkSession,
@@ -1563,9 +1561,8 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
                          "doc_id", "text", 3)
     inv = (sh.select("_id", F.explode(
                F.transform("_shingles", lambda s: F.xxhash64(s)))
-               .alias("_s"))
-           .localCheckpoint(eager=False))
-    # docs with >= 1 shingle == distinct ids in the checkpointed index
+               .alias("_s")))
+    # docs with >= 1 shingle == distinct ids in the index
     # (r12: _doc_shingles no longer filters empties)
     n_docs = inv.agg(F.count_distinct("_id").alias("_n"))
     idf = (inv.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
@@ -1573,8 +1570,7 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
            .crossJoin(F.broadcast(n_docs))
            .select("_s", F.log(F.col("_n").cast("double")
                                / F.col("_df").cast("double")).alias("_idf")))
-    wv = inv.join(idf, "_s")  # single consumer since the leg-carry
-    # restructure (the window chain below) — no checkpoint needed
+    wv = inv.join(idf, "_s")
     # Per-doc total weight rides the INDEX LEGS (one keyed window over
     # the 16 M-row index), so the sum-df^2 pair aggregate finishes the
     # similarity with any_value() and needs NO post-aggregate join —
@@ -1674,8 +1670,7 @@ def q_dedup_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.explode(span_list(tokens("text"), 3)).alias("s"))
           .select("doc_id", F.xxhash64("s").alias("s"))
           .groupBy("doc_id", "s")
-          .agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint(eager=False))  # one shingle pass feeds all
+          .agg(F.count(F.lit(1)).alias("tf")))
     keep = (tf.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") <= 500).select("s"))
     tfk = tf.join(keep, "s", "left_semi")  # single consumer now

@@ -1664,8 +1664,7 @@ def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.expr("bitmap_bucket_number(user_id)").alias("bk"),
                          F.expr("bitmap_bit_position(user_id)").alias("bp"))
                 .groupBy("day", "bk")
-                .agg(F.expr("bitmap_construct_agg(bp)").alias("bm"))
-                .localCheckpoint(eager=False))  # partials feed BOTH levels
+                .agg(F.expr("bitmap_construct_agg(bp)").alias("bm")))
     per_day = (partials.groupBy("day")
                .agg(F.sum(F.expr("bitmap_count(bm)")).alias("n_users")))
     total = (partials.groupBy("bk")
@@ -1707,8 +1706,7 @@ def q_hll_mergeable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("day"), "user_id")
     sk = (base.groupBy("day")
           .agg(F.expr("hll_sketch_agg(user_id)").alias("s"),
-               F.countDistinct("user_id").alias("n_exact"))
-          .localCheckpoint(eager=False))  # sketches feed both levels
+               F.countDistinct("user_id").alias("n_exact")))
     ok = (F.abs(F.expr("hll_sketch_estimate(s)")
                 - F.col("n_exact")).cast("double")
           / F.col("n_exact") <= 0.05)
@@ -2349,8 +2347,7 @@ def q_events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = (spine.join(counts, "he", "left")
           .select("he",
                   F.coalesce("cx", F.lit(0)).alias("x"),
-                  F.coalesce("cy", F.lit(0)).alias("y"))
-          .localCheckpoint(eager=False))
+                  F.coalesce("cy", F.lit(0)).alias("y")))
     lags = spark.range(7).select(F.col("id").cast("int").alias("lag"))
     a = hs.select(F.col("he").alias("a_he"), F.col("x"))
     b = hs.select(F.col("he").alias("b_he"), F.col("y"))
@@ -2518,8 +2515,7 @@ def q_sketch_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = (v.crossJoin(F.broadcast(bounds))
               .groupBy(((F.col("c") - F.col("lo")) * B / width)
                        .cast("long").alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("cnt"))
-              .localCheckpoint(eager=False))
+              .agg(F.count(F.lit(1)).alias("cnt")))
     # Cumulative counts via a bounded broadcast self-join (32x32 cells),
     # NOT a global window — an un-partitioned Window would force an
     # Exchange SinglePartition even though the sketch is 32 rows.
@@ -2687,8 +2683,7 @@ def q_events_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (e.withColumn("prev_ts", F.lag("ts").over(w))
          .select(((F.unix_micros("ts") - F.unix_micros("prev_ts"))
                   / 1000000).cast("long").alias("gap_s"))
-         .where(F.col("gap_s").isNotNull())
-         .localCheckpoint(eager=False))
+         .where(F.col("gap_s").isNotNull()))
     th = local_df(spark, [(900,), (1800,), (3600,), (7200,)],
                                "threshold_s int")
     nu = e.agg(F.countDistinct("user_id").alias("n_users"))
@@ -2822,8 +2817,7 @@ def q_events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
           .groupBy("h").agg(F.count(F.lit(1)).alias("c")))
     b = he.agg(F.min("h").alias("lo"))
     x = (he.crossJoin(F.broadcast(b))
-         .select((F.col("h") - F.col("lo")).alias("t"), "c")
-         .localCheckpoint(eager=False))
+         .select((F.col("h") - F.col("lo")).alias("t"), "c"))
     st = x.agg(F.count(F.lit(1)).alias("n"), F.sum("c").alias("s"))
     periods = local_df(spark, [(6,), (12,), (24,), (168,)],
                                     "period_h int")
@@ -2840,8 +2834,7 @@ def q_events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = (dft.select("period_h", "n",
                      F.round((F.col("re") * F.col("re")
                               + F.col("im") * F.col("im")) / F.col("n"),
-                             2).alias("power"))
-          .localCheckpoint(eager=False))
+                             2).alias("power")))
     tot = pw.agg(F.sum("power").alias("tp"),
                  F.max("power").alias("mx"))
     return (pw.crossJoin(F.broadcast(tot))
@@ -2974,8 +2967,7 @@ def q_events_markov_entropy_rate(spark: SparkSession,
           .agg(F.count(F.lit(1)).alias("n")))
     wn = Window.partitionBy("s")
     tp = (tc.select("s", "t", (F.col("n").cast("double")
-                               / F.sum("n").over(wn)).alias("p"))
-          .localCheckpoint(eager=False))
+                               / F.sum("n").over(wn)).alias("p")))
     states = tc.select(F.col("s").alias("st")).distinct()
     ns = states.agg(F.count(F.lit(1)).alias("k"))
     pr = (states.crossJoin(F.broadcast(ns))
@@ -3057,7 +3049,7 @@ def q_events_context_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lag("event_type", 2).over(w).alias("p2"))
     c3 = (seq.where(F.col("p1").isNotNull() & F.col("p2").isNotNull())
           .groupBy("p2", "p1", "e").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+          .localCheckpoint(eager=False))  # keep: measured
     c2a = c3.groupBy("p2", "p1").agg(F.sum("c").alias("cx"))
     c2b = c3.groupBy("p1", "e").agg(F.sum("c").alias("c2"))
     c1 = c2b.groupBy("p1").agg(F.sum("c2").alias("c1x"))
@@ -3294,19 +3286,16 @@ def q_sketch_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, M, P = 4, 4096, 2147483647
     ev = Catalog(spark, sf_dir).table("events")
     members = (ev.where(F.col("user_id") % 2 == 0)
-               .select(F.col("user_id").alias("x")).distinct()
-               .localCheckpoint(eager=False))
+               .select(F.col("user_id").alias("x")).distinct())
     probes = (ev.where(F.col("user_id") % 2 == 1)
-              .select(F.col("user_id").alias("x")).distinct()
-              .localCheckpoint(eager=False))
+              .select(F.col("user_id").alias("x")).distinct())
     hf = (spark.range(K).select(
         F.col("id").alias("i"),
         ((1103515245 * F.col("id") + 12345) % P).alias("a"),
         ((69069 * F.col("id") + 362437) % P).alias("b")))
     pos = ((F.col("a") * F.col("x") + F.col("b")) % P) % M
     bits = (members.crossJoin(F.broadcast(hf))
-            .select(pos.alias("pos")).distinct()
-            .localCheckpoint(eager=False))
+            .select(pos.alias("pos")).distinct())
     fp = (probes.crossJoin(F.broadcast(hf))
           .select("x", "i", pos.alias("pos"))
           .join(bits, "pos")
@@ -3605,8 +3594,7 @@ def q_events_surprisal_outliers(spark: SparkSession,
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (e.select("user_id", "event_type",
                     F.lag("event_type").over(w).alias("prev"))
-           .where(F.col("prev").isNotNull())
-           .localCheckpoint(eager=False))  # feeds model + scoring
+           .where(F.col("prev").isNotNull()))
     cnt = (seq.groupBy(F.col("prev").alias("a"),
                        F.col("event_type").alias("b"))
            .agg(F.count(F.lit(1)).alias("n")))

@@ -307,11 +307,9 @@ def q_graph_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).table("lineitem")
-    # the bipartite index feeds the degree table AND both join sides:
-    # lazy localCheckpoint runs the lineitem distinct once, not thrice
+    # the bipartite index feeds the degree table AND both join sides
     bip = li.select(F.col("l_suppkey").alias("s"),
-                    F.col("l_partkey").alias("p")).distinct() \
-        .localCheckpoint(eager=False)
+                    F.col("l_partkey").alias("p")).distinct()
     deg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
     a = bip.select(F.col("s").alias("s1"), "p")
     b = bip.select(F.col("s").alias("s2"), "p")
@@ -389,10 +387,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
              .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
              .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             .where(F.col("src") != F.col("dst"))
-             # nation-pair-sized; consumed by sym (twice), nodes
-             # (twice), and through both propagation rounds
-             .localCheckpoint(eager=False))
+             .where(F.col("src") != F.col("dst")))
     sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
            .unionAll(edges.select(F.col("dst").alias("u"),
                                   F.col("src").alias("v"), "w"))
@@ -465,11 +460,7 @@ def q_graph_shortest_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(li, F.col("l_orderkey") == o.o_orderkey)
              .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
              .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             # nation-pair-sized result of a 5-way fact join, consumed
-             # by the cost table, node set, source scalar, and every
-             # relaxation layer: materialize once
-             .localCheckpoint(eager=False))
+             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
     ec = edges.select("src", "dst",
                       F.ceil(F.lit(100000.0) / F.col("w")).alias("cost"))
     nodes = (edges.select(F.col("src").alias("name"))
@@ -526,8 +517,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
              .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
              .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             .where(F.col("src") != F.col("dst"))
-             .localCheckpoint(eager=False))
+             .where(F.col("src") != F.col("dst")))
     und = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
            .union(edges.select(F.col("dst").alias("u"),
                                F.col("src").alias("v")))
@@ -590,8 +580,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).table("lineitem")
     bip = li.select(F.col("l_suppkey").alias("s"),
-                    F.col("l_partkey").alias("p")).distinct() \
-        .localCheckpoint(eager=False)
+                    F.col("l_partkey").alias("p")).distinct()
     pdeg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
     sdeg = bip.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
     a = bip.select(F.col("s").alias("s1"), "p")
@@ -670,7 +659,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     bip = (li.select(F.col("l_suppkey").alias("s"),
                      F.col("l_partkey").alias("p"))
            .repartition(nparts_bip, "s", "p").distinct()
-           .localCheckpoint(eager=False))
+           .localCheckpoint(eager=False))  # keep: measured
     pdeg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
     # The wedge SMJ's INPUT sorts are sized too: at session width the
     # two bip sorts share one task's memory slice with the join and the
@@ -720,7 +709,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("u") < F.col("v"))
             .join(pdeg.where(F.col("np").between(2, 1000)), "p")
             .select("u", "v").repartition(nparts, "u", "v").distinct()
-            .localCheckpoint(eager=False))
+            .localCheckpoint(eager=False))  # keep: measured
     base = half.union(half.select(F.col("v").alias("u"),
                                   F.col("u").alias("v")))
     # Peel rounds checkpoint only the NODE sets (the tiny side of the
@@ -753,7 +742,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         keep = (deg.where(F.col("d") >= K)
                 .select(F.col("u").alias("node"))
-                .localCheckpoint(eager=False))
+                .localCheckpoint(eager=False))  # keep: measured
         counts.append(keep.agg(
             F.lit(i).alias("iteration"),
             F.count(F.lit(1)).alias("n_nodes")))
@@ -830,6 +819,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
              .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
              .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+             # keep: measured — read by every iteration of the loop below
              .localCheckpoint(eager=False))
     nodes = (edges.select(F.col("src").alias("name"))
              .union(edges.select(F.col("dst").alias("name"))).distinct())
@@ -922,6 +912,7 @@ def q_graph_personalized_pagerank(spark: SparkSession,
              .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
              .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
              .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+             # keep: measured — read by every iteration of the loop below
              .localCheckpoint(eager=False))
     outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
     nodes = (edges.select(F.col("src").alias("name"))
@@ -1017,6 +1008,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
                  .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
                  .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+                 # keep: measured — read by every propagation round
                  .localCheckpoint(eager=False))
     edges = edges_all.where(F.col("src") != F.col("dst"))
     sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
@@ -1131,7 +1123,7 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     ue = (edges.where(F.col("src") != F.col("dst"))
           .select(F.least("src", "dst").alias("u"),
                   F.greatest("src", "dst").alias("v"))
-          .distinct().localCheckpoint(eager=False))
+          .distinct())
     adj = (ue.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
            .unionAll(ue.select(F.col("v").alias("node"),
                                F.col("u").alias("nbr"))))

@@ -2940,8 +2940,7 @@ def q_stats_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", 1)
                     .otherwise(0)).alias("k")))
     rates = (g.select("c_nationkey", "n", "k",
-                      (F.col("k").cast("double") / F.col("n")).alias("raw"))
-             .localCheckpoint(eager=False))
+                      (F.col("k").cast("double") / F.col("n")).alias("raw")))
     m_df = rates.agg(F.avg("raw").alias("m"))
     mom = (rates.crossJoin(F.broadcast(m_df))
            .agg(F.first("m").alias("m"),
@@ -3021,8 +3020,7 @@ def q_feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "F").alias("bad"))
         .groupBy("bin")
         .agg(F.sum(F.when(F.col("bad"), 0).otherwise(1)).alias("g"),
-             F.sum(F.when(F.col("bad"), 1).otherwise(0)).alias("b"))
-        .localCheckpoint(eager=False))
+             F.sum(F.when(F.col("bad"), 1).otherwise(0)).alias("b")))
     tot = cells.agg(F.sum("g").alias("gt"), F.sum("b").alias("bt"))
     woe = (cells.crossJoin(F.broadcast(tot))
            .select("bin", "g", "b",
@@ -3173,8 +3171,7 @@ def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("o_custkey") == F.col("c_custkey"))
          .select(F.col("c_mktsegment").alias("seg"),
                  F.col("o_orderpriority").alias("pri")))
-    cell = (j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-            .localCheckpoint(eager=False))
+    cell = j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
     rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
     cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
     n_ = cell.agg(F.sum("o").alias("n"))
@@ -3245,7 +3242,7 @@ def q_stats_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = o.select(F.round(F.col("o_totalprice") * 100).cast("long")
                      .alias("c"), "o_orderkey")
     topk = (cents.orderBy(F.desc("c"), "o_orderkey").limit(100)
-            .select("c").localCheckpoint(eager=False))
+            .select("c").localCheckpoint(eager=False))  # keep: measured
     xmin = topk.agg(F.min("c").alias("xm"))
     h = (topk.crossJoin(F.broadcast(xmin))
          .where(F.col("c") > F.col("xm"))
@@ -3318,8 +3315,7 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).table("events")
     mo = (e.select("event_type",
                    F.expr("unix_micros(ts) div 86400000000").alias("m"))
-          .groupBy("event_type", "m").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+          .groupBy("event_type", "m").agg(F.count(F.lit(1)).alias("c")))
     b = mo.select(F.col("event_type").alias("et2"),
                   F.col("m").alias("m2"), F.col("c").alias("c2"))
     pairs = (mo.join(F.broadcast(b),
@@ -3397,8 +3393,7 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.sum(F.when(F.col("event_type") == "click", 1)
                     .otherwise(0)).alias("x"),
               F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y"))
-         .localCheckpoint(eager=False))
+                    .otherwise(0)).alias("y")))
     b = d.select(F.col("day").alias("d2"), F.col("x").alias("x2"),
                  F.col("y").alias("y2"))
     prod = (F.col("x2") - F.col("x")) * (F.col("y2") - F.col("y"))
@@ -3688,7 +3683,7 @@ def q_stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lnc(_LNF_SPARK, "kk", "k")
         + " + " + _lnc(_LNF_SPARK, "nn - kk", "na - k")
         + " - " + _lnc(_LNF_SPARK, "nn", "na"))
-    lp = sup.withColumn("lnp", lnp).localCheckpoint(eager=False)
+    lp = sup.withColumn("lnp", lnp)
     obs = (lp.where(F.col("k") == F.col("ka"))
            .select(F.col("lnp").alias("lnp_obs")))
     p = (lp.crossJoin(F.broadcast(obs))
@@ -3854,8 +3849,7 @@ def q_stats_wilcoxon_signed_rank(spark: SparkSession,
                     .otherwise(0)).alias("y")))
     nz = (d.where(F.col("x") != F.col("y"))
           .select("day", (F.col("x") - F.col("y")).alias("diff"),
-                  F.abs(F.col("x") - F.col("y")).alias("ad"))
-          .localCheckpoint(eager=False))
+                  F.abs(F.col("x") - F.col("y")).alias("ad")))
     b = nz.select(F.col("ad").alias("ad2"))
     rk = (nz.join(F.broadcast(b), F.lit(True))
           .groupBy("day", "diff", "ad")
@@ -4178,8 +4172,7 @@ def q_stats_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("o_custkey") == F.col("c_custkey"))
          .select(F.col("c_mktsegment").alias("seg"),
                  F.col("o_orderpriority").alias("pri")))
-    cell = (j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-            .localCheckpoint(eager=False))
+    cell = j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
     rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
     cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
     n_ = cell.agg(F.sum("o").alias("n"))
@@ -4716,8 +4709,7 @@ def q_stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (c.join(F.broadcast(n), n["n_nationkey"] == c["c_nationkey"])
            .join(o, o["o_custkey"] == c["c_custkey"])
            .groupBy(F.col("n_name").alias("nation"), "c_custkey")
-           .agg(F.sum("o_totalprice").cast("double").alias("x"))
-           .localCheckpoint(eager=False))  # feeds total + group + term
+           .agg(F.sum("o_totalprice").cast("double").alias("x")))
     tot = rev.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"),
                   F.avg("x").alias("mu"))
     t_total = (rev.crossJoin(F.broadcast(tot))
@@ -4854,8 +4846,7 @@ def q_stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stats_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).table("events")
     g = (e.groupBy("user_id")
-         .agg(F.count(F.lit(1)).alias("ni"), F.avg("value").alias("mi"))
-         .localCheckpoint(eager=False))  # feeds SSB + the SSW join
+         .agg(F.count(F.lit(1)).alias("ni"), F.avg("value").alias("mi")))
     tot = e.agg(F.count(F.lit(1)).alias("n"), F.avg("value").alias("mu"))
     ssb = (g.crossJoin(F.broadcast(tot))
            .agg(F.sum(F.col("ni") * (F.col("mi") - F.col("mu"))

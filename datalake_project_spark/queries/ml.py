@@ -2173,8 +2173,7 @@ def q_classifier_f1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (scores.join(lab, "doc_id")
             .groupBy("prob")
             .agg(F.count(F.when(F.col("label"), 1)).alias("pos"),
-                 F.count(F.when(~F.col("label"), 1)).alias("neg"))
-            .localCheckpoint(eager=False))
+                 F.count(F.when(~F.col("label"), 1)).alias("neg")))
     th = local_df(spark, 
         [(0.3,), (0.4,), (0.5,), (0.6,), (0.7,)], "threshold double")
     cells = (hist.crossJoin(F.broadcast(th))

@@ -467,6 +467,7 @@ def q_multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_media, perceptual_dhash,
     )
     docs = Catalog(spark, sf_dir).table("documents")
+    # keep: measured — the Python dhash pass feeds the count AND the join
     f = perceptual_dhash(as_media(docs)).localCheckpoint(eager=False)
     g = f.groupBy("dhash").agg(F.count(F.lit(1)).alias("n_same_hash"))
     return (f.join(g, "dhash")
@@ -612,7 +613,8 @@ def q_multimodal_dhash_near_dup(spark: SparkSession,
     )
     docs = Catalog(spark, sf_dir).table("documents")
     h = (perceptual_dhash(as_media(docs))
-         .select("doc_id", "dhash").localCheckpoint(eager=False))
+         .select("doc_id", "dhash")
+         .localCheckpoint(eager=False))  # keep: measured
     cand, _dropped = dhash_chunk_candidates(h, max_df=500)
     ha = h.select(F.col("doc_id").alias("a_id"), F.col("dhash").alias("da"))
     hb = h.select(F.col("doc_id").alias("b_id"), F.col("dhash").alias("db"))

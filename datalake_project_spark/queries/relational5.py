@@ -334,10 +334,8 @@ def q16_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).table("lineitem")
-    # the distinct basket index feeds both join sides: one shuffle, not
-    # two (lazy localCheckpoint, the inverted-index discipline)
-    items = li.select("l_orderkey", "l_partkey").distinct() \
-        .localCheckpoint(eager=False)
+    # the distinct basket index feeds both join sides
+    items = li.select("l_orderkey", "l_partkey").distinct()
     a, b = items.alias("a"), items.alias("b")
     return (
         a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1098,9 +1096,8 @@ def q_recs_item_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = Catalog(spark, sf_dir).table("lineitem")
     # distinct basket index reused by the degree table and both join
-    # sides: lazy localCheckpoint pays the distinct shuffle once
-    items = li.select("l_orderkey", "l_partkey").distinct() \
-        .localCheckpoint(eager=False)
+    # sides
+    items = li.select("l_orderkey", "l_partkey").distinct()
     deg = items.groupBy(F.col("l_partkey").alias("p")).agg(
         F.count(F.lit(1)).alias("n"))
     a, b = items.alias("a"), items.alias("b")
@@ -2076,8 +2073,7 @@ def q_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = base.select("c_custkey", F.col("c_nationkey").alias("nk"),
                        F.explode(_deletion_neighborhood(
                            F.substring("c_name", 10, 9), 9, 2))
-                       .alias("seg")) \
-        .localCheckpoint(eager=False)
+                       .alias("seg"))
     a = sized(segs.select(F.col("c_custkey").alias("left_key"),
                           "nk", "seg"), "nk", "seg")
     # the variant self-join must never broadcast: Catalyst's size
@@ -2399,8 +2395,7 @@ def q_linkage_sorted_neighborhood(spark: SparkSession,
              .agg(F.coalesce(F.sum("b.s_n"), F.lit(0)).alias("off_n")))
     ranked = (intra.join(F.broadcast(below), "shard")
               .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal",
-                      (F.col("off_n") + F.col("rn_intra")).alias("rnk"))
-              .localCheckpoint(eager=False))
+                      (F.col("off_n") + F.col("rn_intra")).alias("rnk")))
     W = 5
     a = ranked.select(
         F.col("c_custkey").alias("left_key"), F.col("c_name").alias("ln_"),
@@ -2551,8 +2546,7 @@ def q_sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).table("lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct() \
-        .localCheckpoint(eager=False)
+    items = li.select("l_orderkey", "l_partkey").distinct()
     n = items.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
     isup = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
     a, b = items.alias("a"), items.alias("b")
@@ -2803,8 +2797,7 @@ def q_linkage_qgram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                              "c_custkey", 4, 3750)
          .select(F.col("c_custkey").alias("key"),
                  F.col("c_nationkey").alias("nk"),
-                 F.col("c_name").alias("nm"))
-         .localCheckpoint(eager=False))
+                 F.col("c_name").alias("nm")))
     pos = F.sequence(F.lit(1), F.length("nm") - 1)
     prof = (c.select("key", "nk",
                      F.explode(pos).alias("p"),
@@ -2812,8 +2805,7 @@ def q_linkage_qgram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("key", "nk",
                     F.expr("substring(nm, p, 2)").alias("g"))
             .groupBy("key", "nk", "g")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=False))
+            .agg(F.count(F.lit(1)).alias("cnt")))
     glen = c.select("key", (F.length("nm") - 1).alias("ng"))
     a = prof.select(F.col("key").alias("a_id"), "nk", "g",
                     F.col("cnt").alias("ca"))
@@ -2830,7 +2822,7 @@ def q_linkage_qgram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (shared.join(F.broadcast(la), "a_id")
             .join(F.broadcast(lb), "b_id")
             .where(F.col("ov") >= F.greatest("ga", "gb2") - 4)
-            .select("a_id", "b_id").localCheckpoint(eager=False))
+            .select("a_id", "b_id"))
     ca2 = c.select(F.col("key").alias("a_id"), F.col("nk").alias("nka"),
                    F.col("nm").alias("na"))
     cb2 = c.select(F.col("key").alias("b_id"), F.col("nk").alias("nkb2"),
@@ -2838,7 +2830,7 @@ def q_linkage_qgram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (ca2.join(cb2, (F.col("nka") == F.col("nkb2"))
                       & (F.col("a_id") < F.col("b_id")))
              .where(F.levenshtein("na", "nb") <= 2)
-             .select("a_id", "b_id").localCheckpoint(eager=False))
+             .select("a_id", "b_id"))
     missed = truth.join(cand, ["a_id", "b_id"], "left_anti")
     dfreq = prof.groupBy("nk", "g").agg(F.count(F.lit(1)).alias("df"))
     slots = F.broadcast(dfreq.agg(
@@ -2941,8 +2933,7 @@ def q_linkage_qgram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_linkage_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = Catalog(spark, sf_dir).table("customer")
     s = (_bounded_key_sample(c, "c_custkey", 4, 3750)
-         .select("c_custkey", "c_nationkey", "c_name")
-         .localCheckpoint(eager=False))
+         .select("c_custkey", "c_nationkey", "c_name"))
     ta = s.select(F.col("c_custkey").alias("l"),
                   F.col("c_nationkey").alias("nk"),
                   F.col("c_name").alias("ln"))
@@ -2951,7 +2942,7 @@ def q_linkage_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("c_name").alias("rn"))
     truth = (ta.join(tb, "nk").where(F.col("l") < F.col("r"))
              .where(F.levenshtein("ln", "rn", 2) >= 0)
-             .select("l", "r").localCheckpoint(eager=False))
+             .select("l", "r"))
     segs = s.select(F.col("c_custkey").alias("k"),
                     F.col("c_nationkey").alias("nk"),
                     F.explode(_deletion_neighborhood(
@@ -2960,7 +2951,7 @@ def q_linkage_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = segs.select(F.col("k").alias("r"), "nk", "seg")
     cand = (ca.join(cb, ["nk", "seg"])
             .where(F.col("l") < F.col("r"))
-            .select("l", "r").distinct().localCheckpoint(eager=False))
+            .select("l", "r").distinct())
     np_ = (s.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("c"))
            .agg(F.sum(F.expr("c * (c - 1) DIV 2")).cast("long")
                 .alias("n_nation_pairs")))
@@ -3092,8 +3083,7 @@ def q_recs_association_rules(spark: SparkSession,
     li = Catalog(spark, sf_dir).table("lineitem")
     basket = (li.select(F.col("l_orderkey").alias("ok"),
                         F.col("l_partkey").alias("item"))
-              .distinct()
-              .localCheckpoint(eager=False))  # feeds pairs + supports
+              .distinct())
     supp = basket.groupBy("item").agg(F.count(F.lit(1)).alias("s"))
     n = basket.agg(F.countDistinct("ok").alias("n_baskets"))
     a = basket.select("ok", F.col("item").alias("ante"))

@@ -120,11 +120,8 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
     ranks are dense and deterministic. No window with an empty
     partition spec anywhere — the candidate list is metadata-scale.
     """
-    # 50-row TakeOrdered result self-joined for ranks: materialize it
-    # once (lazy localCheckpoint) instead of re-running the corpus
-    # ranking per side
-    top = df.orderBy(F.desc(score_col), "doc_id").limit(N_CAND) \
-        .localCheckpoint(eager=False)
+    # 50-row TakeOrdered result self-joined for ranks
+    top = df.orderBy(F.desc(score_col), "doc_id").limit(N_CAND)
     a, b = top.alias("a"), top.alias("b")
     sa, sb = F.col(f"a.{score_col}"), F.col(f"b.{score_col}")
     better = (sb > sa) | ((sb == sa) & (F.col("b.doc_id") < F.col("a.doc_id")))
@@ -245,8 +242,7 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def positions(df: DataFrame, order_col: str) -> DataFrame:
         """Top-NDCG_K rows of df with 1-based position, by
         (order_col desc, doc_id) — bounded self-join, no window."""
-        top = df.orderBy(F.desc(order_col), "doc_id").limit(NDCG_K) \
-            .localCheckpoint(eager=False)
+        top = df.orderBy(F.desc(order_col), "doc_id").limit(NDCG_K)
         a, b = top.alias("a"), top.alias("b")
         oa, ob = F.col(f"a.{order_col}"), F.col(f"b.{order_col}")
         better = ((ob > oa)
@@ -345,10 +341,9 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.col("vec_id").alias("id"), "v",
                    F.round(dot("v", "pv") / (nrm("v") * nrm("pv")), 6)
                    .alias("rel")))
-    # pool reused by the sim matrix (both sides) and the rel collect:
-    # one corpus ranking pass
+    # the pool feeds two collects (pool + sim matrix)
     cand = rel.orderBy(F.desc("rel"), "id").limit(MMR_POOL) \
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # keep: multi-action
     a, b = cand.alias("a"), cand.alias("b")
     sims = (a.join(F.broadcast(b), F.col("a.id") != F.col("b.id"))
             .select(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"),
@@ -700,7 +695,7 @@ def q_retrieval_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
            .where(F.col("v_rank") <= RBO_DEPTH))
 
     both = (kw.join(vec, "doc_id")
-            .select("k_rank", "v_rank").localCheckpoint(eager=False))
+            .select("k_rank", "v_rank"))
     depths = spark.range(1, RBO_DEPTH + 1).select(
         F.col("id").cast("int").alias("d"))
     ov = (depths.join(
@@ -765,8 +760,7 @@ def q_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
         lambda a, b: F.concat_ws(" ", a, b))
     bg = (tok.where(n >= 2)
-          .select("doc_id", F.posexplode(bg_arr).alias("pos", "bigram"))
-          .localCheckpoint(eager=False))
+          .select("doc_id", F.posexplode(bg_arr).alias("pos", "bigram")))
     top = (bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))
            .orderBy(F.desc("c"), "bigram").limit(1).select("bigram"))
     return (bg.join(F.broadcast(top), "bigram")

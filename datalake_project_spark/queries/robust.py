@@ -871,8 +871,7 @@ def q_corpus_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
     cnt = (d.select("source", F.explode(toks).alias("word"))
-           .groupBy("source", "word").agg(F.count(F.lit(1)).alias("c"))
-           .localCheckpoint(eager=False))
+           .groupBy("source", "word").agg(F.count(F.lit(1)).alias("c")))
     top = (cnt.groupBy("word").agg(F.sum("c").alias("g"))
            .orderBy(F.desc("g"), "word").limit(500).select("word"))
     st = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("t"))

@@ -491,7 +491,8 @@ def q_embed_farthest_point_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.vectors import cosine
     K = 4
     e = (Catalog(spark, sf_dir).table("embeddings")
-         .select("vec_id", "embedding").localCheckpoint(eager=False))
+         .select("vec_id", "embedding")
+         .localCheckpoint(eager=False))  # keep: multi-action (collect loop)
     seed = e.orderBy("vec_id").limit(1).select("vec_id").collect()[0][0]
     chosen: list[tuple[int, int, float]] = [(1, int(seed), None)]
 
@@ -799,7 +800,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Catalog(spark, sf_dir).table("embeddings")
     codes = _portable_band_codes(
-        spark, _portable_bits(spark, e)).localCheckpoint(eager=False)
+        spark, _portable_bits(spark, e))
     qc = (codes.where(F.col("vec_id") < 10)
           .select(F.col("vec_id").alias("query_id"), "band", "code"))
     cc = codes.select(F.col("vec_id").alias("neighbor_id"), "band", "code")
@@ -878,7 +879,7 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = Catalog(spark, sf_dir).table("embeddings")
-    bits = _portable_bits(spark, e).localCheckpoint(eager=False)
+    bits = _portable_bits(spark, e)
     cells = _portable_band_codes(spark, bits) \
         .where(F.col("band") == 0) \
         .select("vec_id", F.col("code").alias("cell"))
@@ -992,7 +993,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Catalog(spark, sf_dir).table("embeddings")
     codes = _portable_band_codes(
-        spark, _portable_bits(spark, e)).localCheckpoint(eager=False)
+        spark, _portable_bits(spark, e))
     qc = (codes.where(F.col("vec_id") < 10)
           .select(F.col("vec_id").alias("query_id"), "band",
                   F.col("code").alias("qcode")))
@@ -1003,13 +1004,11 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = codes.select(F.col("vec_id").alias("neighbor_id"), "band", "code")
     cand_multi = (probes.join(cc, ["band", "code"])
                   .where(F.col("query_id") != F.col("neighbor_id"))
-                  .select("query_id", "neighbor_id").distinct()
-                  .localCheckpoint(eager=False))
+                  .select("query_id", "neighbor_id").distinct())
     cand_single = (qc.withColumnRenamed("qcode", "code")
                    .join(cc, ["band", "code"])
                    .where(F.col("query_id") != F.col("neighbor_id"))
-                   .select("query_id", "neighbor_id").distinct()
-                   .localCheckpoint(eager=False))
+                   .select("query_id", "neighbor_id").distinct())
     qv = (e.where(F.col("vec_id") < 10)
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("_qv")))
@@ -1022,8 +1021,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cs", cosine(F.col("_qv"), F.col("_cv")))
             .withColumn("rnk", F.row_number().over(w))
             .where(F.col("rnk") <= 5)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=False))
+            .select("query_id", "neighbor_id"))
 
     def counts(df, name):
         return df.groupBy("query_id").agg(
@@ -1095,8 +1093,7 @@ def q_ann_ivf_occupancy_audit(spark: SparkSession,
     cells = (_portable_band_codes(spark, _portable_bits(spark, e))
              .where(F.col("band") == 0)
              .select("vec_id", F.col("code").alias("cell")))
-    occ = (cells.groupBy("cell").agg(F.count(F.lit(1)).alias("sz"))
-           .localCheckpoint(eager=False))  # <=16 rows, feeds both aggs
+    occ = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("sz"))
     totals = occ.agg(
         F.count(F.lit(1)).cast("long").alias("n_cells_occupied"),
         F.sum("sz").cast("long").alias("n_vectors"),
@@ -1199,7 +1196,7 @@ def q_ann_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.vectors import cosine
 
     e = Catalog(spark, sf_dir).table("embeddings")
-    bits = _portable_bits(spark, e).localCheckpoint(eager=False)
+    bits = _portable_bits(spark, e)
     cells = (_portable_band_codes(spark, bits)
              .where(F.col("band") == 0)
              .select(F.col("vec_id").alias("neighbor_id"),
@@ -1221,8 +1218,7 @@ def q_ann_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("rnk") <= F.col("n_probe"))
             .join(cells, "cell")
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("n_probe", "query_id", "neighbor_id").distinct()
-            .localCheckpoint(eager=False))
+            .select("n_probe", "query_id", "neighbor_id").distinct())
     qv = (e.where(F.col("vec_id") < 10)
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("_qv")))

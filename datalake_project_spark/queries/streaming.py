@@ -711,6 +711,7 @@ def q_stream_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.catalog import Catalog
+    from pyspark.sql.window import Window
 
     cur_stream = (events_stream(spark, sf_dir)
                   .where(F.col("value").isNotNull()
@@ -732,18 +733,24 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                              .cast("int")).alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n"))
             .withColumn("win", F.lit("base")))
-    # tiny (types x buckets x 2) table, consumed twice (spine + join):
-    # break the shared lineage so the self-referencing join resolves
-    counts = cur.unionByName(base).localCheckpoint(eager=False)
-    spine = (counts.select("event_type", "win").distinct()
-             .crossJoin(F.broadcast(
-                 spark.range(10).select(F.col("id").cast("int")
-                                        .alias("bucket")))))
-    full = (spine.join(counts, ["event_type", "win", "bucket"], "left")
+    # tiny (types x buckets x 2) table. The memory-sink scan under
+    # ``cur`` cannot appear on both sides of a join (the analyzer cannot
+    # re-instance it), so the zero-filled bucket spine reads ONE
+    # (type, win) -> {bucket: n} map and the per-window totals are a
+    # window sum instead of a join back.
+    counts = (cur.unionByName(base)
+              .groupBy("event_type", "win")
+              .agg(F.map_from_entries(F.collect_list(F.struct("bucket", "n")))
+                   .alias("m")))
+    full = (counts.crossJoin(F.broadcast(
+                spark.range(10).select(F.col("id").cast("int")
+                                       .alias("bucket"))))
             .select("event_type", "win", "bucket",
-                    F.coalesce("n", F.lit(0)).alias("n")))
-    tot = full.groupBy("event_type", "win").agg(F.sum("n").alias("nt"))
-    sm = (full.join(F.broadcast(tot), ["event_type", "win"])
+                    F.coalesce(F.col("m")[F.col("bucket")], F.lit(0))
+                    .alias("n")))
+    sm = (full
+          .withColumn("nt", F.sum("n").over(
+              Window.partitionBy("event_type", "win")))
           .withColumn("p", (F.col("n") + 0.5) / (F.col("nt") + 5.0))
           .groupBy("event_type", "bucket")
           .agg(F.max(F.when(F.col("win") == "base", F.col("p"))).alias("pb"),

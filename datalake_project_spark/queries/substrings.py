@@ -115,8 +115,8 @@ def q_dedup_substring_spans_hashed(spark: SparkSession, sf_dir: str) -> DataFram
     sp = d.select(
         "doc_id", F.explode(T.span_list(T.tokens("text"), SPAN_N)).alias("span"))
     # the hashed span stream feeds the survivor index AND the re-verify
-    # aggregate: lazy localCheckpoint tokenizes the corpus once
-    h = sp.withColumn("h", F.xxhash64("span")).localCheckpoint(eager=False)
+    # aggregate
+    h = sp.withColumn("h", F.xxhash64("span"))
     survivors = (h.groupBy("h")
                  .agg(F.count_distinct("doc_id").alias("nd"))
                  .where(F.col("nd") >= 2)
@@ -250,11 +250,9 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.operators.dedup import winnow_fingerprint_rows
 
     d = Catalog(spark, sf_dir).table("documents")
-    # fingerprints feed both sides of the pair join: materialize the
-    # winnowing pipeline once (lazy localCheckpoint, the inverted-index
-    # discipline of operators/dedup.py)
+    # fingerprints feed both sides of the pair join
     fps = winnow_fingerprint_rows(d, k=WINNOW_K, w=WINNOW_W) \
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # keep: measured
     a, b = fps.alias("a"), fps.alias("b")
     return (
         a.join(b, (F.col("a.fp") == F.col("b.fp"))
@@ -935,9 +933,9 @@ def q_text_interpolated_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", T.tokens("text").alias("ws"))
     uni = tok.select(F.explode("ws").alias("w"))
     # vocab-sized count table consumed three ways (both join sides +
-    # the token total): lazy localCheckpoint, corpus aggregated once
+    # the token total)
     c1 = uni.groupBy(F.col("w").alias("w1")) \
-        .agg(F.count(F.lit(1)).alias("c1")).localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("c1"))
     # token total = sum of unigram counts — derived from c1, not a
     # second corpus pass
     nt = c1.agg(F.sum("c1").cast("double").alias("n"))
@@ -946,8 +944,7 @@ def q_text_interpolated_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
         lambda a, b: F.concat_ws(" ", a, b))
     bg = (tok.where(n >= 2)
-          .select("doc_id", F.explode(bg_arr).alias("bg"))
-          .localCheckpoint(eager=False))
+          .select("doc_id", F.explode(bg_arr).alias("bg")))
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     ca = c1.select(F.col("w1").alias("wa"), F.col("c1").alias("ca"))
     cb = c1.select(F.col("w1").alias("wb"), F.col("c1").alias("cb"))
@@ -1068,11 +1065,9 @@ def q_dedup_winnow_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = Catalog(spark, sf_dir).table("documents")
-    # fingerprints feed both sides of the pair join: materialize the
-    # winnowing pipeline once (lazy localCheckpoint, the inverted-index
-    # discipline of operators/dedup.py)
+    # fingerprints feed both sides of the pair join
     fps = winnow_fingerprint_rows(d, k=WINNOW_K, w=WINNOW_W) \
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # keep: measured
     a, b = fps.alias("a"), fps.alias("b")
     pairs = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
                     & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1138,15 +1133,14 @@ def q_text_worst_window_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", T.tokens("text").alias("ws"))
     uni = tok.select(F.explode("ws").alias("w"))
     c1 = uni.groupBy(F.col("w").alias("w1")) \
-        .agg(F.count(F.lit(1)).alias("c1")).localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("c1"))
     v = c1.agg(F.count(F.lit(1)).alias("vocab"))  # rows of c1 == vocab
     n = F.size("ws")
     bg_arr = F.zip_with(
         F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
         lambda a, b: F.concat_ws(" ", a, b))
     bg = (tok.where(n >= 2)
-          .select("doc_id", F.posexplode(bg_arr).alias("pos", "bg"))
-          .localCheckpoint(eager=False))
+          .select("doc_id", F.posexplode(bg_arr).alias("pos", "bg")))
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     lp = (bg
           .join(F.broadcast(c2), "bg")
@@ -1221,8 +1215,7 @@ def q_text_lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2 = (tok.where(n >= 2)
           .select(F.explode(bg_arr).alias("p"))
           .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-          .agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+          .agg(F.count(F.lit(1)).alias("c")))
 
     cur = c1.orderBy(F.desc("c"), "w").limit(1).select("w")
     out = cur.select(F.lit(0).alias("step"), F.col("w").alias("token"))
@@ -1324,14 +1317,14 @@ def _unigram_words_occ(spark: SparkSession, sf_dir: str):
     (word, start, len, piece) candidate edge position for pieces of
     length 1-3 — the lattice every unigram-LM query builds on.
 
-    ``words`` is lazily checkpointed: every lattice query touches the
-    corpus exactly once (the token-count pass); the piece-count
-    aggregate and the DP pass both reuse the one materialization."""
+    ``words`` is checkpointed because every caller reads it from two
+    actions — the collect of the piece model and the DP pass —
+    so the corpus token-count pass runs once per query."""
     d = Catalog(spark, sf_dir).table("documents")
     toks = d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
     words = (toks.where(F.length("w").between(1, _MAXL))
              .groupBy("w").agg(F.count(F.lit(1)).alias("f"))
-             .localCheckpoint(eager=False))
+             .localCheckpoint(eager=False))  # keep: multi-action
     occ = (words
            .select("w", "f",
                    F.explode(F.sequence(F.lit(0), F.length("w") - 1))
@@ -1720,7 +1713,7 @@ def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read it — without the pin the mapInPandas pass would run twice.
     passa = (words.mapInPandas(_lattice_kernel(lp0, "em"), _EM_SCHEMA)
              .groupBy("piece").agg(F.sum("wt").alias("c"))
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=True))  # keep: multi-action
     # M-step: renormalize expected counts into the new piece model
     # (bounded collect — same ≤48k-entry argument as _unigram_lp_map).
     ec_rows = [r for r in passa.collect() if r["piece"] != ""]

@@ -507,11 +507,9 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    # vocab is self-joined for ranks: materialize the corpus explode
-    # once (vocab-sized payload, lazy localCheckpoint)
+    # vocab is self-joined for ranks
     vocab = (d.select(F.explode(T.tokens("text")).alias("term"))
-             .groupBy("term").agg(F.count(F.lit(1)).alias("freq"))
-             .localCheckpoint(eager=False))
+             .groupBy("term").agg(F.count(F.lit(1)).alias("freq")))
     a, b = vocab.alias("a"), vocab.alias("b")
     better = (F.col("b.freq") > F.col("a.freq")) | \
         ((F.col("b.freq") == F.col("a.freq"))
@@ -739,15 +737,11 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg_arr = F.zip_with(
         F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
         lambda a, b: F.concat_ws(" ", a, b))
-    # the pair-count table feeds FOUR branches (marginals, total, main);
-    # a lazy localCheckpoint materializes the corpus explode ONCE and
-    # the vocab-sized table is what every branch re-reads (the LSH
-    # discipline — without it Catalyst re-runs the corpus pass per
-    # branch)
+    # the pair-count table feeds FOUR branches (marginals, total, main)
     pc = (tok.where(n >= 2)
           .select(F.explode(bg_arr).alias("b"))
           .groupBy("b").agg(F.count(F.lit(1)).alias("n12"))
-          .localCheckpoint(eager=False))
+          .localCheckpoint(eager=False))  # keep: measured
     m1 = (pc.groupBy(F.split("b", " ")[0].alias("w1"))
           .agg(F.sum("n12").cast("long").alias("n1")))
     m2 = (pc.groupBy(F.split("b", " ")[1].alias("w2"))
@@ -815,8 +809,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     vocab = (d.select(F.explode(T.tokens("text")).alias("term"))
-             .groupBy("term").agg(F.count(F.lit(1)).alias("freq"))
-             .localCheckpoint(eager=False))
+             .groupBy("term").agg(F.count(F.lit(1)).alias("freq")))
     tot = vocab.agg(F.sum("freq").cast("long").alias("n"))
     a, b = vocab.alias("a"), vocab.alias("b")
     better = (F.col("b.freq") > F.col("a.freq")) | \
@@ -824,8 +817,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
          & (F.col("b.term") < F.col("a.term")))
     ranked = (a.join(b, better, "left")
               .groupBy(F.col("a.term"), F.col("a.freq"))
-              .agg((F.count(F.col("b.term")) + 1).alias("rk"))
-              .localCheckpoint(eager=False))
+              .agg((F.count(F.col("b.term")) + 1).alias("rk")))
     ra = ranked.alias("ra")
     rb = ranked.select(F.col("rk").alias("rk_b"), F.col("freq").alias("f_b"))
     # vocab-sized non-equi self-join: broadcast one side so the plan is
@@ -886,8 +878,7 @@ OOV_VOCAB_K = 500  # fixed vocabulary size for the OOV audit
 )
 def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    inst = (d.select("lang", F.explode(T.tokens("text")).alias("t"))
-            .localCheckpoint(eager=False))  # feeds vocab AND the audit
+    inst = d.select("lang", F.explode(T.tokens("text")).alias("t"))
     vocab = inst.groupBy(F.col("t").alias("term")) \
         .agg(F.count(F.lit(1)).alias("freq"))
     a, b = vocab.alias("a"), vocab.alias("b")
@@ -1041,8 +1032,7 @@ def q_text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
                .alias("term")))
     tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     coc = (tf.groupBy(F.col("c").alias("r"))
-           .agg(F.count(F.lit(1)).alias("nr"))
-           .localCheckpoint(eager=False))
+           .agg(F.count(F.lit(1)).alias("nr")))
     n_ = tf.agg(F.sum("c").alias("n"))
     p0 = (coc.where(F.col("r") == 1)
           .crossJoin(F.broadcast(n_))
@@ -1122,7 +1112,7 @@ def q_text_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
               "i -> struct(ws[i] AS x, ws[i+1] AS y))")).alias("b"))
           .select("b.x", "b.y"))
     cxy = (bi.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c"))
-           .localCheckpoint(eager=False))
+           .localCheckpoint(eager=False))  # keep: measured
     cx = cxy.groupBy("x").agg(F.sum("c").alias("cx"))
     cy = cxy.groupBy("y").agg(F.sum("c").alias("cy"))
     n_ = cxy.agg(F.sum("c").alias("n"),
@@ -1270,8 +1260,7 @@ def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select((F.col("doc_id") % 10).alias("bucket"),
                     F.explode(T.tokens("text")).alias("term"))
     firstb = toks.groupBy("term").agg(F.min("bucket").alias("fb"))
-    tokb = (toks.groupBy("bucket").agg(F.count(F.lit(1)).alias("toks_in"))
-            .localCheckpoint(eager=False))
+    tokb = toks.groupBy("bucket").agg(F.count(F.lit(1)).alias("toks_in"))
     newb = firstb.groupBy(F.col("fb").alias("bucket")) \
                  .agg(F.count(F.lit(1)).alias("new_terms"))
     t2 = tokb.select(F.col("bucket").alias("b2"),
@@ -1436,8 +1425,7 @@ def q_text_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                "transform(sequence(0, size(ws) - 3), "
                "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
                .alias("term")))
-    tf = (tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     n_ = tf.agg(F.sum("c").alias("n"), F.count(F.lit(1)).alias("v"))
 
     def headsum(k: int):
@@ -1603,8 +1591,7 @@ def q_text_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = (Catalog(spark, sf_dir).table("documents")
          .where(F.col("doc_id") < 20)
-         .select("doc_id", tokens("text").alias("ws"))
-         .localCheckpoint(eager=False))  # feeds uni/big/lens
+         .select("doc_id", tokens("text").alias("ws")))
     uni = (d.select("doc_id", F.explode("ws").alias("t"))
            .groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf")))
     big = (d.select("doc_id", F.explode(span_list(F.col("ws"), 2))
@@ -1710,8 +1697,7 @@ def q_text_cross_entropy_matrix(spark: SparkSession,
                    .alias("g"))
           .select("source", F.split("g", " ").getItem(0).alias("u"), "g")
           .groupBy("source", "u", "g")
-          .agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint(eager=False))  # feeds eval + model + fromc
+          .agg(F.count(F.lit(1)).alias("tf")))
     fromc = bg.groupBy("source", "u").agg(F.sum("tf").alias("cu"))
     models = bg.select(F.col("source").alias("m")).distinct()
     mb = bg.select(F.col("source").alias("m_b"),

@@ -84,17 +84,6 @@ def dir_bytes(path: str) -> int:
     return total
 
 
-def apply_shuffle_sizing(spark, *paths: str,
-                         expansion: float = 1.0, **kwargs) -> int:
-    """Set ``spark.sql.shuffle.partitions`` from the combined footprint
-    of ``paths`` (scaled by ``expansion`` for decompression growth).
-    Returns the value applied."""
-    total = int(sum(dir_bytes(p) for p in paths) * expansion)
-    n = suggest_shuffle_partitions(total, **kwargs)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
-
-
 def _parse_size_bytes(v: str) -> int:
     """'134217728' / '128m' / '128MB' -> bytes (Spark conf size forms)."""
     s = v.strip().lower().removesuffix("b")
@@ -222,13 +211,12 @@ def suggest_for_stage(spark, *paths: str, expansion: float = 1.0,
     """Per-STAGE partition count for one heavy exchange, derived from the
     on-disk footprint of the inputs that stage fans out from.
 
-    Unlike ``apply_shuffle_sizing`` this mutates nothing: the caller
-    hands the number to a keyed ``repartition`` in front of its widest
-    exchange, so one query's working set cannot depend on whatever the
-    session default happens to be (the r6 scale ladder measured
-    q_graph_kcore spilling 6.7 GB at 10x and 20.4 GB at 30x purely
-    because the wedge-dedup hash tables were squeezed into 32 static
-    partitions). ``expansion`` is the measured working-set/input ratio
+    This mutates nothing: the caller hands the number to a keyed
+    ``repartition`` in front of its widest exchange, so one query's
+    working set cannot depend on whatever the session default happens
+    to be (the r6 scale ladder measured q_graph_kcore spilling 6.7 GB
+    at 10x and 20.4 GB at 30x purely because the wedge-dedup hash
+    tables were squeezed into 32 static partitions). ``expansion`` is the measured working-set/input ratio
     of the stage (a wedge join or pair explosion makes it >> 1); the
     cores floor keeps small fixtures fully parallel (one task wave —
     see the r13 floor note on suggest_shuffle_partitions)."""

@@ -162,3 +162,27 @@ def test_lake_write_does_not_mutate_session_conf(spark, tmp_path):
         assert lake.read_usage("t").count() == 10
     finally:
         spark.conf.unset(key)
+
+
+def test_run_pipeline_on_static_session_keeps_earlier_partitions(spark, lake):
+    """Three accounts written from a thread pool on a session left at
+    STATIC overwrite: the conf stays STATIC, and each run replaces only
+    its own (ingest_date, run_ts) partition of every account table."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        accounts = ["a1", "a2", "a3"]
+        for ts, users in (("1000", ["alice", "bob"]),
+                          ("1100", ["bob", "carol", "dora"])):
+            run_pipeline(spark, lake,
+                         {a: _payload(users) for a in accounts},
+                         _lookup_df(spark), "20250301", ts)
+            assert spark.conf.get(key).lower() == "static"
+        for a in accounts:
+            usage = lake.read_usage(f"apify_instagram_data_{a}", "20250301")
+            got = {(str(r["run_ts"]), r["n"]) for r in
+                   usage.groupBy("run_ts").agg(F.count(F.lit(1)).alias("n"))
+                   .collect()}
+            assert got == {("1000", 2), ("1100", 3)}, a
+    finally:
+        spark.conf.unset(key)

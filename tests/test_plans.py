@@ -194,15 +194,43 @@ def test_lm_queries_construct_without_eager_jobs(spark, registry):
     task) fails."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for name in ("q_text_bigram_lm", "q_text_dsir_weights",
-                 "q_text_source_divergence", "q_snapshot_scd2",
-                 "q_text_boilerplate", "q_text_tfidf_top_terms",
-                 "q22_idle_customers", "q15_top_supplier",
-                 "q_null_semantics", "q_events_gapfill",
-                 "q_text_length_ks_drift", "q_text_heavy_hitters",
-                 "q_skew_key_diagnostics", "q_stats_correlation",
-                 "q_graph_pagerank", "q_winsorize",
-                 "q_corpus_quota_allocation"):
+    # every query whose build holds no localCheckpoint and no eager action
+    declarative = (
+        "q_text_bigram_lm", "q_text_dsir_weights", "q_text_source_divergence",
+        "q_snapshot_scd2", "q_text_boilerplate", "q_text_tfidf_top_terms",
+        "q22_idle_customers", "q15_top_supplier", "q_null_semantics",
+        "q_events_gapfill", "q_text_length_ks_drift", "q_text_heavy_hitters",
+        "q_skew_key_diagnostics", "q_stats_correlation", "q_graph_pagerank",
+        "q_winsorize", "q_corpus_quota_allocation",
+        "q_ann_ivf_occupancy_audit", "q_ann_ivf_portable",
+        "q_ann_lsh_multiprobe", "q_ann_lsh_portable", "q_ann_recall_vs_probes",
+        "q_basket_pairs", "q_basket_rules", "q_bitmap_distinct_users",
+        "q_classifier_f1_sweep", "q_corpus_jsd_matrix",
+        "q_corpus_overlap_matrix", "q_corpus_quota_sample",
+        "q_dedup_bag_jaccard", "q_dedup_containment",
+        "q_dedup_idf_weighted_jaccard", "q_dedup_ngram_jaccard_capped",
+        "q_dedup_substring_spans_hashed", "q_events_cross_correlation",
+        "q_events_markov_entropy_rate", "q_events_periodogram",
+        "q_events_session_gap_sweep", "q_events_surprisal_outliers",
+        "q_feature_woe_iv", "q_graph_adamic_adar", "q_graph_assortativity",
+        "q_graph_label_propagation", "q_graph_local_clustering",
+        "q_graph_neighbor_jaccard", "q_graph_shortest_cost",
+        "q_hll_mergeable_distinct", "q_hybrid_retrieval_rrf",
+        "q_linkage_blocking_recall", "q_linkage_fellegi_sunter",
+        "q_linkage_qgram_filter", "q_linkage_sorted_neighborhood",
+        "q_recs_association_rules", "q_recs_item_knn", "q_retrieval_ndcg",
+        "q_retrieval_rbo", "q_search_phrase", "q_shard_rendezvous",
+        "q_sketch_bloom_fpr", "q_sketch_quantile_histogram",
+        "q_split_ngram_leakage", "q_stats_cramers_v", "q_stats_eb_shrinkage",
+        "q_stats_fisher_exact", "q_stats_g_test", "q_stats_icc",
+        "q_stats_kendall_tau", "q_stats_mann_kendall", "q_stats_theil_index",
+        "q_stats_wilcoxon_signed_rank",
+        "q_text_cross_entropy_matrix", "q_text_good_turing",
+        "q_text_head_coverage", "q_text_heaps_law", "q_text_interpolated_lm",
+        "q_text_lm_greedy_decode", "q_text_oov_rate", "q_text_self_bleu",
+        "q_text_vocab_coverage", "q_text_worst_window_lm", "q_text_zipf_fit",
+    )
+    for name in declarative:
         group = f"construct_{name}"
         sc.setJobGroup(group, "no-eager-construction probe")
         try:

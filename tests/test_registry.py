@@ -132,3 +132,26 @@ def test_sql_entrypoint_equals_dataframe_query(spark):
     via_df = (load_all()["q1_pricing_summary"].fn(spark, SF_SMOKE)
               .select("l_returnflag", "l_linestatus", "count_order"))
     assert rows(via_sql) == rows(via_df)
+
+
+def test_every_local_checkpoint_names_its_keep_category():
+    """Materialization rule: a ``localCheckpoint(`` call in the engine
+    must carry ``# keep: <category>`` on its own line or the line before
+    it, naming one of the four reasons a cut point is placed by hand.
+    Every other shared subtree is left to ReuseExchange / AQE stage
+    reuse."""
+    import pathlib
+    import re
+
+    tag = re.compile(r"#\s*keep:\s*(overwrite-source|nondeterministic"
+                     r"|multi-action|measured)\b")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "datalake_project_spark"
+    untagged = []
+    for path in sorted(pkg.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "localCheckpoint(" not in line:
+                continue
+            if not (tag.search(line) or (i and tag.search(lines[i - 1]))):
+                untagged.append(f"{path.relative_to(pkg.parent)}:{i + 1}")
+    assert not untagged, f"localCheckpoint without a keep tag: {untagged}"

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from datalake_project_spark.tuning import (
     DEFAULT_TARGET_PARTITION_BYTES, MAX_PARTITIONS, MIN_PARTITIONS,
-    apply_shuffle_sizing, dir_bytes, suggest_shuffle_partitions,
+    dir_bytes, suggest_shuffle_partitions,
 )
 
 GB = 1024 ** 3
@@ -42,24 +42,6 @@ def test_custom_target():
         1 * GB, target_partition_bytes=64 * 1024 * 1024) == 16
 
 
-def test_apply_from_real_footprint(spark, tmp_path):
-    f = tmp_path / "blob.bin"
-    f.write_bytes(b"x" * (2 * 1024 * 1024))
-    assert dir_bytes(str(tmp_path)) == 2 * 1024 * 1024
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = apply_shuffle_sizing(spark, str(tmp_path))
-        assert n == MIN_PARTITIONS  # 2 MiB -> floor
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-        # expansion factor grows the estimate
-        big = apply_shuffle_sizing(
-            spark, str(tmp_path),
-            expansion=1024.0, target_partition_bytes=128 * 1024 * 1024)
-        assert big == MIN_PARTITIONS * 2  # 2 GiB / 128 MiB = 16
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
 def test_observation_collects_inflight_metrics(spark):
     """df.observe: named metrics computed DURING a job (no second scan)
     — the production pattern for row-count/quality counters on a
@@ -86,12 +68,13 @@ def test_observation_collects_inflight_metrics(spark):
 def test_suggest_for_stage_floors_at_cores_and_scales(spark, tmp_path):
     """suggest_for_stage = per-stage repartition width: footprint x
     expansion / 128 MiB, with a density-capped cores floor (never
-    below ~4 MiB per task), and it must NOT mutate the session conf
-    (unlike apply_shuffle_sizing)."""
+    below ~4 MiB per task), and it must NOT mutate the session conf."""
     from datalake_project_spark.tuning import suggest_for_stage
 
     f = tmp_path / "blob.bin"
     f.write_bytes(b"x" * (4 * 1024 * 1024))
+    # a directory's footprint is the sum of its files
+    assert dir_bytes(str(tmp_path)) == 4 * 1024 * 1024
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     cores = spark.sparkContext.defaultParallelism
     # 4 MiB input: density cap pins the floor at 1 -> MIN_PARTITIONS
