@@ -37,13 +37,16 @@ def dedup_exact(df: DataFrame, keys: list[str], order_by: list[Column] | None = 
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
-def _scan_fan_out(docs: DataFrame) -> int | None:
-    """Width to spread a CPU-heavy per-row pass when the source scan
-    has fewer splits than the cluster has cores — see
-    ``tuning.scan_fan_out_width`` (guide §2.5 input skew; None at
-    production scan widths, so no extra exchange is ever introduced)."""
-    from datalake_project_spark.tuning import scan_fan_out_width
-    return scan_fan_out_width(docs)
+def _id_text(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, _text) of ``docs``, hash-spread on _id when the scan is a
+    single split (``tuning.fan_out_scan``, a no-op at production scan
+    widths), so the CPU-heavy per-row pass after it runs on every core.
+    The projection stays above the exchange; the id hash is
+    deterministic, so retries are safe."""
+    from datalake_project_spark.tuning import fan_out_scan
+
+    return fan_out_scan(docs.select(F.col(id_col).alias("_id"),
+                                    F.col(text_col).alias("_text")), "_id")
 
 
 def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -54,14 +57,7 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     evaluated the tokenizer twice; empty arrays vanish at the explode
     every consumer performs, and consumers that count documents count
     distinct ids on the exploded index instead)."""
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    w = _scan_fan_out(docs)
-    if w is not None:
-        # spread the tokenize+shingle pass across the cluster BEFORE the
-        # expensive expressions run (projection stays above the exchange;
-        # the id hash is deterministic, so retries are safe)
-        base = base.repartition(w, "_id")
+    base = _id_text(docs, id_col, text_col)
     sh = shingles(tokens(F.col("_text")), n=n)
     return base.select("_id", sh.alias("_shingles"))
 
@@ -198,13 +194,8 @@ def winnow_fingerprint_rows(docs: DataFrame, id_col: str = "doc_id",
         char_fold_hash, span_list, tokens,
     )
 
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    fan = _scan_fan_out(docs)
-    if fan is not None:
-        # single-split fixture scan: spread the span+hash pass (r12
-        # profile: a 2.8 s single-task stage; see _scan_fan_out)
-        base = base.repartition(fan, "_id")
+    # r12 profile without the fan-out: a 2.8 s single-task stage
+    base = _id_text(docs, id_col, text_col)
     spans = base.select(
         "_id",
         F.posexplode(span_list(tokens(F.col("_text")), k))
@@ -414,13 +405,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     # distinct tokens, hash each once, and take the 64 per-bit sums as
     # groupBy aggregates (one shuffle, map-side partials, small codegen
     # expressions) instead of 64 array folds per row.
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    w = _scan_fan_out(docs)
-    if w is not None:
-        # single-split fixture scan: spread the tokenize pass (see
-        # _scan_fan_out — a no-op at production scan widths)
-        base = base.repartition(w, "_id")
+    base = _id_text(docs, id_col, text_col)
     inv = (base.select("_id",
                        F.explode(F.array_distinct(tokens(F.col("_text"))))
                        .alias("_t"))

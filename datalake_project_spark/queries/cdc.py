@@ -18,13 +18,74 @@ from datalake_project_spark.operators.diff import snapshot_diff
 from datalake_project_spark.queries import local_df, register
 
 
+def _in_year(year: int):
+    """o_orderdate falls in calendar ``year``."""
+    return ((F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
+
+
+def _price_rollup(o: DataFrame, year: int) -> DataFrame:
+    """(custkey, total_price) of one year's orders, price at 2 dp."""
+    return (o.where(_in_year(year))
+            .groupBy(F.col("o_custkey").alias("custkey"))
+            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
+
+
+# t95 / t96: _price_rollup of 1995 and 1996.
+_PRICE_ROLLUPS_SQL = """
+    WITH t95 AS (SELECT o_custkey AS custkey,
+                        ROUND(SUM(o_totalprice), 2) AS total_price
+                 FROM orders
+                 WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+                   AND o_orderdate <  TIMESTAMP '1996-01-01'
+                 GROUP BY o_custkey),
+         t96 AS (SELECT o_custkey AS custkey,
+                        ROUND(SUM(o_totalprice), 2) AS total_price
+                 FROM orders
+                 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+                   AND o_orderdate <  TIMESTAMP '1997-01-01'
+                 GROUP BY o_custkey)"""
+
+
+# Distinct (yr, custkey) order-presence snapshots before 1999.
+_SNAPS_SQL = """
+    WITH snaps AS (
+        SELECT DISTINCT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
+               o_custkey AS custkey
+        FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01'),"""
+
+# Gaps-and-islands over snaps: a running ``island`` id per key that
+# steps at every non-consecutive year.
+_ISLANDS_SQL = """
+    flagged AS (
+        SELECT custkey, yr,
+               CASE WHEN LAG(yr) OVER w IS NULL
+                         OR LAG(yr) OVER w <> yr - 1 THEN 1 ELSE 0 END AS is_start
+        FROM snaps WINDOW w AS (PARTITION BY custkey ORDER BY yr)),
+    islands AS (
+        SELECT custkey, yr,
+               CAST(SUM(is_start) OVER (PARTITION BY custkey ORDER BY yr
+                                        ROWS UNBOUNDED PRECEDING)
+                    AS BIGINT) AS island
+        FROM flagged)"""
+
+
+def _islands(snaps: DataFrame) -> DataFrame:
+    """``_ISLANDS_SQL`` over (custkey, yr) rows: adds ``island``."""
+    w = Window.partitionBy("custkey").orderBy("yr")
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    flagged = snaps.withColumn(
+        "is_start",
+        F.when(F.lag("yr").over(w).isNull()
+               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
+    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
+    return islands
+
+
 def _active_custkeys(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
     return (
-        o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        )
+        o.where(_in_year(year))
         .select(F.col("o_custkey").alias("custkey"))
         .distinct()
     )
@@ -132,10 +193,7 @@ def q_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
     snap = (
-        o.where(
-            (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
+        o.where(_in_year(1995))
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
             F.count("*").alias("order_count"),
@@ -176,10 +234,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.lake import Lake
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice").repartition(4)
+    snap = o.where(_in_year(1997)).select("o_orderkey", "o_totalprice").repartition(4)
     from datalake_project_spark.scratch import scratch_dir
 
     lake = Lake(spark, scratch_dir("compact", sf_dir))
@@ -235,23 +290,8 @@ def q_snapshot_series_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_snapshot_scd2",
-    oracle="""
-    WITH snaps AS (
-        SELECT DISTINCT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
-               o_custkey AS custkey
-        FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01'),
-    last AS (SELECT MAX(yr) AS last_yr FROM snaps),
-    flagged AS (
-        SELECT custkey, yr,
-               CASE WHEN LAG(yr) OVER w IS NULL
-                         OR LAG(yr) OVER w <> yr - 1 THEN 1 ELSE 0 END AS is_start
-        FROM snaps WINDOW w AS (PARTITION BY custkey ORDER BY yr)),
-    islands AS (
-        SELECT custkey, yr,
-               CAST(SUM(is_start) OVER (PARTITION BY custkey ORDER BY yr
-                                        ROWS UNBOUNDED PRECEDING)
-                    AS BIGINT) AS island
-        FROM flagged)
+    oracle=_SNAPS_SQL + """
+    last AS (SELECT MAX(yr) AS last_yr FROM snaps),""" + _ISLANDS_SQL + """
     SELECT i.custkey, i.island,
            MIN(i.yr) AS valid_from,
            MAX(i.yr) AS valid_to,
@@ -269,8 +309,6 @@ def q_snapshot_series_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "MERGEs with a single windowed pass over the series.",
 )
 def q_snapshot_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     o = Catalog(spark, sf_dir).table("orders")
     snaps = (
         o.where(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
@@ -280,13 +318,7 @@ def q_snapshot_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest snapshot year as a broadcast 1-row aggregate — one DAG, no
     # driver-side action during construction
     last = snaps.agg(F.max("yr").alias("last_yr"))
-    w = Window.partitionBy("custkey").orderBy("yr")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = snaps.withColumn(
-        "is_start",
-        F.when(F.lag("yr").over(w).isNull()
-               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
-    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
+    islands = _islands(snaps)
     return (islands.groupBy("custkey", "island")
             .agg(F.min("yr").alias("valid_from"),
                  F.max("yr").alias("valid_to"))
@@ -379,13 +411,10 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate from the raw tables — sizing changes no values.",
 )
 def q_tuned_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.tuning import dir_bytes, suggest_shuffle_partitions
+    from datalake_project_spark.tuning import suggest_for_stage
 
-    li_path = f"{sf_dir.rstrip('/')}/lineitem.parquet"
-    o_path = f"{sf_dir.rstrip('/')}/orders.parquet"
-    n = suggest_shuffle_partitions(
-        dir_bytes(li_path) + dir_bytes(o_path),
-        cluster_cores=spark.sparkContext.defaultParallelism)
+    n = suggest_for_stage(spark, f"{sf_dir.rstrip('/')}/lineitem.parquet",
+                          f"{sf_dir.rstrip('/')}/orders.parquet")
     cat = Catalog(spark, sf_dir)
     li = cat.table("lineitem").repartition(n, "l_orderkey")
     o = cat.table("orders")
@@ -434,22 +463,7 @@ def q_skew_key_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_temporal_join",
-    oracle="""
-    WITH snaps AS (
-        SELECT DISTINCT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
-               o_custkey AS custkey
-        FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01'),
-    flagged AS (
-        SELECT custkey, yr,
-               CASE WHEN LAG(yr) OVER w IS NULL
-                         OR LAG(yr) OVER w <> yr - 1 THEN 1 ELSE 0 END AS is_start
-        FROM snaps WINDOW w AS (PARTITION BY custkey ORDER BY yr)),
-    islands AS (
-        SELECT custkey, yr,
-               CAST(SUM(is_start) OVER (PARTITION BY custkey ORDER BY yr
-                                        ROWS UNBOUNDED PRECEDING)
-                    AS BIGINT) AS island
-        FROM flagged),
+    oracle=_SNAPS_SQL + _ISLANDS_SQL + """,
     dim AS (
         SELECT custkey, MIN(yr) AS valid_from, MAX(yr) AS valid_to
         FROM islands GROUP BY custkey, island)
@@ -485,13 +499,7 @@ def q_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaps = (o.select(F.year("o_orderdate").alias("yr"),
                       F.col("o_custkey").alias("custkey"))
              .distinct())
-    w = Window.partitionBy("custkey").orderBy("yr")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = snaps.withColumn(
-        "is_start",
-        F.when(F.lag("yr").over(w).isNull()
-               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
-    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
+    islands = _islands(snaps)
     dim = (islands.groupBy("custkey", "island")
            .agg(F.min("yr").alias("valid_from"), F.max("yr").alias("valid_to"))
            .drop("island"))
@@ -534,10 +542,7 @@ def q_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice")
+    snap = o.where(_in_year(1997)).select("o_orderkey", "o_totalprice")
 
     lake = Lake(spark, scratch_dir("retention", sf_dir))
     runs = ["19970101T060000", "19970101T120000", "19970101T180000"]
@@ -624,10 +629,7 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice")
+    snap = o.where(_in_year(1997)).select("o_orderkey", "o_totalprice")
 
     lake = Lake(spark, scratch_dir("asof", sf_dir))
     for ts in ("19970101T060000", "19970101T120000", "19970101T180000"):
@@ -642,9 +644,9 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "resolved_run string, n_rows long, total_price double")
 
 
-@register(
-    "q_merge_upsert",
-    oracle="""
+# The post-MERGE state of the 1995 per-customer rollup under the 1996
+# rollup's updates/inserts and the churned customers' deletes.
+_MERGE_ORACLE = """
     WITH t95 AS (SELECT o_custkey AS custkey, COUNT(*) AS order_count,
                         ROUND(SUM(o_totalprice), 2) AS total_price
                  FROM orders
@@ -667,7 +669,44 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT custkey, order_count, total_price FROM t95
     WHERE NOT EXISTS (SELECT 1 FROM t96 WHERE t96.custkey = t95.custkey)
       AND NOT EXISTS (SELECT 1 FROM churn WHERE churn.custkey = t95.custkey)
-    """,
+    """
+
+
+def _merge_inputs(spark: SparkSession, sf_dir: str):
+    """(base, updates): the 1995 per-customer order rollup (the MERGE
+    target) and the changes — 1996 rollups plus ``is_deleted``
+    tombstones for customers active in 1995, inactive in 1996, with a
+    negative balance."""
+    cat = Catalog(spark, sf_dir)
+    o = cat.table("orders")
+    c = cat.table("customer")
+
+    def rollup(year: int) -> DataFrame:
+        return (
+            o.where(_in_year(year))
+            .groupBy(F.col("o_custkey").alias("custkey"))
+            .agg(F.count("*").alias("order_count"),
+                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
+        )
+
+    base, cur = rollup(1995), rollup(1996)
+    churn = (
+        base.select("custkey")
+        .join(cur.select("custkey"), "custkey", "left_anti")
+        .join(c.where(F.col("c_acctbal") < 0)
+               .select(F.col("c_custkey").alias("custkey")),
+              "custkey", "left_semi")
+        .withColumn("order_count", F.lit(None).cast("long"))
+        .withColumn("total_price", F.lit(None).cast("double"))
+        .withColumn("is_deleted", F.lit(True))
+    )
+    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    return base, updates
+
+
+@register(
+    "q_merge_upsert",
+    oracle=_MERGE_ORACLE,
     doc="Full MERGE triple on the Parquet lake, oracle-checked end to "
         "end: a 1995 per-customer order rollup is written as the target "
         "partition, then a changes table carrying 1996 rollups "
@@ -688,34 +727,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.lake import Lake
     from datalake_project_spark.scratch import scratch_dir
 
-    cat = Catalog(spark, sf_dir)
-    o = cat.table("orders")
-    c = cat.table("customer")
-
-    def rollup(year: int) -> DataFrame:
-        return (
-            o.where(
-                (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-            )
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.count("*").alias("order_count"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-        )
-
-    base, cur = rollup(1995), rollup(1996)
-    # tombstones: active in 1995, inactive in 1996, negative balance
-    churn = (
-        base.select("custkey")
-        .join(cur.select("custkey"), "custkey", "left_anti")
-        .join(c.where(F.col("c_acctbal") < 0)
-               .select(F.col("c_custkey").alias("custkey")),
-              "custkey", "left_semi")
-        .withColumn("order_count", F.lit(None).cast("long"))
-        .withColumn("total_price", F.lit(None).cast("double"))
-        .withColumn("is_deleted", F.lit(True))
-    )
-    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    base, updates = _merge_inputs(spark, sf_dir)
 
     lake = Lake(spark, scratch_dir("merge", sf_dir))
     lake.write_usage(base, "cust_merge", "1995-01-01", "19950101T000000")
@@ -727,30 +739,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_manifest_merge_upsert",
-    oracle="""
-    WITH t95 AS (SELECT o_custkey AS custkey, COUNT(*) AS order_count,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-                   AND o_orderdate <  TIMESTAMP '1996-01-01'
-                 GROUP BY o_custkey),
-         t96 AS (SELECT o_custkey AS custkey, COUNT(*) AS order_count,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                   AND o_orderdate <  TIMESTAMP '1997-01-01'
-                 GROUP BY o_custkey),
-         churn AS (SELECT t95.custkey FROM t95
-                   JOIN customer ON c_custkey = t95.custkey
-                   WHERE c_acctbal < 0
-                     AND NOT EXISTS (SELECT 1 FROM t96
-                                     WHERE t96.custkey = t95.custkey))
-    SELECT custkey, order_count, total_price FROM t96
-    UNION ALL
-    SELECT custkey, order_count, total_price FROM t95
-    WHERE NOT EXISTS (SELECT 1 FROM t96 WHERE t96.custkey = t95.custkey)
-      AND NOT EXISTS (SELECT 1 FROM churn WHERE churn.custkey = t95.custkey)
-    """,
+    oracle=_MERGE_ORACLE,
     doc="The q_merge_upsert MERGE triple executed through the "
         "MANIFEST-COMMIT backend (ManifestLake — round 5's ACID layer): "
         "identical inputs, identical oracle, but the write path is "
@@ -769,33 +758,7 @@ def q_manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.manifest_lake import ManifestLake
     from datalake_project_spark.scratch import scratch_dir
 
-    cat = Catalog(spark, sf_dir)
-    o = cat.table("orders")
-    c = cat.table("customer")
-
-    def rollup(year: int) -> DataFrame:
-        return (
-            o.where(
-                (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-            )
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.count("*").alias("order_count"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-        )
-
-    base, cur = rollup(1995), rollup(1996)
-    churn = (
-        base.select("custkey")
-        .join(cur.select("custkey"), "custkey", "left_anti")
-        .join(c.where(F.col("c_acctbal") < 0)
-               .select(F.col("c_custkey").alias("custkey")),
-              "custkey", "left_semi")
-        .withColumn("order_count", F.lit(None).cast("long"))
-        .withColumn("total_price", F.lit(None).cast("double"))
-        .withColumn("is_deleted", F.lit(True))
-    )
-    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    base, updates = _merge_inputs(spark, sf_dir)
 
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
     lake.write_usage(base, "cust_merge", "1995-01-01", "19950101T000000")
@@ -840,10 +803,7 @@ def q_manifest_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
 
     def snap(year: int) -> DataFrame:
-        return o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        ).select("o_orderkey", "o_totalprice")
+        return o.where(_in_year(year)).select("o_orderkey", "o_totalprice")
 
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
     v_base = lake.write_usage(snap(1995), "orders_tt",
@@ -896,10 +856,7 @@ def q_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
     snap = (
-        o.where(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
+        o.where(_in_year(1996))
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"),
              F.round(F.sum("o_totalprice"), 2).alias("total_price"))
@@ -956,10 +913,7 @@ def q_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
 
     def snap(year: int) -> DataFrame:
-        return o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        ).select("o_orderkey", "o_totalprice")
+        return o.where(_in_year(year)).select("o_orderkey", "o_totalprice")
 
     lake = Lake(spark, scratch_dir("rollback", sf_dir))
     runs = {1997: "19970101T000000", 1998: "19980101T000000",
@@ -1190,9 +1144,7 @@ def q_replica_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    truth = (o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
+    truth = (o.where(_in_year(1997))
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(F.count("*").alias("order_count"),
              F.round(F.sum("o_totalprice"), 2).alias("total_price")))
@@ -1275,9 +1227,7 @@ def q_lake_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     o = cat.table("orders")
-    snap = (o.where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp")))
+    snap = (o.where(_in_year(1995))
         .select("o_orderkey", "o_totalprice"))
 
     root = scratch_dir("orphan_lake", sf_dir)
@@ -1714,19 +1664,7 @@ def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "q_manifest_version_diff",
-    oracle="""
-    WITH t95 AS (SELECT o_custkey AS custkey,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-                   AND o_orderdate <  TIMESTAMP '1996-01-01'
-                 GROUP BY o_custkey),
-         t96 AS (SELECT o_custkey AS custkey,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                   AND o_orderdate <  TIMESTAMP '1997-01-01'
-                 GROUP BY o_custkey)
+    oracle=_PRICE_ROLLUPS_SQL + """
     SELECT 'added' AS change, COUNT(*) AS n FROM t96
     WHERE NOT EXISTS (SELECT 1 FROM t95 WHERE t95.custkey = t96.custkey)
     UNION ALL
@@ -1757,16 +1695,9 @@ def q_manifest_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
 
-    def rollup(year: int) -> DataFrame:
-        return (o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
-    v1 = lake.write_usage(rollup(1995), "vdiff", "1995-01-01", "T01")
-    v2 = lake.write_usage(rollup(1996), "vdiff", "1995-01-01", "T01")
+    v1 = lake.write_usage(_price_rollup(o, 1995), "vdiff", "1995-01-01", "T01")
+    v2 = lake.write_usage(_price_rollup(o, 1996), "vdiff", "1995-01-01", "T01")
     old = (lake.read_usage_at("vdiff", v1, "1995-01-01", "T01")
            .select("custkey", "total_price"))
     new = (lake.read_usage_at("vdiff", v2, "1995-01-01", "T01")
@@ -1835,19 +1766,7 @@ def q_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_snapshot_scd3",
-    oracle="""
-    WITH t95 AS (SELECT o_custkey AS custkey,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-                   AND o_orderdate <  TIMESTAMP '1996-01-01'
-                 GROUP BY o_custkey),
-         t96 AS (SELECT o_custkey AS custkey,
-                        ROUND(SUM(o_totalprice), 2) AS total_price
-                 FROM orders
-                 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                   AND o_orderdate <  TIMESTAMP '1997-01-01'
-                 GROUP BY o_custkey)
+    oracle=_PRICE_ROLLUPS_SQL + """
     SELECT COALESCE(t96.custkey, t95.custkey) AS custkey,
            t96.total_price AS current_price,
            t95.total_price AS previous_price,
@@ -1873,18 +1792,10 @@ def q_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_snapshot_scd3(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
-
-    def rollup(year: int) -> DataFrame:
-        return (o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
-    t95 = rollup(1995).select("custkey",
-                              F.col("total_price").alias("prev_p"))
-    t96 = rollup(1996).select("custkey",
-                              F.col("total_price").alias("cur_p"))
+    t95 = _price_rollup(o, 1995).select(
+        "custkey", F.col("total_price").alias("prev_p"))
+    t96 = _price_rollup(o, 1996).select(
+        "custkey", F.col("total_price").alias("cur_p"))
     j = t95.join(t96, "custkey", "full_outer")
     change = (F.when(F.col("prev_p").isNull(), "new")
               .when(F.col("cur_p").isNull(), "lapsed")
@@ -2251,9 +2162,7 @@ def q_lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
     ml = ManifestLake(spark, root)
     o = Catalog(spark, sf_dir).table("orders")
-    snap = (o.where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp")))
+    snap = (o.where(_in_year(1995))
         .select("o_orderkey", "o_custkey", "o_totalprice"))
     ml.write_usage(snap, "src", "20240101", "r1")
 

@@ -14,38 +14,22 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.operators import dedup as D
-from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries import _sql, local_df, register
 
-_PAIRS_ORACLE = """
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3)
-    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           ROUND(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-                 (len(a.shingles) + len(b.shingles)
-                  - len(list_intersect(a.shingles, b.shingles)))::DOUBLE, 4) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-          (len(a.shingles) + len(b.shingles)
-           - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5
-"""
+_PAIRS_ORACLE = _sql.WITH_SHINGLES + _sql.jaccard_pairs(0.5, True)
 
 
-
-def _pair_parts(spark, sf_dir: str) -> int:
-    """Footprint-derived exchange width for the shingle pair stream —
-    shared by every ngram_jaccard_pairs call site (the 30x ladder
-    measured 3.8 GB spill in the unsized truth arms; the sum-df²
-    working set runs ~45x the documents parquet bytes)."""
+def _jaccard_pairs(spark, sf_dir: str, d: DataFrame, threshold=0.5,
+                   max_df=None) -> DataFrame:
+    """``ngram_jaccard_pairs`` at the footprint-derived exchange width
+    every call site shares (the 30x ladder measured 3.8 GB spill in the
+    unsized truth arms; the sum-df² working set runs ~45x the documents
+    parquet bytes)."""
     from datalake_project_spark.tuning import suggest_for_stage
-    return suggest_for_stage(spark, f"{sf_dir}/documents.parquet",
-                             expansion=48.0)
+    nparts = suggest_for_stage(spark, f"{sf_dir}/documents.parquet",
+                               expansion=48.0)
+    return D.ngram_jaccard_pairs(d, threshold=threshold, max_df=max_df,
+                                 num_partitions=nparts)
 
 
 @register(
@@ -100,22 +84,12 @@ def q_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    return D.ngram_jaccard_pairs(d, threshold=0.5,
-                                 num_partitions=_pair_parts(spark, sf_dir))
+    return _jaccard_pairs(spark, sf_dir, d)
 
 
 @register(
     "q_dedup_containment",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3)
+    oracle=_sql.WITH_SHINGLES + """
     SELECT a.doc_id AS contained_id, b.doc_id AS container_id,
            ROUND(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
                  len(a.shingles)::DOUBLE, 4) AS containment
@@ -234,28 +208,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_components",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u)
+    oracle=_sql.NEAR_DUP_REACH + """
     SELECT u AS id, LEAST(u, MIN(v)) AS rep
     FROM reach GROUP BY u
     """,
@@ -267,36 +220,12 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    return D.connected_components(pairs)
+    return D.connected_components(_jaccard_pairs(spark, sf_dir, d))
 
 
 @register(
     "q_dedup_cluster_sizes",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u),
+    oracle=_sql.NEAR_DUP_REACH + "," + _sql.COMP + """,
     sizes AS (SELECT rep, COUNT(*) AS cluster_size FROM comp GROUP BY rep)
     SELECT cluster_size,
            COUNT(*) AS n_clusters,
@@ -312,9 +241,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    comp = D.connected_components(pairs)
+    comp = D.connected_components(_jaccard_pairs(spark, sf_dir, d))
     sizes = comp.groupBy("rep").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (sizes.groupBy("cluster_size")
             .agg(F.count(F.lit(1)).alias("n_clusters"),
@@ -334,24 +261,14 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    return D.ngram_jaccard_pairs(d, threshold=0.5, max_df=50,
-                                 num_partitions=_pair_parts(spark, sf_dir))
+    return _jaccard_pairs(spark, sf_dir, d, max_df=50)
 
 
 @register(
     "q_dedup_incremental",
     oracle="""
     WITH batch AS (SELECT * FROM documents WHERE doc_id % 5 = 4),
-    corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 4),
-    words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 4),""" + _sql.WORDS + "," + _sql.SHINGLES + """,
     near_hits AS (
         SELECT b.doc_id
         FROM sh b JOIN sh c
@@ -391,29 +308,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_resolved",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u)
+    oracle=_sql.NEAR_DUP_REACH + "," + _sql.COMP + """
     SELECT d.doc_id
     FROM documents d
     WHERE NOT EXISTS (SELECT 1 FROM comp WHERE comp.id = d.doc_id
@@ -428,9 +323,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    comp = D.connected_components(pairs)
+    comp = D.connected_components(_jaccard_pairs(spark, sf_dir, d))
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     return d.join(non_reps, d.doc_id == non_reps.id, "left_anti").select("doc_id")
 
@@ -503,29 +396,7 @@ def q_dedup_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_impact_by_source",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u),
+    oracle=_sql.NEAR_DUP_REACH + "," + _sql.COMP + """,
     dropped AS (SELECT id FROM comp WHERE id <> rep)
     SELECT d.source,
            COUNT(*) AS n_docs,
@@ -546,9 +417,7 @@ def q_dedup_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    comp = D.connected_components(pairs)
+    comp = D.connected_components(_jaccard_pairs(spark, sf_dir, d))
     dropped = comp.where(F.col("id") != F.col("rep")).select("id")
     tagged = d.select("doc_id", "source").join(
         dropped, d.doc_id == dropped.id, "left")
@@ -566,11 +435,7 @@ DF_CAPS = (5, 10, 25, 50)
 @register(
     "q_dedup_dfcap_planner",
     oracle=f"""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
+    WITH{_sql.WORDS},
     sh AS (
         SELECT DISTINCT doc_id,
                unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -619,16 +484,7 @@ def q_dedup_dfcap_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_threshold_sweep",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    oracle=_sql.WITH_SHINGLES + """,
     pairs AS (
         SELECT len(list_intersect(a.shingles, b.shingles))::DOUBLE
                / (len(a.shingles) + len(b.shingles)
@@ -656,8 +512,7 @@ def q_dedup_dfcap_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    pairs = _jaccard_pairs(spark, sf_dir, d)
     cuts = F.array(*[F.lit(t) for t in (0.5, 0.6, 0.7, 0.8, 0.9)])
     exploded = pairs.select("jaccard",
                             F.explode(cuts).alias("threshold"))
@@ -674,27 +529,8 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_review_sample",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               ROUND(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-                     / (len(a.shingles) + len(b.shingles)
-                        - len(list_intersect(a.shingles, b.shingles)))::DOUBLE,
-                     4) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE
-              / (len(a.shingles) + len(b.shingles)
-                 - len(list_intersect(a.shingles, b.shingles)))::DOUBLE
-              >= 0.5)
+    oracle=_sql.WITH_SHINGLES + """,
+    pairs AS (""" + _sql.jaccard_pairs(0.5, True) + """)
     SELECT p.a_id, p.b_id, p.jaccard,
            substr(da.text, 1, 60) AS a_snippet,
            substr(db.text, 1, 60) AS b_snippet
@@ -715,8 +551,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_review_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = (D.ngram_jaccard_pairs(d, threshold=0.5,
-                                   num_partitions=_pair_parts(spark, sf_dir))
+    pairs = (_jaccard_pairs(spark, sf_dir, d)
              .orderBy(F.desc("jaccard"), "a_id", "b_id").limit(10))
     da = d.select(F.col("doc_id").alias("a_id"),
                   F.substring("text", 1, 60).alias("a_snippet"))
@@ -760,11 +595,7 @@ def q_dedup_winnow_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_savings_ladder",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
+    oracle="WITH RECURSIVE" + _sql.WORDS + """,
     tcnt AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS nt FROM words),
     ex AS (SELECT d.doc_id,
                   MIN(d2.doc_id) AS keeper
@@ -777,19 +608,7 @@ def q_dedup_winnow_params(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
                               FOR i IN range(1, len(ws) - 1)]) AS shingles
         FROM words w JOIN s1 USING (doc_id) WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u),
+    pairs AS (""" + _sql.jaccard_pairs(0.5) + ")," + _sql.REACH + "," + _sql.COMP + """,
     s2 AS (SELECT doc_id FROM s1
            WHERE NOT EXISTS (SELECT 1 FROM comp
                              WHERE comp.id = s1.doc_id
@@ -853,9 +672,7 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges — the r8 attribution found the UNSIZED call here was the
     # query's entire 610 MB 30x spill: one 33.8M-row pair-count
     # HashAggregate on AQE-coalesced session width)
-    pairs = D.ngram_jaccard_pairs(d1, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    comp = D.connected_components(pairs)
+    comp = D.connected_components(_jaccard_pairs(spark, sf_dir, d1))
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     s2 = s1.join(non_reps, s1.doc_id == non_reps.id, "left_anti")
     d2 = d.join(s2, "doc_id", "left_semi")
@@ -903,32 +720,7 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_resolved_by_quality",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE
-              >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u
-        WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u),
+    oracle=_sql.NEAR_DUP_REACH + "," + _sql.COMP + """,
     scored AS (
         SELECT doc_id,
                CASE WHEN len(ws) > 0
@@ -964,9 +756,7 @@ def q_dedup_resolved_by_quality(spark: SparkSession,
     from datalake_project_spark.functions.text import tokens
 
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    comp = D.connected_components(pairs)
+    comp = D.connected_components(_jaccard_pairs(spark, sf_dir, d))
     ws = tokens(F.col("text"))
     scored = d.select(
         "doc_id",
@@ -988,30 +778,7 @@ def q_dedup_resolved_by_quality(spark: SparkSession,
 
 @register(
     "q_dedup_bcubed",
-    oracle="""
-    WITH RECURSIVE words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE >= 0.5),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u
-        WHERE e.v <> r.u),
+    oracle=_sql.NEAR_DUP_REACH + """,
     rep AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS rep
             FROM reach GROUP BY u),
     lab AS (
@@ -1057,9 +824,7 @@ def q_dedup_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     # footprint-sized pair exchanges (r6 ladder: 2.6 GB spill at 10x
     # on the static session width)
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
-    rep = D.connected_components(pairs)  # (id, rep)
+    rep = D.connected_components(_jaccard_pairs(spark, sf_dir, d))  # (id, rep)
     lab = (d.join(rep.withColumnRenamed("id", "doc_id"), "doc_id", "left")
            .select("doc_id",
                    F.coalesce("rep", "doc_id").alias("g"),
@@ -1092,17 +857,7 @@ def q_dedup_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_prefix_filter",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    oracle=_sql.WITH_SHINGLES + """,
     toks AS (SELECT doc_id, unnest(shingles) AS tok FROM sh),
     df AS (SELECT tok, COUNT(*) AS df FROM toks GROUP BY tok),
     tsz AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
@@ -1118,13 +873,7 @@ def q_dedup_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
         FROM pref a JOIN pref b
           ON a.tok = b.tok AND a.doc_id < b.doc_id),
-    truth AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE
-              >= 0.5)
+    truth AS (""" + _sql.jaccard_pairs(0.5) + """)
     SELECT (SELECT COUNT(*) FROM sh)::BIGINT AS n_docs,
            (SELECT CAST(SUM(df * (df - 1) // 2) AS BIGINT) FROM df)
                AS n_full_pair_slots,
@@ -1179,7 +928,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window, prefix self-join, truth arm) takes the footprint width:
     # the 30x ladder measured 7.3 GB spilled with these on the static
     # session setting. r9: the width uses an 8 MB per-partition target
-    # (vs _pair_parts' 128 MB default) because the pair stage pipelines
+    # (vs _jaccard_pairs' 128 MB default) because the pair stage pipelines
     # the self-join SMJ sort WITH the pair-distinct aggregate in one
     # task's memory slice — the same co-resident-consumer sizing the
     # FS verify arm needed; the r8 receipt measured ~5 MB/task of sort
@@ -1266,28 +1015,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_minhash_estimator",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    truth AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               ROUND(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-                     (len(a.shingles) + len(b.shingles)
-                      - len(list_intersect(a.shingles, b.shingles)))::DOUBLE,
-                     4) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE
-              >= 0.2),
+    oracle=_sql.WITH_SHINGLES + """,
+    truth AS (""" + _sql.jaccard_pairs(0.2, True) + """),
     ids AS (SELECT a_id AS id FROM truth UNION SELECT b_id FROM truth),
     toks AS (
         SELECT doc_id, u.s
@@ -1341,8 +1070,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    truth = (D.ngram_jaccard_pairs(
-        d, threshold=0.2, num_partitions=_pair_parts(spark, sf_dir))
+    truth = (_jaccard_pairs(spark, sf_dir, d, 0.2)
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))  # keep: measured
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1392,28 +1120,8 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_simhash_portable",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
-    truth AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               ROUND(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-                     (len(a.shingles) + len(b.shingles)
-                      - len(list_intersect(a.shingles, b.shingles)))::DOUBLE,
-                     4) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-              (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))::DOUBLE
-              >= 0.5),
+    oracle=_sql.WITH_SHINGLES + """,
+    truth AS (""" + _sql.jaccard_pairs(0.5, True) + """),
     ids AS (SELECT a_id AS id FROM truth UNION SELECT b_id FROM truth),
     toksd AS (
         SELECT DISTINCT w.doc_id, u.t AS s
@@ -1464,8 +1172,7 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     B, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    truth = (D.ngram_jaccard_pairs(d, threshold=0.5,
-                                   num_partitions=_pair_parts(spark, sf_dir))
+    truth = (_jaccard_pairs(spark, sf_dir, d)
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))  # keep: measured
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1505,17 +1212,7 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_idf_weighted_jaccard",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    oracle=_sql.WITH_SHINGLES + """,
     inv AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
     n AS (SELECT COUNT(*) AS n_docs FROM sh),
     idf AS (
@@ -1607,12 +1304,7 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
 
 @register(
     "q_dedup_bag_jaccard",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
+    oracle="WITH" + _sql.WORDS + """,
     sh AS (
         SELECT doc_id,
                unnest([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]

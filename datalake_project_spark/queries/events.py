@@ -130,6 +130,33 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _funnel_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per user: first signup ts ``s_ts`` and the click / purchase ts
+    lists — one conditional aggregate over one events scan."""
+    e = Catalog(spark, sf_dir).table("events")
+    return (
+        e.groupBy("user_id")
+        .agg(F.min(F.when(F.col("event_type") == "signup", F.col("ts")))
+             .alias("s_ts"),
+             F.collect_list(
+                 F.when(F.col("event_type") == "click", F.col("ts")))
+             .alias("click_ts"),
+             F.collect_list(
+                 F.when(F.col("event_type") == "purchase", F.col("ts")))
+             .alias("purchase_ts")))
+
+
+def _funnel_stages(per_user: DataFrame) -> DataFrame:
+    """Adds ``c_ts`` (first click at-or-after s_ts) and ``p_ts`` (first
+    purchase at-or-after c_ts) without re-scanning."""
+    return (
+        per_user
+        .withColumn("c_ts", F.array_min(F.filter(
+            "click_ts", lambda t: t >= F.col("s_ts"))))
+        .withColumn("p_ts", F.array_min(F.filter(
+            "purchase_ts", lambda t: t >= F.col("c_ts")))))
+
+
 @register(
     "q_events_funnel",
     oracle="""
@@ -165,23 +192,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signup, first purchase >= that click, all from a single per-user
     # conditional-min aggregate — the events scan runs ONCE (the chained
     # three-join formulation recomputed stage 1 inside stages 2 and 3).
-    e = Catalog(spark, sf_dir).table("events")
-    per_user = (
-        e.groupBy("user_id")
-        .agg(F.min(F.when(F.col("event_type") == "signup", F.col("ts")))
-             .alias("s_ts"),
-             F.collect_list(
-                 F.when(F.col("event_type") == "click", F.col("ts")))
-             .alias("click_ts"),
-             F.collect_list(
-                 F.when(F.col("event_type") == "purchase", F.col("ts")))
-             .alias("purchase_ts")))
-    staged = (
-        per_user
-        .withColumn("c_ts", F.array_min(F.filter(
-            "click_ts", lambda t: t >= F.col("s_ts"))))
-        .withColumn("p_ts", F.array_min(F.filter(
-            "purchase_ts", lambda t: t >= F.col("c_ts")))))
+    staged = _funnel_stages(_funnel_users(spark, sf_dir))
     return staged.agg(
         F.count("s_ts").alias("n_signup"),
         F.count("c_ts").alias("n_click_after"),
@@ -379,9 +390,9 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_transitions")))
 
 
-@register(
-    "q_events_gapfill",
-    oracle="""
+# Hourly (event_type, bucket) counts b(n, v) and the dense spine of every
+# hour in [min, max] per type.
+_HOURLY_SPINE_SQL = """
     WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
                       COUNT(*) AS n, ROUND(SUM(value), 2) AS v
                FROM events GROUP BY 1, 2),
@@ -391,7 +402,29 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT t.event_type,
                unnest(generate_series(bounds.lo, bounds.hi,
                                       INTERVAL 1 HOUR)) AS bucket
-        FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds)
+        FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds)"""
+
+
+def _hourly_spine(spark: SparkSession, sf_dir: str):
+    """(spine, counts): ``_HOURLY_SPINE_SQL``'s spine and b."""
+    e = Catalog(spark, sf_dir).table("events")
+    counts = (e.groupBy("event_type",
+                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.round(F.sum("value"), 2).alias("v")))
+    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
+                   F.date_trunc("hour", F.max("ts")).alias("hi"))
+    types = e.select("event_type").distinct()
+    spine = (types.crossJoin(F.broadcast(bounds))
+             .select("event_type",
+                     F.explode(F.sequence(
+                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
+    return spine, counts
+
+
+@register(
+    "q_events_gapfill",
+    oracle=_HOURLY_SPINE_SQL + """
     SELECT s.event_type,
            STRFTIME(s.bucket, '%Y-%m-%d %H:00') AS bucket_s,
            CAST(COALESCE(b.n, 0) AS BIGINT) AS n_events,
@@ -411,18 +444,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "only corpus-sized work is the one groupBy.",
 )
 def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    counts = (e.groupBy("event_type",
-                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.round(F.sum("value"), 2).alias("v")))
-    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
-                   F.date_trunc("hour", F.max("ts")).alias("hi"))
-    types = e.select("event_type").distinct()
-    spine = (types.crossJoin(F.broadcast(bounds))
-             .select("event_type",
-                     F.explode(F.sequence(
-                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
+    spine, counts = _hourly_spine(spark, sf_dir)
     return (
         spine.join(counts, ["event_type", "bucket"], "left")
         .select("event_type",
@@ -434,17 +456,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_events_gapfill_interpolate",
-    oracle="""
-    WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket,
-                      COUNT(*) AS n, ROUND(SUM(value), 2) AS v
-               FROM events GROUP BY 1, 2),
-    bounds AS (SELECT date_trunc('hour', MIN(ts)) AS lo,
-                      date_trunc('hour', MAX(ts)) AS hi FROM events),
-    spine AS (
-        SELECT t.event_type,
-               unnest(generate_series(bounds.lo, bounds.hi,
-                                      INTERVAL 1 HOUR)) AS bucket
-        FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds),
+    oracle=_HOURLY_SPINE_SQL + """,
     j AS (
         SELECT s.event_type, s.bucket,
                CAST(epoch(s.bucket) AS BIGINT) / 3600 AS hr,
@@ -489,18 +501,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never the raw events.",
 )
 def q_events_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    counts = (e.groupBy("event_type",
-                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.round(F.sum("value"), 2).alias("v")))
-    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
-                   F.date_trunc("hour", F.max("ts")).alias("hi"))
-    types = e.select("event_type").distinct()
-    spine = (types.crossJoin(F.broadcast(bounds))
-             .select("event_type",
-                     F.explode(F.sequence(
-                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
+    spine, counts = _hourly_spine(spark, sf_dir)
     j = (spine.join(counts, ["event_type", "bucket"], "left")
          .withColumn("hr", (F.unix_timestamp("bucket") / 3600).cast("long")))
     wb = (Window.partitionBy("event_type").orderBy("hr")
@@ -674,14 +675,57 @@ def q_events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dau.join(wau, "day")
 
 
-@register(
-    "q_events_interarrival",
-    oracle="""
+# Each event's previous ts in its user's (ts, event_id) order.
+_PREV_TS_SQL = """
     WITH seq AS (
         SELECT user_id, ts,
                LAG(ts) OVER (PARTITION BY user_id
                              ORDER BY ts, event_id) AS prev_ts
+        FROM events)"""
+
+# Per-user event sequences -> first-order transition counts tc(s, t, n).
+_TRANSITIONS_SQL = """
+    WITH seq AS (
+        SELECT user_id, event_type,
+               LAG(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS prev_type
         FROM events),
+    tc AS (SELECT prev_type AS s, event_type AS t, COUNT(*) AS n
+           FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2)"""
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_TRANSITIONS_SQL``'s tc: (s, t, n) event-type transitions."""
+    e = Catalog(spark, sf_dir).table("events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
+    return (seq.where(F.col("prev_type").isNotNull())
+            .groupBy(F.col("prev_type").alias("s"),
+                     F.col("event_type").alias("t"))
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
+def _markov_stationary(tc: DataFrame):
+    """(tp, ns, pr): row-normalized transition probabilities, the state
+    count k and the stationary distribution after MARKOV_ITERS power
+    iterations from uniform, rounded at 6 dp per step."""
+    wn = Window.partitionBy("s")
+    tp = tc.select("s", "t", (F.col("n").cast("double")
+                              / F.sum("n").over(wn)).alias("p"))
+    states = tc.select(F.col("s").alias("st")).distinct()
+    ns = states.agg(F.count(F.lit(1)).alias("k"))
+    pr = (states.crossJoin(F.broadcast(ns))
+          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
+    for _ in range(MARKOV_ITERS):
+        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
+              .groupBy(F.col("t").alias("st"))
+              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6).alias("pr")))
+    return tp, ns, pr
+
+
+@register(
+    "q_events_interarrival",
+    oracle=_PREV_TS_SQL + """,
     gaps AS (
         SELECT CAST(FLOOR(LOG2(
                    GREATEST(date_diff('second', prev_ts, ts), 1) + 1))
@@ -777,14 +821,7 @@ MARKOV_ITERS = 3
 
 
 def _markov_oracle(n_iter: int) -> str:
-    parts = ["""
-    WITH seq AS (
-        SELECT user_id, event_type,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events),
-    tc AS (SELECT prev_type AS s, event_type AS t, COUNT(*) AS n
-           FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+    parts = [_TRANSITIONS_SQL + """,
     tp AS (SELECT s, t, n::DOUBLE / SUM(n) OVER (PARTITION BY s) AS p
            FROM tc),
     states AS (SELECT DISTINCT s AS st FROM tc),
@@ -818,24 +855,8 @@ def _markov_oracle(n_iter: int) -> str:
         "partitions by source state — never a single partition.",
 )
 def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
-    wn = Window.partitionBy("s")
-    tp = tc.select("s", "t", (F.col("n").cast("double")
-                              / F.sum("n").over(wn)).alias("p"))
-    states = tc.select(F.col("s").alias("st")).distinct()
-    ns = states.agg(F.count(F.lit(1)).alias("k"))
-    pr = (states.crossJoin(F.broadcast(ns))
-          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
-    for _ in range(MARKOV_ITERS):
-        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
-              .groupBy(F.col("t").alias("st"))
-              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6).alias("pr")))
+    tc = _transition_counts(spark, sf_dir)
+    tp, ns, pr = _markov_stationary(tc)
     return pr.select(F.col("st").alias("event_type"),
                      (F.round("pr", 4) + F.lit(0.0)).alias("stationary_p"))
 
@@ -938,12 +959,7 @@ BOT_MIN_EVENTS = 30
 
 @register(
     "q_events_bot_detection",
-    oracle=f"""
-    WITH seq AS (
-        SELECT user_id, ts,
-               LAG(ts) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS prev_ts
-        FROM events),
+    oracle=_PREV_TS_SQL + f""",
     gaps AS (
         SELECT user_id,
                date_diff('second', prev_ts, ts)::DOUBLE AS g
@@ -1137,14 +1153,7 @@ def q_events_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_events_markov_baseline_accuracy",
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, event_type,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events),
-    tc AS (SELECT prev_type AS s, event_type AS t, COUNT(*) AS n
-           FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+    oracle=_TRANSITIONS_SQL + """,
     best AS (
         SELECT s, t AS predicted FROM (
             SELECT s, t, ROW_NUMBER() OVER (
@@ -1167,13 +1176,7 @@ def q_events_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_markov_baseline_accuracy(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
+    tc = _transition_counts(spark, sf_dir)
     # argmax with count-desc, type-asc tie-break: max count per source
     # first, then the lexicographically smallest type at that count
     # (max-of-struct can't express a descending string tie-break)
@@ -1723,12 +1726,7 @@ def q_hll_mergeable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_events_reactivation",
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, ts,
-               LAG(ts) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS prev_ts
-        FROM events),
+    oracle=_PREV_TS_SQL + """,
     gaps AS (
         SELECT user_id,
                COUNT(CASE WHEN date_diff('second', prev_ts, ts)
@@ -2958,25 +2956,8 @@ def q_events_markov_entropy_rate(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     import math
 
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
-    wn = Window.partitionBy("s")
-    tp = (tc.select("s", "t", (F.col("n").cast("double")
-                               / F.sum("n").over(wn)).alias("p")))
-    states = tc.select(F.col("s").alias("st")).distinct()
-    ns = states.agg(F.count(F.lit(1)).alias("k"))
-    pr = (states.crossJoin(F.broadcast(ns))
-          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
-    for _ in range(MARKOV_ITERS):
-        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
-              .groupBy(F.col("t").alias("st"))
-              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6)
-                   .alias("pr")))
+    tc = _transition_counts(spark, sf_dir)
+    tp, ns, pr = _markov_stationary(tc)
     hrow = (tp.groupBy(F.col("s").alias("st"))
             .agg(F.sum(F.col("p") * F.log(1.0 / F.col("p"))
                        / math.log(2.0)).alias("hs")))

@@ -26,21 +26,129 @@ from datalake_project_spark.queries import register
 DAMPING = 0.85
 N_ITER = 3
 
-_EDGES_SQL = """
-    edges AS (
-        SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS w
+# Order lines joined to the customer nation (cn) and supplier nation (sn).
+_TRADE_JOIN_SQL = """
         FROM orders
         JOIN customer ON o_custkey = c_custkey
         JOIN nation cn ON c_nationkey = cn.n_nationkey
         JOIN lineitem ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation sn ON s_nationkey = sn.n_nationkey
-        GROUP BY 1, 2),
+        GROUP BY 1, 2)"""
+
+_EDGES_SQL = ("""
+    edges AS (
+        SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS w"""
+              + _TRADE_JOIN_SQL + """,
     outs AS (SELECT src, CAST(SUM(w) AS BIGINT) AS wout
              FROM edges GROUP BY src),
     nodes AS (SELECT DISTINCT name FROM (
         SELECT src AS name FROM edges UNION SELECT dst FROM edges)),
-    nn AS (SELECT COUNT(*) AS n FROM nodes)"""
+    nn AS (SELECT COUNT(*) AS n FROM nodes)""")
+
+# Undirected simple graph: self-loops dropped, each edge once as u < v.
+_UE_SQL = """
+    ue AS (
+        SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
+        FROM edges WHERE src <> dst)"""
+
+# Each triangle once, as e1=(a,b), e2=(a,c), e3=(b,c) with a < b < c.
+_TRIANGLE_JOIN_SQL = """
+            FROM ue e1 JOIN ue e2 ON e2.u = e1.u AND e2.v > e1.v
+                       JOIN ue e3 ON e3.u = e1.v AND e3.v = e2.v"""
+
+# Supplier-part bipartite graph: who supplies which part.
+_BIP_SQL = """
+    WITH bip AS (
+        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),"""
+
+
+def _trade_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order lines with the customer nation as ``src`` and the supplier
+    nation as ``dst`` — the join inside ``_EDGES_SQL``."""
+    cat = Catalog(spark, sf_dir)
+    o, c, li, s, n = (cat.table(t) for t in
+                      ("orders", "customer", "lineitem", "supplier", "nation"))
+    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
+    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
+    return (o.join(c, o.o_custkey == c.c_custkey)
+            .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
+            .join(li, F.col("l_orderkey") == o.o_orderkey)
+            .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+            .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk")))
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``edges`` CTE: (src, dst, w = line count) per nation pair."""
+    return (_trade_lines(spark, sf_dir)
+            .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """The ``nodes`` CTE: every edge endpoint once, as ``name``."""
+    return (edges.select(F.col("src").alias("name"))
+            .union(edges.select(F.col("dst").alias("name"))).distinct())
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The ``ue`` CTE: distinct (u < v) pairs of loop-free ``edges``."""
+    return (edges.where(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"))
+            .distinct())
+
+
+def _triangle_join(ue: DataFrame) -> DataFrame:
+    """``_TRIANGLE_JOIN_SQL``: e1/e2/e3-aliased join, one row per triangle."""
+    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
+    return (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
+                    & (F.col("e2.v") > F.col("e1.v")))
+            .join(e3, (F.col("e3.u") == F.col("e1.v"))
+                  & (F.col("e3.v") == F.col("e2.v"))))
+
+
+def _bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``bip`` CTE: distinct (supplier s, part p) pairs."""
+    li = Catalog(spark, sf_dir).table("lineitem")
+    return li.select(F.col("l_suppkey").alias("s"),
+                     F.col("l_partkey").alias("p")).distinct()
+
+
+def _shared_part_pairs(bip: DataFrame, part_ok) -> DataFrame:
+    """Supplier pairs s1 < s2 per shared part p whose supplier count
+    ``np`` passes ``part_ok`` (one row per wedge)."""
+    pdeg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
+    a = bip.select(F.col("s").alias("s1"), "p")
+    b = bip.select(F.col("s").alias("s2"), "p")
+    return (a.join(b, "p")
+            .where(F.col("s1") < F.col("s2"))
+            .join(pdeg.where(part_ok), "p"))
+
+
+def _label_propagation(edges: DataFrame, nodes: DataFrame,
+                       n_iter: int) -> DataFrame:
+    """``_labelprop_cte`` in DataFrame form over loop-free ``edges``:
+    (node, lab) after ``n_iter`` synchronous weighted rounds."""
+    from pyspark.sql import Window
+
+    sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
+           .unionAll(edges.select(F.col("dst").alias("u"),
+                                  F.col("src").alias("v"), "w"))
+           .groupBy("u", "v").agg(F.sum("w").cast("long").alias("w")))
+    labels = nodes.select(F.col("name").alias("node"),
+                          F.col("name").alias("lab"))
+    win = Window.partitionBy("node").orderBy(F.col("sw").desc(), F.col("lab"))
+    for _ in range(n_iter):
+        votes = (sym.join(labels.select(F.col("node").alias("v"),
+                                        F.col("lab")), "v")
+                 .groupBy(F.col("u").alias("node"), "lab")
+                 .agg(F.sum("w").cast("long").alias("sw")))
+        best = (votes.withColumn("rn", F.row_number().over(win))
+                .where(F.col("rn") == 1).select("node", "lab"))
+        labels = (nodes.join(best, nodes.name == best.node, "left")
+                  .select(F.col("name").alias("node"),
+                          F.coalesce("lab", F.col("name")).alias("lab")))
+    return labels
 
 
 def _pagerank_oracle(n_iter: int) -> str:
@@ -77,20 +185,9 @@ def _pagerank_oracle(n_iter: int) -> str:
         "in-edge summation order can't flip the hash.",
 )
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
+    edges = _trade_edges(spark, sf_dir)
     outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(edges)
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     ranks = (nodes.crossJoin(F.broadcast(nn))
              .select("name", (F.lit(1.0) / F.col("n")).alias("r")))
@@ -115,15 +212,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_triangles",
-    oracle="WITH" + _EDGES_SQL + """,
-    ue AS (
-        SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-        FROM edges WHERE src <> dst)
+    oracle="WITH" + _EDGES_SQL + "," + _UE_SQL + """
     SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
            (SELECT COUNT(*) FROM ue) AS n_edges,
-           (SELECT COUNT(*)
-            FROM ue e1 JOIN ue e2 ON e2.u = e1.u AND e2.v > e1.v
-                       JOIN ue e3 ON e3.u = e1.v AND e3.v = e2.v)
+           (SELECT COUNT(*)""" + _TRIANGLE_JOIN_SQL + """)
            AS n_triangles
     """,
     doc="Triangle count over the undirected nation trade graph (same "
@@ -136,29 +228,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "predicate before the closing-edge join.",
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct())
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
-    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
-    tri = (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
-                   & (F.col("e2.v") > F.col("e1.v")))
-           .join(e3, (F.col("e3.u") == F.col("e1.v"))
-                 & (F.col("e3.v") == F.col("e2.v")))
-           .agg(F.count(F.lit(1)).alias("n_triangles")))
+    edges = _trade_lines(spark, sf_dir).select("src", "dst").distinct()
+    ue = _undirected(edges)
+    nodes = _nodes(edges)
+    tri = _triangle_join(ue).agg(F.count(F.lit(1)).alias("n_triangles"))
     return (nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
             .crossJoin(F.broadcast(ue.agg(F.count(F.lit(1)).alias("n_edges"))))
             .crossJoin(F.broadcast(tri)))
@@ -166,10 +239,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_degrees",
-    oracle="WITH" + _EDGES_SQL + """,
-    ue AS (
-        SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-        FROM edges WHERE src <> dst),
+    oracle="WITH" + _EDGES_SQL + "," + _UE_SQL + """,
     deg AS (
         SELECT name, COUNT(*) AS degree FROM (
             SELECT u AS name FROM ue UNION ALL SELECT v FROM ue)
@@ -186,21 +256,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node-keyed with map-side partials.",
 )
 def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct())
+    ue = _undirected(_trade_lines(spark, sf_dir)
+                     .select("src", "dst").distinct())
     deg = (ue.select(F.col("u").alias("name"))
            .unionAll(ue.select(F.col("v").alias("name")))
            .groupBy("name").agg(F.count(F.lit(1)).alias("degree")))
@@ -212,14 +269,7 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH" + _EDGES_SQL + """,
     w AS (
         SELECT cn.n_name AS src, sn.n_name AS dst,
-               SUM(l_extendedprice * (1 - l_discount)) AS v
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        GROUP BY 1, 2),
+               SUM(l_extendedprice * (1 - l_discount)) AS v""" + _TRADE_JOIN_SQL + """,
     outf AS (SELECT src AS nation, SUM(v) AS imports FROM w GROUP BY src),
     inf AS (SELECT dst AS nation, SUM(v) AS exports FROM w GROUP BY dst)
     SELECT n.name AS nation,
@@ -241,21 +291,11 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         "construction is the only fact-table work.",
 )
 def q_graph_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    w = (o.join(c, o.o_custkey == c.c_custkey)
-         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-         .join(li, F.col("l_orderkey") == o.o_orderkey)
-         .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
+    w = (_trade_lines(spark, sf_dir)
          .groupBy("src", "dst")
          .agg(F.sum(F.col("l_extendedprice")
                     * (1 - F.col("l_discount"))).alias("v")))
-    nodes = (w.select(F.col("src").alias("name"))
-             .union(w.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(w)
     imports = w.groupBy(F.col("src").alias("nation")).agg(
         F.sum("v").alias("imports"))
     exports = w.groupBy(F.col("dst").alias("nation")).agg(
@@ -275,9 +315,7 @@ def q_graph_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_adamic_adar",
-    oracle="""
-    WITH bip AS (
-        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
+    oracle=_BIP_SQL + """
     deg AS (SELECT p, COUNT(*) AS np FROM bip GROUP BY p),
     pairs AS (
         SELECT a.s AS s1, b.s AS s2,
@@ -306,16 +344,8 @@ def q_graph_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total-order tie-break (aa desc, s1, s2).",
 )
 def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = Catalog(spark, sf_dir).table("lineitem")
     # the bipartite index feeds the degree table AND both join sides
-    bip = li.select(F.col("l_suppkey").alias("s"),
-                    F.col("l_partkey").alias("p")).distinct()
-    deg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
-    a = bip.select(F.col("s").alias("s1"), "p")
-    b = bip.select(F.col("s").alias("s2"), "p")
-    pairs = (a.join(b, "p")
-             .where(F.col("s1") < F.col("s2"))
-             .join(deg.where(F.col("np") >= 2), "p")
+    pairs = (_shared_part_pairs(_bipartite(spark, sf_dir), F.col("np") >= 2)
              .groupBy("s1", "s2")
              .agg(F.sum(1.0 / F.log(F.col("np"))).alias("aa_raw"),
                   F.count(F.lit(1)).alias("shared_parts")))
@@ -374,39 +404,9 @@ def _labelprop_oracle(n_iter: int) -> str:
         "actions.",
 )
 def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              .where(F.col("src") != F.col("dst")))
-    sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-           .unionAll(edges.select(F.col("dst").alias("u"),
-                                  F.col("src").alias("v"), "w"))
-           .groupBy("u", "v").agg(F.sum("w").cast("long").alias("w")))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
-    labels = nodes.select(F.col("name").alias("node"),
-                          F.col("name").alias("lab"))
-    win = Window.partitionBy("node").orderBy(F.col("sw").desc(), F.col("lab"))
-    for _ in range(2):
-        votes = (sym.join(labels.select(F.col("node").alias("v"),
-                                        F.col("lab")), "v")
-                 .groupBy(F.col("u").alias("node"), "lab")
-                 .agg(F.sum("w").cast("long").alias("sw")))
-        best = (votes.withColumn("rn", F.row_number().over(win))
-                .where(F.col("rn") == 1).select("node", "lab"))
-        labels = (nodes.join(best, nodes.name == best.node, "left")
-                  .select(F.col("name").alias("node"),
-                          F.coalesce("lab", F.col("name")).alias("lab")))
+    labels = _label_propagation(edges, _nodes(edges), 2)
     return labels.select(F.col("node").alias("nation"),
                          F.col("lab").alias("community"))
 
@@ -450,21 +450,10 @@ def _bf_oracle(n_iter: int) -> str:
         "the standard distributed Bellman-Ford.",
 )
 def q_graph_shortest_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
+    edges = _trade_edges(spark, sf_dir)
     ec = edges.select("src", "dst",
                       F.ceil(F.lit(100000.0) / F.col("w")).alias("cost"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(edges)
     src1 = edges.agg(F.min("src").alias("sname"))
     dist = (nodes.crossJoin(F.broadcast(src1))
             .select("name", F.when(F.col("name") == F.col("sname"),
@@ -506,17 +495,7 @@ def q_graph_shortest_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
         "convention), rounded at 6 dp.",
 )
 def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              .where(F.col("src") != F.col("dst")))
     und = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
            .union(edges.select(F.col("dst").alias("u"),
@@ -539,9 +518,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_neighbor_jaccard",
-    oracle="""
-    WITH bip AS (
-        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
+    oracle=_BIP_SQL + """
     pdeg AS (SELECT p, COUNT(*) AS np FROM bip GROUP BY p),
     sdeg AS (SELECT s, COUNT(*) AS d FROM bip GROUP BY s),
     pairs AS (
@@ -578,16 +555,9 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order (jaccard desc, s1, s2).",
 )
 def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = Catalog(spark, sf_dir).table("lineitem")
-    bip = li.select(F.col("l_suppkey").alias("s"),
-                    F.col("l_partkey").alias("p")).distinct()
-    pdeg = bip.groupBy("p").agg(F.count(F.lit(1)).alias("np"))
+    bip = _bipartite(spark, sf_dir)
     sdeg = bip.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-    a = bip.select(F.col("s").alias("s1"), "p")
-    b = bip.select(F.col("s").alias("s2"), "p")
-    pairs = (a.join(b, "p")
-             .where(F.col("s1") < F.col("s2"))
-             .join(pdeg.where(F.col("np").between(2, 1000)), "p")
+    pairs = (_shared_part_pairs(bip, F.col("np").between(2, 1000))
              .groupBy("s1", "s2")
              .agg(F.count(F.lit(1)).alias("shared")))
     d1 = sdeg.select(F.col("s").alias("s1"), F.col("d").alias("d1"))
@@ -603,9 +573,7 @@ def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_kcore",
-    oracle="""
-    WITH bip AS (
-        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
+    oracle=_BIP_SQL + """
     pdeg AS (SELECT p, COUNT(*) AS np FROM bip GROUP BY p),
     e0 AS (
         SELECT DISTINCT a.s AS u, b.s AS v
@@ -653,9 +621,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of 36M (s, p) pairs at the 60x rung spilled 92 MiB x 6 tasks (the
     # r10 attribution); the keyed repartition gives the aggregate the
     # same footprint-scaled width as every other exchange in the query.
-    from datalake_project_spark.tuning import suggest_for_stage as _sfs
-    nparts_bip = _sfs(spark, f"{sf_dir}/lineitem.parquet",
-                      target_partition_bytes=8 << 20)
+    nparts_bip = suggest_for_stage(spark, f"{sf_dir}/lineitem.parquet",
+                                   target_partition_bytes=8 << 20)
     bip = (li.select(F.col("l_suppkey").alias("s"),
                      F.col("l_partkey").alias("p"))
            .repartition(nparts_bip, "s", "p").distinct()
@@ -806,23 +773,10 @@ def _hits_oracle(n_iter: int) -> str:
         "actions; the normalizing sum is a broadcast 1-row aggregate.",
 )
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              # keep: measured — read by every iteration of the loop below
              .localCheckpoint(eager=False))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(edges)
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     h = (nodes.crossJoin(F.broadcast(nn))
          .select("name", (F.lit(1.0) / F.col("n")).alias("h")))
@@ -899,24 +853,11 @@ def _ppr_oracle(n_iter: int) -> str:
 )
 def q_graph_personalized_pagerank(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              # keep: measured — read by every iteration of the loop below
              .localCheckpoint(eager=False))
     outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(edges)
     seed = F.when(F.col("name") == PPR_SEED, 1.0).otherwise(0.0)
     ranks = nodes.select("name", seed.alias("r"))
     contrib_edges = (edges.join(outs, "src")
@@ -993,44 +934,11 @@ def _modularity_oracle(n_iter: int) -> str:
         "community beyond LP itself.",
 )
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    from pyspark.sql import Window
-
-    edges_all = (o.join(c, o.o_custkey == c.c_custkey)
-                 .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-                 .join(li, F.col("l_orderkey") == o.o_orderkey)
-                 .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-                 .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-                 .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges_all = (_trade_edges(spark, sf_dir)
                  # keep: measured — read by every propagation round
                  .localCheckpoint(eager=False))
     edges = edges_all.where(F.col("src") != F.col("dst"))
-    sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-           .unionAll(edges.select(F.col("dst").alias("u"),
-                                  F.col("src").alias("v"), "w"))
-           .groupBy("u", "v").agg(F.sum("w").cast("long").alias("w")))
-    nodes = (edges_all.select(F.col("src").alias("name"))
-             .union(edges_all.select(F.col("dst").alias("name"))).distinct())
-    labels = nodes.select(F.col("name").alias("node"),
-                          F.col("name").alias("lab"))
-    win = Window.partitionBy("node").orderBy(F.col("sw").desc(), F.col("lab"))
-    for _ in range(2):
-        votes = (sym.join(labels.select(F.col("node").alias("v"),
-                                        F.col("lab")), "v")
-                 .groupBy(F.col("u").alias("node"), "lab")
-                 .agg(F.sum("w").cast("long").alias("sw")))
-        best = (votes.withColumn("rn", F.row_number().over(win))
-                .where(F.col("rn") == 1).select("node", "lab"))
-        labels = (nodes.join(best, nodes.name == best.node, "left")
-                  .select(F.col("name").alias("node"),
-                          F.coalesce("lab", F.col("name")).alias("lab")))
-    comm = labels
+    comm = _label_propagation(edges, _nodes(edges_all), 2)
     m = edges.agg(F.sum("w").cast("long").alias("m"))
     cs = comm.select(F.col("node").alias("src"), F.col("lab").alias("slab"))
     cd = comm.select(F.col("node").alias("dst"), F.col("lab").alias("dlab"))
@@ -1066,17 +974,12 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_local_clustering",
-    oracle="WITH" + _EDGES_SQL + """,
-    ue AS (
-        SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-        FROM edges WHERE src <> dst),
+    oracle="WITH" + _EDGES_SQL + "," + _UE_SQL + """,
     adj AS (SELECT u AS node, v AS nbr FROM ue
             UNION ALL SELECT v, u FROM ue),
     deg AS (SELECT node, COUNT(*) AS d FROM adj GROUP BY node),
     tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM ue e1 JOIN ue e2 ON e2.u = e1.u AND e2.v > e1.v
-                   JOIN ue e3 ON e3.u = e1.v AND e3.v = e2.v),
+        SELECT e1.u AS a, e1.v AS b, e2.v AS c""" + _TRIANGLE_JOIN_SQL + """),
     pert AS (
         SELECT node, COUNT(*) AS t FROM (
             SELECT a AS node FROM tri
@@ -1106,33 +1009,13 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "derivation.",
 )
 def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier",
-                       "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct())
+    ue = _undirected(_trade_lines(spark, sf_dir)
+                     .select("src", "dst").distinct())
     adj = (ue.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
            .unionAll(ue.select(F.col("v").alias("node"),
                                F.col("u").alias("nbr"))))
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
-    tri = (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
-                   & (F.col("e2.v") > F.col("e1.v")))
-           .join(e3, (F.col("e3.u") == F.col("e1.v"))
-                 & (F.col("e3.v") == F.col("e2.v")))
+    tri = (_triangle_join(ue)
            .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"),
                    F.col("e2.v").alias("c")))
     pert = (tri.select(F.col("a").alias("node"))
@@ -1179,20 +1062,7 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate (<= |nations|^2 rows), never on lineitem.",
 )
 def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier",
-                       "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              .where(F.col("src") != F.col("dst")))
     rev = edges.select(F.col("dst").alias("src"),
                        F.col("src").alias("dst"),

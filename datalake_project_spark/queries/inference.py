@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries.relational5 import _ITEM_SIM_SQL, _ITEMS_SQL
 
 
 # --------------------------------------------------------------------------
@@ -546,9 +547,9 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Isotonic calibration (exact PAV via the minimax formula)
 # --------------------------------------------------------------------------
 
-@register(
-    "q_classifier_isotonic",
-    oracle="""
+# ``_labeled_classifier_probs`` as oracle CTEs cls(doc_id, prob) and
+# lab(doc_id, y).
+_CLS_Y_SQL = """
     WITH tok AS (
         SELECT doc_id, text,
                regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
@@ -561,7 +562,34 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM ex JOIN vocab USING (t) GROUP BY ex.doc_id),
     lab AS (SELECT doc_id, CASE WHEN length(text) >= 500 THEN 1 ELSE 0 END
                        AS y
-            FROM documents),
+            FROM documents)"""
+
+
+def _labeled_classifier_probs(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """(doc_id, prob, y): the stand-in classifier's 4-dp probability and
+    the length label y = [len(text) >= 500] per non-empty document."""
+    from datalake_project_spark.queries.ml import _classifier_join
+
+    d = Catalog(spark, sf_dir).table("documents")
+    cls = (_classifier_join(d)
+           .groupBy("doc_id")
+           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
+    lab = d.select(
+        "doc_id",
+        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
+    return cls.join(lab, "doc_id")
+
+
+def _prob_bin():
+    """``prob``'s bin: width 1/800 from 0.505, clamped to bins 0..19."""
+    return F.least(F.lit(19), F.greatest(F.lit(0), F.floor(
+        (F.col("prob") - 0.505) * 800).cast("int")))
+
+
+@register(
+    "q_classifier_isotonic",
+    oracle=_CLS_Y_SQL + """,
     bins AS (
         SELECT LEAST(19, GREATEST(0,
                    CAST(FLOOR((c.prob - 0.505) * 800) AS INT))) AS bin,
@@ -605,24 +633,8 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_classifier_conformal (coverage).",
 )
 def q_classifier_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    ex = (d.select("doc_id", T.tokens("text").alias("toks"))
-          .where(F.size("toks") > 0)
-          .select("doc_id", F.explode("toks").alias("t")))
-    vocab = (ex.select("t").distinct()
-             .select("t", (((F.length("t") % 7) - 3)
-                           * F.lit(0.05)).cast("double").alias("w")))
-    cls = (ex.join(F.broadcast(vocab), "t")
-           .groupBy("doc_id")
-           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
-    lab = d.select(
-        "doc_id",
-        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
-    bins = (cls.join(lab, "doc_id")
-            .groupBy(F.least(F.lit(19), F.greatest(F.lit(0), F.floor(
-                (F.col("prob") - 0.505) * 800).cast("int"))).alias("bin"))
+    bins = (_labeled_classifier_probs(spark, sf_dir)
+            .groupBy(_prob_bin().alias("bin"))
             .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"),
                  F.round(F.avg("prob"), 4).alias("mean_prob")))
     b2 = bins.select(F.col("bin").alias("b2"), F.col("n").alias("n2"),
@@ -1912,20 +1924,7 @@ def q_feature_mutual_information(spark: SparkSession,
 
 @register(
     "q_classifier_brier_decomposition",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, text,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        FROM documents),
-    ex AS (SELECT doc_id, unnest(toks) AS t FROM tok WHERE len(toks) > 0),
-    vocab AS (SELECT DISTINCT t, ((len(t) % 7) - 3) * 0.05::DOUBLE AS w
-              FROM ex),
-    cls AS (SELECT ex.doc_id,
-                   ROUND(1.0 / (1.0 + exp(-AVG(vocab.w))), 4) AS prob
-            FROM ex JOIN vocab USING (t) GROUP BY ex.doc_id),
-    lab AS (SELECT doc_id, CASE WHEN length(text) >= 500 THEN 1 ELSE 0 END
-                       AS y
-            FROM documents),
+    oracle=_CLS_Y_SQL + """,
     scored AS (
         SELECT LEAST(19, GREATEST(0,
                    CAST(FLOOR((c.prob - 0.505) * 800) AS INT))) AS bin,
@@ -1965,25 +1964,9 @@ def q_feature_mutual_information(spark: SparkSession,
 )
 def q_classifier_brier_decomposition(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    ex = (d.select("doc_id", T.tokens("text").alias("toks"))
-          .where(F.size("toks") > 0)
-          .select("doc_id", F.explode("toks").alias("t")))
-    vocab = (ex.select("t").distinct()
-             .select("t", (((F.length("t") % 7) - 3)
-                           * F.lit(0.05)).cast("double").alias("w")))
-    cls = (ex.join(F.broadcast(vocab), "t")
-           .groupBy("doc_id")
-           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
-    lab = d.select(
-        "doc_id",
-        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
-    scored = (cls.join(lab, "doc_id")
-              .select(F.least(F.lit(19), F.greatest(F.lit(0), F.floor(
-                  (F.col("prob") - 0.505) * 800).cast("int"))).alias("bin"),
-                  "prob", F.col("y").cast("double").alias("y")))
+    scored = (_labeled_classifier_probs(spark, sf_dir)
+              .select(_prob_bin().alias("bin"), "prob",
+                      F.col("y").cast("double").alias("y")))
     bins = scored.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("nk"),
         F.avg("prob").alias("fbar"), F.avg("y").alias("obar"))
@@ -2303,26 +2286,9 @@ def q_feature_imputation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_recs_novelty",
-    oracle="""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    deg AS (SELECT l_partkey AS p, COUNT(*) AS n FROM items GROUP BY 1),
-    n_orders AS (SELECT COUNT(DISTINCT l_orderkey) AS total FROM items),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS n12
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 2),
-    sym AS (
-        SELECT pa AS p, pb AS q, n12 FROM pairs
-        UNION ALL
-        SELECT pb AS p, pa AS q, n12 FROM pairs),
-    sim AS (
-        SELECT s.p, s.q, s.n12 / sqrt(dp.n::DOUBLE * dq.n::DOUBLE) AS c
-        FROM sym s
-        JOIN deg dp ON dp.p = s.p
-        JOIN deg dq ON dq.p = s.q),
+    oracle=_ITEMS_SQL + """
+    n_orders AS (SELECT COUNT(DISTINCT l_orderkey) AS total FROM items),"""
+    + _ITEM_SIM_SQL + """,
     recs AS (
         SELECT p, q FROM sim
         QUALIFY ROW_NUMBER() OVER (PARTITION BY p ORDER BY c DESC, q) <= 3),
@@ -3127,16 +3093,37 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cramér's V — effect size for categorical association
 # --------------------------------------------------------------------------
 
-@register(
-    "q_stats_cramers_v",
-    oracle="""
+# Segment x priority contingency table: cells o, row sums r, column
+# sums c and the total n.
+_SEG_PRI_SQL = """
     WITH j AS (
         SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
     cell AS (SELECT seg, pri, COUNT(*) AS o FROM j GROUP BY seg, pri),
     rs AS (SELECT seg, SUM(o) AS r FROM cell GROUP BY seg),
     cs AS (SELECT pri, SUM(o) AS c FROM cell GROUP BY pri),
-    n_ AS (SELECT SUM(o) AS n FROM cell),
+    n_ AS (SELECT SUM(o) AS n FROM cell)"""
+
+
+def _seg_pri_table(spark: SparkSession, sf_dir: str):
+    """(cell, rs, cs, n_): ``_SEG_PRI_SQL`` in DataFrame form."""
+    c = Catalog(spark, sf_dir)
+    j = (c.table("orders")
+         .join(F.broadcast(c.table("customer")
+                           .select("c_custkey", "c_mktsegment")),
+               F.col("o_custkey") == F.col("c_custkey"))
+         .select(F.col("c_mktsegment").alias("seg"),
+                 F.col("o_orderpriority").alias("pri")))
+    cell = j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
+    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
+    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
+    n_ = cell.agg(F.sum("o").alias("n"))
+    return cell, rs, cs, n_
+
+
+@register(
+    "q_stats_cramers_v",
+    oracle=_SEG_PRI_SQL + """,
     chi AS (
         SELECT SUM((cell.o - rs.r * cs.c * 1.0 / n_.n)
                    * (cell.o - rs.r * cs.c * 1.0 / n_.n)
@@ -3164,17 +3151,7 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count.",
 )
 def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    j = (c.table("orders")
-         .join(F.broadcast(c.table("customer")
-                           .select("c_custkey", "c_mktsegment")),
-               F.col("o_custkey") == F.col("c_custkey"))
-         .select(F.col("c_mktsegment").alias("seg"),
-                 F.col("o_orderpriority").alias("pri")))
-    cell = j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
-    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
-    n_ = cell.agg(F.sum("o").alias("n"))
+    cell, rs, cs, n_ = _seg_pri_table(spark, sf_dir)
     exp = F.col("r") * F.col("c") * 1.0 / F.col("n")
     chi = (cell.join(F.broadcast(rs), "seg").join(F.broadcast(cs), "pri")
            .crossJoin(F.broadcast(n_))
@@ -3345,16 +3322,33 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kendall's tau — rank concordance between two daily series
 # --------------------------------------------------------------------------
 
-@register(
-    "q_stats_kendall_tau",
-    oracle="""
+# Per UTC day: click count x and purchase count y.
+_DAILY_XY_SQL = """
     WITH d AS (
         SELECT epoch_us(ts) // 86400000000 AS day,
                SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
                SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                    AS y
         FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY day),
+        GROUP BY day)"""
+
+
+def _daily_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_DAILY_XY_SQL``'s (day, x, y)."""
+    e = (Catalog(spark, sf_dir).table("events")
+         .where(F.col("event_type").isin("click", "purchase")))
+    return (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
+                     "event_type")
+            .groupBy("day")
+            .agg(F.sum(F.when(F.col("event_type") == "click", 1)
+                       .otherwise(0)).alias("x"),
+                 F.sum(F.when(F.col("event_type") == "purchase", 1)
+                       .otherwise(0)).alias("y")))
+
+
+@register(
+    "q_stats_kendall_tau",
+    oracle=_DAILY_XY_SQL + """,
     p AS (
         SELECT CASE WHEN (b.x - a.x) * (b.y - a.y) > 0 THEN 1 ELSE 0 END
                    AS con,
@@ -3385,15 +3379,7 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Kendall's tau of series vs time.",
 )
 def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y")))
+    d = _daily_xy(spark, sf_dir)
     b = d.select(F.col("day").alias("d2"), F.col("x").alias("x2"),
                  F.col("y").alias("y2"))
     prod = (F.col("x2") - F.col("x")) * (F.col("y2") - F.col("y"))
@@ -3418,6 +3404,33 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TOST equivalence test — proving "no meaningful difference"
 # --------------------------------------------------------------------------
+
+def _arm_moments(spark: SparkSession, sf_dir: str, col: str) -> DataFrame:
+    """One row: per user-parity arm, the count (na, nb), mean (ma, mb)
+    and sample variance (va, vb) of purchase values in integer cents,
+    from BIGINT power sums of the cents column ``col``."""
+    base = (Catalog(spark, sf_dir).table("events")
+            .where((F.col("event_type") == "purchase")
+                   & F.col("value").isNotNull())
+            .select(F.when(F.col("user_id") % 2 == 1, "a")
+                    .otherwise("b").alias("arm"),
+                    F.round(F.col("value") * 100).cast("long").alias(col)))
+    g = base.groupBy("arm").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(col).alias("s1"),
+        F.sum(F.col(col) * F.col(col)).alias("s2"))
+    mean = F.col("s1").cast("double") / F.col("n")
+    var = ((F.col("s2").cast("double")
+            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
+           / (F.col("n") - 1))
+    return g.agg(
+        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
+        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
+        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
+        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
+        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
+        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+
 
 @register(
     "q_stats_tost_equivalence",
@@ -3476,28 +3489,7 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(assignment integrity).",
 )
 def q_stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = (Catalog(spark, sf_dir).table("events")
-            .where((F.col("event_type") == "purchase")
-                   & F.col("value").isNotNull())
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"),
-                    F.round(F.col("value") * 100).cast("long")
-                    .alias("cents")))
-    g = base.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).alias("s2"))
-    mean = F.col("s1").cast("double") / F.col("n")
-    var = ((F.col("s2").cast("double")
-            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
-           / (F.col("n") - 1))
-    w = g.agg(
-        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
-        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
-        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
-        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
-        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+    w = _arm_moments(spark, sf_dir, "cents")
     diff = (F.col("ma") - F.col("mb")) / 100.0
     se = F.sqrt(F.col("va") / F.col("na") + F.col("vb") / F.col("nb")) / 100.0
     margin = 0.05 * ((F.col("ma") + F.col("mb")) / 2.0) / 100.0
@@ -3704,14 +3696,7 @@ def q_stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_sign_test",
-    oracle=f"""
-    WITH d AS (
-        SELECT epoch_us(ts) // 86400000000 AS day,
-               SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS y
-        FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY day),
+    oracle=_DAILY_XY_SQL + f""",
     s AS (
         SELECT SUM(CASE WHEN x > y THEN 1 ELSE 0 END) AS plus,
                SUM(CASE WHEN x < y THEN 1 ELSE 0 END) AS minus
@@ -3749,15 +3734,7 @@ def q_stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast row.",
 )
 def q_stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y")))
+    d = _daily_xy(spark, sf_dir)
     s = d.agg(
         F.sum(F.when(F.col("x") > F.col("y"), 1).otherwise(0))
          .alias("plus"),
@@ -3791,14 +3768,7 @@ def q_stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_wilcoxon_signed_rank",
-    oracle="""
-    WITH d AS (
-        SELECT epoch_us(ts) // 86400000000 AS day,
-               SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS y
-        FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY day),
+    oracle=_DAILY_XY_SQL + """,
     nz AS (SELECT day, x - y AS diff, ABS(x - y) AS ad
            FROM d WHERE x <> y),
     rk AS (
@@ -3838,15 +3808,7 @@ def q_stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stats_wilcoxon_signed_rank(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y")))
+    d = _daily_xy(spark, sf_dir)
     nz = (d.where(F.col("x") != F.col("y"))
           .select("day", (F.col("x") - F.col("y")).alias("diff"),
                   F.abs(F.col("x") - F.col("y")).alias("ad")))
@@ -4011,27 +3973,7 @@ def q_stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         "it matter) now complete.",
 )
 def q_stats_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = (Catalog(spark, sf_dir).table("events")
-            .where((F.col("event_type") == "purchase")
-                   & F.col("value").isNotNull())
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"),
-                    F.round(F.col("value") * 100).cast("long").alias("c")))
-    g = base.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s1"),
-        F.sum(F.col("c") * F.col("c")).alias("s2"))
-    mean = F.col("s1").cast("double") / F.col("n")
-    var = ((F.col("s2").cast("double")
-            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
-           / (F.col("n") - 1))
-    w = g.agg(
-        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
-        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
-        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
-        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
-        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+    w = _arm_moments(spark, sf_dir, "c")
     sp = F.sqrt(((F.col("na") - 1) * F.col("va")
                  + (F.col("nb") - 1) * F.col("vb"))
                 / (F.col("na") + F.col("nb") - 2))
@@ -4130,14 +4072,7 @@ def q_stats_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_g_test",
-    oracle="""
-    WITH j AS (
-        SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
-    cell AS (SELECT seg, pri, COUNT(*) AS o FROM j GROUP BY seg, pri),
-    rs AS (SELECT seg, SUM(o) AS r FROM cell GROUP BY seg),
-    cs AS (SELECT pri, SUM(o) AS c FROM cell GROUP BY pri),
-    n_ AS (SELECT SUM(o) AS n FROM cell),
+    oracle=_SEG_PRI_SQL + """,
     g AS (
         SELECT SUM(2.0 * cell.o
                    * LN(cell.o / (rs.r * cs.c * 1.0 / n_.n))) AS g2,
@@ -4165,17 +4100,7 @@ def q_stats_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "since the cell simply doesn't exist in the sparse relation).",
 )
 def q_stats_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    j = (c.table("orders")
-         .join(F.broadcast(c.table("customer")
-                           .select("c_custkey", "c_mktsegment")),
-               F.col("o_custkey") == F.col("c_custkey"))
-         .select(F.col("c_mktsegment").alias("seg"),
-                 F.col("o_orderpriority").alias("pri")))
-    cell = j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
-    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
-    n_ = cell.agg(F.sum("o").alias("n"))
+    cell, rs, cs, n_ = _seg_pri_table(spark, sf_dir)
     exp = F.col("r") * F.col("c") * 1.0 / F.col("n")
     g = (cell.join(F.broadcast(rs), "seg").join(F.broadcast(cs), "pri")
          .crossJoin(F.broadcast(n_))

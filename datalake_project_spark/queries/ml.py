@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries.text import _stop_sql
 
 K_CLUSTERS = 4
 N_ITER = 2  # centroid updates; assignments reported under the final set
@@ -304,20 +305,54 @@ def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _classifier_scores(spark, sf_dir)
 
 
-def _classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, prob, keep) — shared by the classifier query and the
-    calibration eval."""
+def _classifier_join(d: DataFrame) -> DataFrame:
+    """Every (doc_id, token t) of the non-empty documents joined to the
+    stand-in linear model's token weight ``w``."""
     from datalake_project_spark.functions import text as T
 
-    d = Catalog(spark, sf_dir).table("documents")
     ex = (d.select("doc_id", T.tokens("text").alias("toks"))
           .where(F.size("toks") > 0)
           .select("doc_id", F.explode("toks").alias("t")))
     vocab = (ex.select("t").distinct()
              .select("t", (((F.length("t") % 7) - 3)
                            * F.lit(0.05)).cast("double").alias("w")))
-    lg = (ex.join(F.broadcast(vocab), "t")
-          .groupBy("doc_id").agg(F.avg("w").alias("logit")))
+    return ex.join(F.broadcast(vocab), "t")
+
+
+def _labeled_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, label): classifier probability against the
+    held-out heuristic label en-stopword ratio >= 0.08."""
+    from datalake_project_spark.functions import text as T
+
+    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
+    d = Catalog(spark, sf_dir).table("documents")
+    lab = d.select(
+        "doc_id",
+        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
+    return scores.join(lab, "doc_id")
+
+
+def _with_quality(spark: SparkSession, sf_dir: str,
+                  quality=lambda q: q.alias("quality"), *cls_cols) -> DataFrame:
+    """``_classifier_scores`` (only ``cls_cols`` if given) joined on
+    doc_id to ``quality`` of the 4-dp heuristic quality score."""
+    from datalake_project_spark.functions import text as T
+
+    cls = _classifier_scores(spark, sf_dir)
+    if cls_cols:
+        cls = cls.select("doc_id", *cls_cols)
+    d = Catalog(spark, sf_dir).table("documents")
+    qual = d.select(
+        "doc_id",
+        quality(F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)))
+    return cls.join(qual, "doc_id")
+
+
+def _classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, keep) — shared by the classifier query and the
+    calibration eval."""
+    d = Catalog(spark, sf_dir).table("documents")
+    lg = _classifier_join(d).groupBy("doc_id").agg(F.avg("w").alias("logit"))
     return lg.select(
         "doc_id",
         (F.round(1.0 / (1.0 + F.exp(-F.col("logit"))), 4)
@@ -334,13 +369,12 @@ _CLS_CTE = f"""
     cls AS (SELECT ex.doc_id,
                    ROUND(1.0 / (1.0 + exp(-AVG(vocab.w))), 4) AS prob
             FROM ex JOIN vocab USING (t) GROUP BY ex.doc_id)"""
+# _CLS_CTE plus the held-out label: en-stopword ratio >= 0.08.
+_CLS_LAB_CTE = f"""{_CLS_CTE},
+    lab AS (SELECT doc_id, ({_stop_sql('en')}) >= 0.08 AS label FROM tok)"""
 
-
-@register(
-    "q_classifier_calibration",
-    oracle=f"""
-    WITH {_CLS_CTE},
-    qual AS (
+# Heuristic quality score (q_text_quality's formula) per doc of ``tok``.
+_QUAL_SQL = """
         SELECT doc_id,
                ROUND(GREATEST(0.0, LEAST(1.0,
                    0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
@@ -358,7 +392,14 @@ _CLS_CTE = f"""
                         list_sum(list_transform(toks, t -> len(t)))::DOUBLE
                         / len(toks)::DOUBLE ELSE 0.0 END) > 12.0
                       THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS quality
-        FROM tok)
+        FROM tok"""
+
+
+@register(
+    "q_classifier_calibration",
+    oracle=f"""
+    WITH {_CLS_CTE},
+    qual AS ({_QUAL_SQL})
     SELECT LEAST(99, CAST(FLOOR(c.prob * 100) AS INT)) AS bin,
            COUNT(*) AS n_docs,
            ROUND(AVG(c.prob), 4) + 0.0 AS avg_prob,
@@ -377,15 +418,7 @@ _CLS_CTE = f"""
         "identically-rounded probs so the oracle bins identically.",
 )
 def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    cls = _classifier_scores(spark, sf_dir)
-    d = Catalog(spark, sf_dir).table("documents")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-        .alias("quality"))
-    binned = cls.join(qual, "doc_id").select(
+    binned = _with_quality(spark, sf_dir).select(
         F.least(F.lit(99), F.floor(F.col("prob") * 100).cast("int"))
         .alias("bin"), "prob", "quality")
     return (binned.groupBy("bin")
@@ -427,23 +460,11 @@ def _pca_oracle(n_iter: int) -> str:
     return "".join(parts)
 
 
-@register(
-    "q_embed_pca_power",
-    oracle=_pca_oracle(N_POWER),
-    doc=f"Top principal component of the embedding covariance by "
-        f"{N_POWER} power iterations — PCA without ever collecting the "
-        "matrix to the driver: the covariance comes from the same "
-        "mapInPandas Gram partials as q_embed_covariance (mirrored to "
-        "the full matrix in-plan), each matvec is a broadcast join of "
-        "the 64-row vector against the (i,j,c) matrix rows plus a "
-        "per-dim aggregate, and the norm is a broadcast 1-row "
-        "aggregate. Fixed iteration count and per-step rounding at "
-        f"{COV_DP} dp make the trajectory engine-exact; deterministic "
-        "init v0 = e_0 pins the eigenvector sign. At 100 TB the data "
-        "pass happens ONCE (the Gram partials); the iterations run on "
-        "d^2-sized state only.",
-)
-def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _power_iteration(spark: SparkSession, sf_dir: str):
+    """(full, v): the embedding covariance as (i, j, c) rows rounded at
+    COV_DP, and its top eigenvector as (dim, val) after N_POWER
+    normalized matvecs from v0 = e_0 — ``_pca_oracle`` in DataFrame
+    form."""
     e = (Catalog(spark, sf_dir).table("embeddings")
          .select(F.col("embedding").alias("v")))
     partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
@@ -465,6 +486,27 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = (w.crossJoin(F.broadcast(nrm))
              .select("dim", F.round(F.col("w") / F.col("n"), COV_DP)
                      .alias("val")))
+    return full, v
+
+
+@register(
+    "q_embed_pca_power",
+    oracle=_pca_oracle(N_POWER),
+    doc=f"Top principal component of the embedding covariance by "
+        f"{N_POWER} power iterations — PCA without ever collecting the "
+        "matrix to the driver: the covariance comes from the same "
+        "mapInPandas Gram partials as q_embed_covariance (mirrored to "
+        "the full matrix in-plan), each matvec is a broadcast join of "
+        "the 64-row vector against the (i,j,c) matrix rows plus a "
+        "per-dim aggregate, and the norm is a broadcast 1-row "
+        "aggregate. Fixed iteration count and per-step rounding at "
+        f"{COV_DP} dp make the trajectory engine-exact; deterministic "
+        "init v0 = e_0 pins the eigenvector sign. At 100 TB the data "
+        "pass happens ONCE (the Gram partials); the iterations run on "
+        "d^2-sized state only.",
+)
+def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, v = _power_iteration(spark, sf_dir)
     return v.select(F.col("dim").cast("int").alias("dim"),
                     (F.round("val", 4) + F.lit(0.0)).alias("component"))
 
@@ -691,18 +733,18 @@ PQ_K = 4           # centroids per subspace (fixture-sized; 256 in prod)
 PQ_ITERS = 1       # Lloyd updates per subspace (unrolled in the oracle)
 
 
-def _pq_oracle() -> str:
+def _pq_train_sql(s: int) -> str:
+    """Oracle CTEs e{s} (subspace-s slices) through s{s}c{PQ_ITERS}
+    (its Lloyd-trained centroids)."""
     dim = 64 // PQ_SUBSPACES
-    blocks = []
-    for s in range(PQ_SUBSPACES):
-        lo, hi = s * dim + 1, (s + 1) * dim
-        prefix = f"""
+    lo, hi = s * dim + 1, (s + 1) * dim
+    sql = f"""
     e{s} AS (SELECT vec_id, (embedding::DOUBLE[])[{lo}:{hi}] AS v
              FROM embeddings),
     s{s}c0 AS (SELECT vec_id::INT AS cluster, v AS cvec
                FROM e{s} WHERE vec_id < {PQ_K})"""
-        for i in range(1, PQ_ITERS + 1):
-            prefix += f""",
+    for i in range(1, PQ_ITERS + 1):
+        sql += f""",
     s{s}a{i} AS (
         SELECT vec_id, v, cluster FROM (
             SELECT e.vec_id, e.v, c.cluster,
@@ -719,6 +761,40 @@ def _pq_oracle() -> str:
     s{s}c{i} AS (
         SELECT c.cluster, COALESCE(u.cvec, c.cvec) AS cvec
         FROM s{s}c{i-1} c LEFT JOIN s{s}u{i} u USING (cluster))"""
+    return sql
+
+
+def _pq_train(e_full: DataFrame, s: int):
+    """(e, cents): subspace-s slices ``v`` and their Lloyd-trained
+    centroids (cluster, cvec) — ``_pq_train_sql`` in DataFrame form."""
+    dim = 64 // PQ_SUBSPACES
+    e = e_full.select(
+        "vec_id",
+        F.transform(F.slice("embedding", s * dim + 1, dim),
+                    lambda x: x.cast("double")).alias("v"))
+    cents = (e.where(F.col("vec_id") < PQ_K)
+             .select(F.col("vec_id").cast("int").alias("cluster"),
+                     F.col("v").alias("cvec")))
+    for _ in range(PQ_ITERS):
+        assigned = _assign(e, cents)
+        upd = (assigned
+               .select("cluster", F.posexplode("v").alias("dim", "x"))
+               .groupBy("cluster", "dim")
+               .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
+               .groupBy("cluster")
+               .agg(F.transform(
+                   F.array_sort(F.collect_list(F.struct("dim", "av"))),
+                   lambda st: st.av).alias("ucvec")))
+        cents = (cents.join(upd, "cluster", "left")
+                 .select("cluster",
+                         F.coalesce("ucvec", "cvec").alias("cvec")))
+    return e, cents
+
+
+def _pq_oracle() -> str:
+    blocks = []
+    for s in range(PQ_SUBSPACES):
+        prefix = _pq_train_sql(s)
         prefix += f""",
     s{s}final AS (
         SELECT {s} AS subspace, cluster, dist FROM (
@@ -755,30 +831,10 @@ def _pq_oracle() -> str:
         "four trainings.",
 )
 def q_embed_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim = 64 // PQ_SUBSPACES
     e_full = Catalog(spark, sf_dir).table("embeddings")
     out = None
     for s in range(PQ_SUBSPACES):
-        e = e_full.select(
-            "vec_id",
-            F.transform(F.slice("embedding", s * dim + 1, dim),
-                        lambda x: x.cast("double")).alias("v"))
-        cents = (e.where(F.col("vec_id") < PQ_K)
-                 .select(F.col("vec_id").cast("int").alias("cluster"),
-                         F.col("v").alias("cvec")))
-        for _ in range(PQ_ITERS):
-            assigned = _assign(e, cents)
-            upd = (assigned
-                   .select("cluster", F.posexplode("v").alias("dim", "x"))
-                   .groupBy("cluster", "dim")
-                   .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
-                   .groupBy("cluster")
-                   .agg(F.transform(
-                       F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                       lambda st: st.av).alias("ucvec")))
-            cents = (cents.join(upd, "cluster", "left")
-                     .select("cluster",
-                             F.coalesce("ucvec", "cvec").alias("cvec")))
+        e, cents = _pq_train(e_full, s)
         fin = (_assign(e, cents)
                .groupBy("cluster")
                .agg(F.count(F.lit(1)).alias("n_vecs"),
@@ -791,33 +847,9 @@ def q_embed_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_search_oracle() -> str:
-    dim = 64 // PQ_SUBSPACES
     blocks = []
     for s in range(PQ_SUBSPACES):
-        lo, hi = s * dim + 1, (s + 1) * dim
-        prefix = f"""
-    e{s} AS (SELECT vec_id, (embedding::DOUBLE[])[{lo}:{hi}] AS v
-             FROM embeddings),
-    s{s}c0 AS (SELECT vec_id::INT AS cluster, v AS cvec
-               FROM e{s} WHERE vec_id < {PQ_K})"""
-        for i in range(1, PQ_ITERS + 1):
-            prefix += f""",
-    s{s}a{i} AS (
-        SELECT vec_id, v, cluster FROM (
-            SELECT e.vec_id, e.v, c.cluster,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_distance(e.v, c.cvec), c.cluster) AS rn
-            FROM e{s} e CROSS JOIN s{s}c{i-1} c) WHERE rn = 1),
-    s{s}u{i} AS (
-        SELECT cluster, list(av ORDER BY dim) AS cvec FROM (
-            SELECT cluster, u.i AS dim, ROUND(AVG(v[u.i + 1]), {CENT_DP}) AS av
-            FROM s{s}a{i}, unnest(range(0, len(v))) AS u(i)
-            GROUP BY cluster, u.i)
-        GROUP BY cluster),
-    s{s}c{i} AS (
-        SELECT c.cluster, COALESCE(u.cvec, c.cvec) AS cvec
-        FROM s{s}c{i-1} c LEFT JOIN s{s}u{i} u USING (cluster))"""
+        prefix = _pq_train_sql(s)
         prefix += f""",
     s{s}code AS (
         SELECT vec_id, cluster FROM (
@@ -862,31 +894,11 @@ def _pq_search_oracle() -> str:
         "billion-vector ANN fit a cluster.",
 )
 def q_embed_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim = 64 // PQ_SUBSPACES
     e_full = Catalog(spark, sf_dir).table("embeddings")
     codes = None
     qdist = None
     for s in range(PQ_SUBSPACES):
-        e = e_full.select(
-            "vec_id",
-            F.transform(F.slice("embedding", s * dim + 1, dim),
-                        lambda x: x.cast("double")).alias("v"))
-        cents = (e.where(F.col("vec_id") < PQ_K)
-                 .select(F.col("vec_id").cast("int").alias("cluster"),
-                         F.col("v").alias("cvec")))
-        for _ in range(PQ_ITERS):
-            assigned = _assign(e, cents)
-            upd = (assigned
-                   .select("cluster", F.posexplode("v").alias("dim", "x"))
-                   .groupBy("cluster", "dim")
-                   .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
-                   .groupBy("cluster")
-                   .agg(F.transform(
-                       F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                       lambda st: st.av).alias("ucvec")))
-            cents = (cents.join(upd, "cluster", "left")
-                     .select("cluster",
-                             F.coalesce("ucvec", "cvec").alias("cvec")))
+        e, cents = _pq_train(e_full, s)
         code_s = (_assign(e, cents)
                   .select("vec_id", F.lit(s).alias("s"), "cluster"))
         sq = F.aggregate(
@@ -1040,27 +1052,7 @@ def q_dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embed_pca_explained_variance(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select(F.col("embedding").alias("v")))
-    partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
-    cov = (F.col("sxy") / F.col("n")
-           - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n")))
-    upper = (partials.groupBy("i", "j")
-             .agg(F.sum("n").alias("n"), F.sum("sxy").alias("sxy"),
-                  F.sum("si").alias("si"), F.sum("sj").alias("sj"))
-             .select("i", "j", F.round(cov, COV_DP).alias("c")))
-    full = upper.union(
-        upper.where(F.col("i") < F.col("j"))
-        .select(F.col("j").alias("i"), F.col("i").alias("j"), F.col("c")))
-    v = local_df(spark, [(0, 1.0)], "dim int, val double")
-    for _ in range(N_POWER):
-        w = (full.join(F.broadcast(v), full.j == v.dim)
-             .groupBy(F.col("i").alias("dim"))
-             .agg(F.sum(F.col("c") * F.col("val")).alias("w")))
-        nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("n"))
-        v = (w.crossJoin(F.broadcast(nrm))
-             .select("dim", F.round(F.col("w") / F.col("n"), COV_DP)
-                     .alias("val")))
+    full, v = _power_iteration(spark, sf_dir)
     va = v.select(F.col("dim").alias("ia"), F.col("val").alias("xa"))
     vb = v.select(F.col("dim").alias("ib"), F.col("val").alias("xb"))
     lam = (full.join(F.broadcast(va), full.i == F.col("ia"))
@@ -1126,30 +1118,8 @@ def histogram_auc(j: DataFrame) -> DataFrame:
 
 @register(
     "q_classifier_auc",
-    oracle=None,  # replaced below — needs _stop_sql from queries.text
-    doc="",
-)
-def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    return histogram_auc(scores.join(lab, "doc_id"))
-
-
-def _install_auc_oracle() -> None:
-    """The AUC oracle needs queries.text's stopword fragment; registering
-    it here (instead of in the decorator literal) avoids a circular
-    import at module load."""
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-    from datalake_project_spark.queries.text import _stop_sql
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    lab AS (SELECT doc_id, ({_stop_sql('en')}) >= 0.08 AS label FROM tok),
+    oracle=f"""
+    WITH {_CLS_LAB_CTE},
     j AS (SELECT c.prob, CASE WHEN l.label THEN 1 ELSE 0 END AS li
           FROM cls c JOIN lab l USING (doc_id)),
     r AS (SELECT li,
@@ -1164,8 +1134,8 @@ def _install_auc_oracle() -> None:
            ROUND((rsum - p * (p + 1) / 2.0) / (p::DOUBLE * n::DOUBLE), 6)
            + 0.0 AS auc
     FROM t
-    """
-    doc = (
+    """,
+    doc=(
         "ROC-AUC of the linear quality classifier against a held-out "
         "heuristic label (en-stopword ratio >= 0.08), computed as the "
         "tie-corrected Mann-Whitney U statistic. The engine side never "
@@ -1178,32 +1148,64 @@ def _install_auc_oracle() -> None:
         "offset join), so no single-partition WindowExec appears even "
         "on the bounded table. At 100 TB the corpus pass is the same "
         "explode+join+agg the classifier already pays; the AUC overhead "
-        "is a 10^4-row aggregate."
-    )
-    spec = REGISTRY["q_classifier_auc"]
-    REGISTRY["q_classifier_auc"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
+        "is a 10^4-row aggregate."),
+)
+def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return histogram_auc(_labeled_scores(spark, sf_dir))
 
-
-_install_auc_oracle()
 
 
 @register(
     "q_classifier_lift_gains",
-    oracle=None,  # installed below — needs _stop_sql from queries.text
-    doc="",
+    oracle=f"""
+    WITH {_CLS_LAB_CTE},
+    j AS (SELECT c.prob, CASE WHEN l.label THEN 1 ELSE 0 END AS li
+          FROM cls c JOIN lab l USING (doc_id)),
+    tot AS (SELECT COUNT(*) AS nn, CAST(SUM(li) AS BIGINT) AS pp FROM j),
+    h AS (SELECT prob, COUNT(*) AS cnt, CAST(SUM(li) AS BIGINT) AS pos
+          FROM j GROUP BY prob),
+    r AS (SELECT prob, cnt, pos,
+                 COALESCE(SUM(cnt) OVER (
+                     ORDER BY prob DESC
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                     0) AS cum_excl
+          FROM h),
+    dd AS (SELECT 1 + CAST(FLOOR(cum_excl * 10 / tot.nn) AS BIGINT)
+                   AS decile, cnt, pos
+           FROM r CROSS JOIN tot),
+    g AS (SELECT decile, CAST(SUM(cnt) AS BIGINT) AS n_docs,
+                 CAST(SUM(pos) AS BIGINT) AS n_pos
+          FROM dd GROUP BY decile),
+    c AS (SELECT a.decile, a.n_docs, a.n_pos,
+                 CAST(SUM(b.n_pos) AS BIGINT) AS cum_pos,
+                 CAST(SUM(b.n_docs) AS BIGINT) AS cum_docs
+          FROM g a JOIN g b ON b.decile <= a.decile
+          GROUP BY a.decile, a.n_docs, a.n_pos)
+    SELECT decile, n_docs, n_pos, cum_pos,
+           ROUND(cum_pos::DOUBLE / tot.pp, 6) AS gain,
+           ROUND(cum_pos * tot.nn / (cum_docs::DOUBLE * tot.pp), 6) AS lift
+    FROM c CROSS JOIN tot
+    ORDER BY decile
+    """,
+    doc=(
+        "Decile lift/gains table for the linear quality classifier — "
+        "the scoring deliverable next to ROC-AUC (q_classifier_auc) "
+        "and the calibration curve: rank docs by score descending, cut "
+        "the POPULATION into tenths (score ties assigned whole to the "
+        "decile of their first doc via the exclusive prefix count — "
+        "deterministic in both engines), report per-decile positives, "
+        "cumulative gain (share of all positives captured) and lift "
+        "(capture rate vs random). The engine never globally ranks "
+        "the corpus: scores collapse to the bounded 4-dp histogram, "
+        "the score-desc prefix count runs decile-sharded (per-shard "
+        "windows + broadcast offsets), and the 10-row cumulative is a "
+        "bounded broadcast self-join. All quantities are exact "
+        "integer ratios rounded once."),
 )
 def q_classifier_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id")
+    j = _labeled_scores(spark, sf_dir)
     hist = (j.groupBy("prob")
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.count(F.when(F.col("label"), 1)).alias("pos")))
@@ -1248,63 +1250,6 @@ def q_classifier_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
                                * F.col("pp")), 6).alias("lift"))
             .orderBy("decile"))
 
-
-def _install_lift_oracle() -> None:
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-    from datalake_project_spark.queries.text import _stop_sql
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    lab AS (SELECT doc_id, ({_stop_sql("en")}) >= 0.08 AS label FROM tok),
-    j AS (SELECT c.prob, CASE WHEN l.label THEN 1 ELSE 0 END AS li
-          FROM cls c JOIN lab l USING (doc_id)),
-    tot AS (SELECT COUNT(*) AS nn, CAST(SUM(li) AS BIGINT) AS pp FROM j),
-    h AS (SELECT prob, COUNT(*) AS cnt, CAST(SUM(li) AS BIGINT) AS pos
-          FROM j GROUP BY prob),
-    r AS (SELECT prob, cnt, pos,
-                 COALESCE(SUM(cnt) OVER (
-                     ORDER BY prob DESC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS cum_excl
-          FROM h),
-    dd AS (SELECT 1 + CAST(FLOOR(cum_excl * 10 / tot.nn) AS BIGINT)
-                   AS decile, cnt, pos
-           FROM r CROSS JOIN tot),
-    g AS (SELECT decile, CAST(SUM(cnt) AS BIGINT) AS n_docs,
-                 CAST(SUM(pos) AS BIGINT) AS n_pos
-          FROM dd GROUP BY decile),
-    c AS (SELECT a.decile, a.n_docs, a.n_pos,
-                 CAST(SUM(b.n_pos) AS BIGINT) AS cum_pos,
-                 CAST(SUM(b.n_docs) AS BIGINT) AS cum_docs
-          FROM g a JOIN g b ON b.decile <= a.decile
-          GROUP BY a.decile, a.n_docs, a.n_pos)
-    SELECT decile, n_docs, n_pos, cum_pos,
-           ROUND(cum_pos::DOUBLE / tot.pp, 6) AS gain,
-           ROUND(cum_pos * tot.nn / (cum_docs::DOUBLE * tot.pp), 6) AS lift
-    FROM c CROSS JOIN tot
-    ORDER BY decile
-    """
-    doc = (
-        "Decile lift/gains table for the linear quality classifier — "
-        "the scoring deliverable next to ROC-AUC (q_classifier_auc) "
-        "and the calibration curve: rank docs by score descending, cut "
-        "the POPULATION into tenths (score ties assigned whole to the "
-        "decile of their first doc via the exclusive prefix count — "
-        "deterministic in both engines), report per-decile positives, "
-        "cumulative gain (share of all positives captured) and lift "
-        "(capture rate vs random). The engine never globally ranks "
-        "the corpus: scores collapse to the bounded 4-dp histogram, "
-        "the score-desc prefix count runs decile-sharded (per-shard "
-        "windows + broadcast offsets), and the 10-row cumulative is a "
-        "bounded broadcast self-join. All quantities are exact "
-        "integer ratios rounded once."
-    )
-    spec = REGISTRY["q_classifier_lift_gains"]
-    REGISTRY["q_classifier_lift_gains"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
-
-
-_install_lift_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -1552,27 +1497,6 @@ def q_embed_mahalanobis_outliers(spark: SparkSession,
                     .alias("mahalanobis_sq")))
 
 
-_QUAL_SQL = """
-        SELECT doc_id,
-               ROUND(GREATEST(0.0, LEAST(1.0,
-                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
-                   + 0.3 * LEAST(1.0, (CASE WHEN len(toks) > 0 THEN
-                       len(list_filter(toks, t -> t IN
-                           ('the','a','and','of','to','in','is','it')))::DOUBLE
-                       / len(toks)::DOUBLE ELSE 0.0 END) * 5.0)
-                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
-                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
-                   - (CASE WHEN (CASE WHEN len(toks) > 0 THEN
-                        list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                        / len(toks)::DOUBLE ELSE 0.0 END) < 2.0
-                      OR (CASE WHEN len(toks) > 0 THEN
-                        list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                        / len(toks)::DOUBLE ELSE 0.0 END) > 12.0
-                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS quality
-        FROM tok"""
-
-
 @register(
     "q_classifier_conformal",
     oracle=f"""
@@ -1618,15 +1542,7 @@ _QUAL_SQL = """
         "value-checked exactly.",
 )
 def q_classifier_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    cls = _classifier_scores(spark, sf_dir)
-    d = Catalog(spark, sf_dir).table("documents")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-        .alias("quality"))
-    pts = (cls.join(qual, "doc_id")
+    pts = (_with_quality(spark, sf_dir)
            .select("doc_id",
                    (F.round(F.lit(1.0) - F.col("prob"), 4) + F.lit(0.0))
                    .alias("s"),
@@ -1763,18 +1679,44 @@ def q_recs_als_halfstep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_classifier_mcc",
-    oracle=None,  # installed below — needs _stop_sql from queries.text
-    doc="",
+    oracle=f"""
+    WITH {_CLS_LAB_CTE},
+    j AS (SELECT c.prob >= 0.5 AS pred, l.label
+          FROM cls c JOIN lab l USING (doc_id)),
+    m AS (SELECT
+        SUM(CASE WHEN pred AND label THEN 1 ELSE 0 END) AS tp,
+        SUM(CASE WHEN pred AND NOT label THEN 1 ELSE 0 END) AS fp,
+        SUM(CASE WHEN NOT pred AND NOT label THEN 1 ELSE 0 END) AS tn,
+        SUM(CASE WHEN NOT pred AND label THEN 1 ELSE 0 END) AS fn
+        FROM j)
+    SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+           CAST(tn AS BIGINT) AS tn, CAST(fn AS BIGINT) AS fn,
+           ROUND((tp + tn)::DOUBLE / (tp + fp + tn + fn), 6) AS accuracy,
+           CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
+                ELSE ROUND(2 * tp::DOUBLE / (2 * tp + fp + fn), 6)
+           END AS f1,
+           CASE WHEN (tp+fp)*(tp+fn)*(tn+fp)*(tn+fn) = 0 THEN NULL
+                ELSE ROUND((tp * tn - fp * fn)::DOUBLE
+                           / SQRT(((tp+fp)*(tp+fn)*(tn+fp)*(tn+fn))
+                                  ::DOUBLE), 6)
+           END AS mcc
+    FROM m
+    """,
+    doc=(
+        "Matthews correlation coefficient (plus accuracy/F1 and the raw "
+        "confusion matrix) for the quality classifier at the 0.5 "
+        "operating point, against the held-out stopword-ratio label. "
+        "MCC is the single scalar that stays honest under class "
+        "imbalance (it is the Pearson correlation of the binary "
+        "pred/label vectors; accuracy and even F1 can look good on a "
+        "skewed corpus-quality split, MCC cannot). All four cells are "
+        "exact integers from ONE scan-aggregate — no per-row metric "
+        "state — and the scalar derivations share the identical "
+        "closed-form expression on both engines. Zero-margin "
+        "denominators return NULL identically."),
 )
 def q_classifier_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id").select(
+    j = _labeled_scores(spark, sf_dir).select(
         (F.col("prob") >= 0.5).alias("pred"), "label")
     m = j.agg(
         F.sum(F.when(F.col("pred") & F.col("label"), 1).otherwise(0))
@@ -1801,54 +1743,6 @@ def q_classifier_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         f1.alias("f1"), mcc.alias("mcc"))
 
 
-def _install_mcc_oracle() -> None:
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-    from datalake_project_spark.queries.text import _stop_sql
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    lab AS (SELECT doc_id, ({_stop_sql('en')}) >= 0.08 AS label FROM tok),
-    j AS (SELECT c.prob >= 0.5 AS pred, l.label
-          FROM cls c JOIN lab l USING (doc_id)),
-    m AS (SELECT
-        SUM(CASE WHEN pred AND label THEN 1 ELSE 0 END) AS tp,
-        SUM(CASE WHEN pred AND NOT label THEN 1 ELSE 0 END) AS fp,
-        SUM(CASE WHEN NOT pred AND NOT label THEN 1 ELSE 0 END) AS tn,
-        SUM(CASE WHEN NOT pred AND label THEN 1 ELSE 0 END) AS fn
-        FROM j)
-    SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(tn AS BIGINT) AS tn, CAST(fn AS BIGINT) AS fn,
-           ROUND((tp + tn)::DOUBLE / (tp + fp + tn + fn), 6) AS accuracy,
-           CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-                ELSE ROUND(2 * tp::DOUBLE / (2 * tp + fp + fn), 6)
-           END AS f1,
-           CASE WHEN (tp+fp)*(tp+fn)*(tn+fp)*(tn+fn) = 0 THEN NULL
-                ELSE ROUND((tp * tn - fp * fn)::DOUBLE
-                           / SQRT(((tp+fp)*(tp+fn)*(tn+fp)*(tn+fn))
-                                  ::DOUBLE), 6)
-           END AS mcc
-    FROM m
-    """
-    doc = (
-        "Matthews correlation coefficient (plus accuracy/F1 and the raw "
-        "confusion matrix) for the quality classifier at the 0.5 "
-        "operating point, against the held-out stopword-ratio label. "
-        "MCC is the single scalar that stays honest under class "
-        "imbalance (it is the Pearson correlation of the binary "
-        "pred/label vectors; accuracy and even F1 can look good on a "
-        "skewed corpus-quality split, MCC cannot). All four cells are "
-        "exact integers from ONE scan-aggregate — no per-row metric "
-        "state — and the scalar derivations share the identical "
-        "closed-form expression on both engines. Zero-margin "
-        "denominators return NULL identically."
-    )
-    spec = REGISTRY["q_classifier_mcc"]
-    REGISTRY["q_classifier_mcc"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
-
-
-_install_mcc_oracle()
-
 
 # --------------------------------------------------------------------------
 # PR-AUC (average precision) over the score histogram
@@ -1856,20 +1750,40 @@ _install_mcc_oracle()
 
 @register(
     "q_classifier_pr_auc",
-    oracle=None,  # installed below — needs _stop_sql from queries.text
-    doc="",
+    oracle=f"""
+    WITH {_CLS_LAB_CTE},
+    j AS (SELECT c.prob, l.label FROM cls c JOIN lab l USING (doc_id)),
+    hist AS (SELECT prob,
+                    COUNT(CASE WHEN label THEN 1 END) AS pos,
+                    COUNT(CASE WHEN NOT label THEN 1 END) AS neg
+             FROM j GROUP BY prob),
+    r AS (SELECT prob, pos,
+                 SUM(pos) OVER (ORDER BY prob DESC) AS ctp,
+                 SUM(neg) OVER (ORDER BY prob DESC) AS cfp
+          FROM hist),
+    p_ AS (SELECT SUM(pos) AS p FROM hist)
+    SELECT CAST(p AS BIGINT) AS n_pos,
+           ROUND(SUM((pos::DOUBLE / p) * (ctp::DOUBLE / (ctp + cfp))), 6)
+               AS pr_auc
+    FROM r CROSS JOIN p_
+    GROUP BY p
+    """,
+    doc=(
+        "PR-AUC (average precision, step interpolation — scikit-learn's "
+        "average_precision_score definition: AP = sum_s dR(s) * P(s) "
+        "descending over score thresholds) for the quality classifier "
+        "against the stopword-ratio label. The right curve for rare-"
+        "positive regimes (corpus quality triage, dedup candidate "
+        "review) where ROC-AUC's false-positive axis saturates. Scores "
+        "collapse to the same bounded 4-dp histogram as q_classifier_"
+        "auc, and the descending cumulative TP/FP prefix uses the "
+        "identical decile-sharded window + broadcast-offset pattern — "
+        "no single-partition exchange; the corpus pays one scan."),
 )
 def q_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id")
+    j = _labeled_scores(spark, sf_dir)
     hist = (j.groupBy("prob")
             .agg(F.count(F.when(F.col("label"), 1)).alias("pos"),
                  F.count(F.when(~F.col("label"), 1)).alias("neg")))
@@ -1902,48 +1816,6 @@ def q_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   / (F.col("ctp") + F.col("cfp")))), 6)
                  .alias("pr_auc")))
 
-
-def _install_pr_auc_oracle() -> None:
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-    from datalake_project_spark.queries.text import _stop_sql
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    lab AS (SELECT doc_id, ({_stop_sql('en')}) >= 0.08 AS label FROM tok),
-    j AS (SELECT c.prob, l.label FROM cls c JOIN lab l USING (doc_id)),
-    hist AS (SELECT prob,
-                    COUNT(CASE WHEN label THEN 1 END) AS pos,
-                    COUNT(CASE WHEN NOT label THEN 1 END) AS neg
-             FROM j GROUP BY prob),
-    r AS (SELECT prob, pos,
-                 SUM(pos) OVER (ORDER BY prob DESC) AS ctp,
-                 SUM(neg) OVER (ORDER BY prob DESC) AS cfp
-          FROM hist),
-    p_ AS (SELECT SUM(pos) AS p FROM hist)
-    SELECT CAST(p AS BIGINT) AS n_pos,
-           ROUND(SUM((pos::DOUBLE / p) * (ctp::DOUBLE / (ctp + cfp))), 6)
-               AS pr_auc
-    FROM r CROSS JOIN p_
-    GROUP BY p
-    """
-    doc = (
-        "PR-AUC (average precision, step interpolation — scikit-learn's "
-        "average_precision_score definition: AP = sum_s dR(s) * P(s) "
-        "descending over score thresholds) for the quality classifier "
-        "against the stopword-ratio label. The right curve for rare-"
-        "positive regimes (corpus quality triage, dedup candidate "
-        "review) where ROC-AUC's false-positive axis saturates. Scores "
-        "collapse to the same bounded 4-dp histogram as q_classifier_"
-        "auc, and the descending cumulative TP/FP prefix uses the "
-        "identical decile-sharded window + broadcast-offset pattern — "
-        "no single-partition exchange; the corpus pays one scan."
-    )
-    spec = REGISTRY["q_classifier_pr_auc"]
-    REGISTRY["q_classifier_pr_auc"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
-
-
-_install_pr_auc_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -2054,16 +1926,8 @@ def q_embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         "enough to substitute one labeler for the other.",
 )
 def q_stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select(
-        "doc_id", (F.col("prob") >= 0.5).alias("r1"))
-    qual = d.select(
-        "doc_id",
-        (F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         >= 0.5).alias("r2"))
-    m = (cls.join(qual, "doc_id")
+    m = (_with_quality(spark, sf_dir, lambda q: (q >= 0.5).alias("r2"),
+                       (F.col("prob") >= 0.5).alias("r1"))
          .agg(F.count(F.lit(1)).alias("n"),
               F.sum(F.when(F.col("r1") & F.col("r2"), 1).otherwise(0))
                .alias("a"),
@@ -2127,16 +1991,8 @@ def q_stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "degenerate b+c = 0 yields NULL identically on both engines.",
 )
 def q_stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select(
-        "doc_id", (F.col("prob") >= 0.5).alias("r1"))
-    qual = d.select(
-        "doc_id",
-        (F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         >= 0.5).alias("r2"))
-    m = (cls.join(qual, "doc_id")
+    m = (_with_quality(spark, sf_dir, lambda q: (q >= 0.5).alias("r2"),
+                       (F.col("prob") >= 0.5).alias("r1"))
          .agg(F.sum(F.when(F.col("r1") & ~F.col("r2"), 1).otherwise(0))
               .alias("b"),
               F.sum(F.when(~F.col("r1") & F.col("r2"), 1).otherwise(0))
@@ -2159,18 +2015,43 @@ def q_stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_classifier_f1_sweep",
-    oracle=None,  # installed below — needs _stop_sql from queries.text
-    doc="",
+    oracle=f"""
+    WITH {_CLS_LAB_CTE},
+    j AS (SELECT c.prob, l.label FROM cls c JOIN lab l USING (doc_id)),
+    th AS (SELECT UNNEST([0.3, 0.4, 0.5, 0.6, 0.7]) AS threshold),
+    cells AS (
+        SELECT t.threshold,
+               SUM(CASE WHEN j.prob >= t.threshold AND j.label
+                        THEN 1 ELSE 0 END) AS tp,
+               SUM(CASE WHEN j.prob >= t.threshold AND NOT j.label
+                        THEN 1 ELSE 0 END) AS fp,
+               SUM(CASE WHEN j.prob < t.threshold AND j.label
+                        THEN 1 ELSE 0 END) AS fn
+        FROM th t CROSS JOIN j GROUP BY t.threshold)
+    SELECT threshold,
+           CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+           CAST(fn AS BIGINT) AS fn,
+           CASE WHEN tp + fp = 0 THEN NULL
+                ELSE ROUND(tp::DOUBLE / (tp + fp), 6) END AS precision,
+           CASE WHEN tp + fn = 0 THEN NULL
+                ELSE ROUND(tp::DOUBLE / (tp + fn), 6) END AS recall,
+           CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
+                ELSE ROUND(2 * tp::DOUBLE / (2 * tp + fp + fn), 6)
+           END AS f1
+    FROM cells ORDER BY threshold
+    """,
+    doc=(
+        "Precision/recall/F1 sweep over five operating thresholds for "
+        "the quality classifier — the table that PICKS the threshold "
+        "the fixed-point metrics (q_classifier_mcc at 0.5, the "
+        "PR-AUC's integral view) then characterize. All cells are "
+        "conditional integer sums over the bounded 4-dp score "
+        "histogram with the thresholds broadcast — one corpus pass, "
+        "five operating points, no re-scoring per threshold (the "
+        "session-gap-sweep pattern applied to a classifier)."),
 )
 def q_classifier_f1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    hist = (scores.join(lab, "doc_id")
+    hist = (_labeled_scores(spark, sf_dir)
             .groupBy("prob")
             .agg(F.count(F.when(F.col("label"), 1)).alias("pos"),
                  F.count(F.when(~F.col("label"), 1)).alias("neg")))
@@ -2208,53 +2089,6 @@ def q_classifier_f1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("threshold"))
 
 
-def _install_f1_sweep_oracle() -> None:
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-    from datalake_project_spark.queries.text import _stop_sql
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    lab AS (SELECT doc_id, ({_stop_sql('en')}) >= 0.08 AS label FROM tok),
-    j AS (SELECT c.prob, l.label FROM cls c JOIN lab l USING (doc_id)),
-    th AS (SELECT UNNEST([0.3, 0.4, 0.5, 0.6, 0.7]) AS threshold),
-    cells AS (
-        SELECT t.threshold,
-               SUM(CASE WHEN j.prob >= t.threshold AND j.label
-                        THEN 1 ELSE 0 END) AS tp,
-               SUM(CASE WHEN j.prob >= t.threshold AND NOT j.label
-                        THEN 1 ELSE 0 END) AS fp,
-               SUM(CASE WHEN j.prob < t.threshold AND j.label
-                        THEN 1 ELSE 0 END) AS fn
-        FROM th t CROSS JOIN j GROUP BY t.threshold)
-    SELECT threshold,
-           CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(fn AS BIGINT) AS fn,
-           CASE WHEN tp + fp = 0 THEN NULL
-                ELSE ROUND(tp::DOUBLE / (tp + fp), 6) END AS precision,
-           CASE WHEN tp + fn = 0 THEN NULL
-                ELSE ROUND(tp::DOUBLE / (tp + fn), 6) END AS recall,
-           CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-                ELSE ROUND(2 * tp::DOUBLE / (2 * tp + fp + fn), 6)
-           END AS f1
-    FROM cells ORDER BY threshold
-    """
-    doc = (
-        "Precision/recall/F1 sweep over five operating thresholds for "
-        "the quality classifier — the table that PICKS the threshold "
-        "the fixed-point metrics (q_classifier_mcc at 0.5, the "
-        "PR-AUC's integral view) then characterize. All cells are "
-        "conditional integer sums over the bounded 4-dp score "
-        "histogram with the thresholds broadcast — one corpus pass, "
-        "five operating points, no re-scoring per threshold (the "
-        "session-gap-sweep pattern applied to a classifier)."
-    )
-    spec = REGISTRY["q_classifier_f1_sweep"]
-    REGISTRY["q_classifier_f1_sweep"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
-
-
-_install_f1_sweep_oracle()
-
 
 # --------------------------------------------------------------------------
 # Bland–Altman agreement — comparing two measurements, not two classifiers
@@ -2262,21 +2096,48 @@ _install_f1_sweep_oracle()
 
 @register(
     "q_stats_bland_altman",
-    oracle=None,  # installed below — needs _stop_sql via _QUAL_SQL context
-    doc="",
+    oracle=f"""
+    WITH {_CLS_CTE},
+    qual AS ({_QUAL_SQL}),
+    j AS (SELECT CAST(ROUND(c.prob * 10000)
+                      - ROUND(q.quality * 10000) AS BIGINT) AS dd
+          FROM cls c JOIN qual q USING (doc_id)),
+    s AS (SELECT COUNT(*) AS n, SUM(dd) AS s1, SUM(dd * dd) AS s2
+          FROM j),
+    m AS (SELECT n, CAST(s1 AS DOUBLE) / n AS mu,
+                 SQRT((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n)
+                      / (n - 1)) AS sd
+          FROM s),
+    w AS (SELECT COUNT(*) AS n_within
+          FROM j CROSS JOIN m
+          WHERE dd BETWEEN mu - 1.96 * sd AND mu + 1.96 * sd)
+    SELECT CAST(m.n AS BIGINT) AS n,
+           ROUND(mu / 10000, 6) AS bias,
+           ROUND((mu - 1.96 * sd) / 10000, 6) AS loa_low,
+           ROUND((mu + 1.96 * sd) / 10000, 6) AS loa_high,
+           CAST(w.n_within AS BIGINT) AS n_within_loa,
+           ROUND(w.n_within::DOUBLE / m.n, 4) AS pct_within
+    FROM m, w
+    """,
+    doc=(
+        "Bland-Altman agreement analysis between the trained quality "
+        "classifier's probability and the closed-form quality "
+        "heuristic as CONTINUOUS measurements — the method-comparison "
+        "standard (medicine's answer to 'can instrument B replace "
+        "instrument A'): bias = mean difference, 95% limits of "
+        "agreement = bias +- 1.96 sd, and the share of documents "
+        "whose disagreement stays inside the limits (~95% if the "
+        "differences are roughly normal). Completes the labeler-"
+        "comparison suite: kappa/McNemar compare the THRESHOLDED "
+        "decisions, Bland-Altman compares the scores themselves. "
+        "4-dp scores scale to integer ten-thousandths so every sum "
+        "is BIGINT-exact; one pass for moments + one broadcast-"
+        "limits recount."),
 )
 def q_stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         .alias("quality"))
     # 4-dp scores scale to exact integer ten-thousandths: every sum
     # below is BIGINT-exact and summation-order-free.
-    j = (cls.join(qual, "doc_id")
+    j = (_with_quality(spark, sf_dir, lambda q: q.alias("quality"), "prob")
          .select((F.round(F.col("prob") * 10000)
                   - F.round(F.col("quality") * 10000))
                  .cast("long").alias("dd")))
@@ -2312,54 +2173,6 @@ def q_stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.col("n_within").cast("double") / n, 4)
                      .alias("pct_within")))
 
-
-def _install_bland_altman_oracle() -> None:
-    from datalake_project_spark.queries import REGISTRY, QuerySpec
-
-    oracle = f"""
-    WITH {_CLS_CTE},
-    qual AS ({_QUAL_SQL}),
-    j AS (SELECT CAST(ROUND(c.prob * 10000)
-                      - ROUND(q.quality * 10000) AS BIGINT) AS dd
-          FROM cls c JOIN qual q USING (doc_id)),
-    s AS (SELECT COUNT(*) AS n, SUM(dd) AS s1, SUM(dd * dd) AS s2
-          FROM j),
-    m AS (SELECT n, CAST(s1 AS DOUBLE) / n AS mu,
-                 SQRT((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n)
-                      / (n - 1)) AS sd
-          FROM s),
-    w AS (SELECT COUNT(*) AS n_within
-          FROM j CROSS JOIN m
-          WHERE dd BETWEEN mu - 1.96 * sd AND mu + 1.96 * sd)
-    SELECT CAST(m.n AS BIGINT) AS n,
-           ROUND(mu / 10000, 6) AS bias,
-           ROUND((mu - 1.96 * sd) / 10000, 6) AS loa_low,
-           ROUND((mu + 1.96 * sd) / 10000, 6) AS loa_high,
-           CAST(w.n_within AS BIGINT) AS n_within_loa,
-           ROUND(w.n_within::DOUBLE / m.n, 4) AS pct_within
-    FROM m, w
-    """
-    doc = (
-        "Bland-Altman agreement analysis between the trained quality "
-        "classifier's probability and the closed-form quality "
-        "heuristic as CONTINUOUS measurements — the method-comparison "
-        "standard (medicine's answer to 'can instrument B replace "
-        "instrument A'): bias = mean difference, 95% limits of "
-        "agreement = bias +- 1.96 sd, and the share of documents "
-        "whose disagreement stays inside the limits (~95% if the "
-        "differences are roughly normal). Completes the labeler-"
-        "comparison suite: kappa/McNemar compare the THRESHOLDED "
-        "decisions, Bland-Altman compares the scores themselves. "
-        "4-dp scores scale to integer ten-thousandths so every sum "
-        "is BIGINT-exact; one pass for moments + one broadcast-"
-        "limits recount."
-    )
-    spec = REGISTRY["q_stats_bland_altman"]
-    REGISTRY["q_stats_bland_altman"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=oracle, doc=doc)
-
-
-_install_bland_altman_oracle()
 
 
 @register(

@@ -415,10 +415,10 @@ def q_multimodal_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("nb").cast("long").alias("shard_bytes")))
 
 
-@register(
-    "q_multimodal_dhash",
-    oracle="""
-    WITH m AS (
+# dHash inputs: per doc, the byte sums ``bs`` of 64 equal blocks of its
+# text (width ceil(n/64)) beside the next block's sum ``bs1``.
+_DHASH_BLOCKS_SQL = """
+    m AS (
         SELECT doc_id, text,
                octet_length(encode(text)) AS n,
                (octet_length(encode(text)) + 63) // 64 AS w
@@ -433,7 +433,12 @@ def q_multimodal_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     p AS (
         SELECT doc_id, n, k, bs,
                LEAD(bs) OVER (PARTITION BY doc_id ORDER BY k) AS bs1
-        FROM s),
+        FROM s),"""
+
+
+@register(
+    "q_multimodal_dhash",
+    oracle="WITH" + _DHASH_BLOCKS_SQL + """
     h AS (
         SELECT doc_id, MAX(n) AS n,
                CAST(SUM(CASE WHEN bs > bs1 THEN 1::BIGINT << k
@@ -540,23 +545,7 @@ def q_multimodal_payload_entropy(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-_DHASH_CTE = """
-    m AS (
-        SELECT doc_id, text,
-               octet_length(encode(text)) AS n,
-               (octet_length(encode(text)) + 63) // 64 AS w
-        FROM documents),
-    s AS (
-        SELECT doc_id, n, u.k,
-               COALESCE(list_sum(list_transform(
-                   [text[i] FOR i IN range(u.k * w + 1,
-                                           LEAST((u.k + 1) * w, n) + 1)],
-                   c -> unicode(c)::BIGINT)), 0) AS bs
-        FROM m, unnest(range(0, 64)) AS u(k)),
-    p AS (
-        SELECT doc_id, n, k, bs,
-               LEAD(bs) OVER (PARTITION BY doc_id ORDER BY k) AS bs1
-        FROM s),
+_DHASH_CTE = _DHASH_BLOCKS_SQL + """
     h AS (
         SELECT doc_id,
                CAST(SUM(CASE WHEN bs > bs1 THEN 1::BIGINT << k
@@ -746,9 +735,9 @@ def q_multimodal_byte_histogram(spark: SparkSession,
             .orderBy("source", "nibble"))
 
 
-@register(
-    "q_multimodal_cdc_chunking",
-    oracle="""
+# Content-defined chunk ends per non-empty doc: ub(doc_id, b) holds every
+# kept rolling-hash boundary plus the end of the text (_cdc_ends in SQL).
+_CDC_ENDS_SQL = """
     WITH d AS (SELECT doc_id, text, length(text) AS n
                FROM documents WHERE length(text) > 0),
     pos AS (
@@ -770,7 +759,43 @@ def q_multimodal_byte_histogram(spark: SparkSession,
     bnd AS (
         SELECT doc_id, b FROM kept
         UNION ALL SELECT doc_id, n FROM d),
-    ub AS (SELECT DISTINCT doc_id, b FROM bnd),
+    ub AS (SELECT DISTINCT doc_id, b FROM bnd)"""
+
+
+def _cdc_ends(payload: bytes) -> list[int]:
+    """Sorted chunk end offsets of ``payload``: every position where the
+    16-byte-window rolling hash ((acc*31 + byte) mod 1000003) is 0 mod
+    64, plus the payload end.
+
+    The window hash is a CORRELATION with the power kernel
+    (31^(w-1-j) mod P): the per-step fold equals
+    (sum byte_j * 31^(w-1-j)) mod P because mod distributes, so one
+    vectorized np.convolve per payload replaces an O(n*w) per-position
+    fold."""
+    import numpy as np
+
+    P, W = 1000003, 16
+    c = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+    n = len(c)
+    if n < W:
+        return [n]
+    kern = np.array([pow(31, j, P) for j in range(W)],
+                    dtype=np.int64)  # reversed power kernel
+    conv = np.convolve(c, kern, mode="valid") % P
+    pos = np.nonzero(conv % 64 == 0)[0] + W
+    # local min-gap guard (production CDC's min chunk size): drop a hash
+    # boundary closer than 16 bytes to the PREVIOUS RAW boundary — kills
+    # the tiny chunks whose digests collide across unrelated payloads;
+    # the trailing end-of-payload cut is always kept
+    raw = pos.tolist()
+    keep = [e for j, e in enumerate(raw)
+            if (e if j == 0 else e - raw[j - 1]) >= 16]
+    return sorted(set(keep) | {n})
+
+
+@register(
+    "q_multimodal_cdc_chunking",
+    oracle=_CDC_ENDS_SQL + """,
     ch AS (
         SELECT doc_id,
                COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0)
@@ -820,47 +845,23 @@ def q_multimodal_cdc_chunking(spark: SparkSession,
     media = (as_media(docs).select("payload")
              .where(F.octet_length("payload") > 0))
 
-    # The window hash is a CORRELATION with the power kernel
-    # (31^(w-1-j) mod P): the per-step fold ((acc*31 + byte) mod P)
-    # equals (sum byte_j * 31^(w-1-j)) mod P because mod distributes,
-    # so one vectorized np.convolve per payload replaces an O(n*w)
-    # per-position codegen fold (a first cut paid ~8 us/byte in
-    # whole-stage codegen; the Arrow lane is ~400x faster, the
-    # standard CDC-in-a-kernel deployment shape). Each Python batch
-    # ships back only (digest, len) rows — never payload bytes.
+    # Boundaries come from the vectorized _cdc_ends kernel (a first cut
+    # paid ~8 us/byte in whole-stage codegen; the Arrow lane is ~400x
+    # faster, the standard CDC-in-a-kernel deployment shape). Each
+    # Python batch ships back only (digest, len) rows — never payload
+    # bytes.
     def cdc_batches(batches):
         import hashlib
 
-        import numpy as np
         import pandas as pd
 
-        P, W = 1000003, 16
-        kern = np.array([pow(31, j, P) for j in range(W)],
-                        dtype=np.int64)  # reversed power kernel
         for pdf in batches:
             out = []
             for payload in pdf["payload"]:
                 if not payload:
                     continue
-                c = np.frombuffer(payload, dtype=np.uint8) \
-                      .astype(np.int64)
-                n = len(c)
-                ends = [n]
-                if n >= W:
-                    conv = np.convolve(c, kern, mode="valid") % P
-                    pos = np.nonzero(conv % 64 == 0)[0] + W
-                    # local min-gap guard (production CDC's min chunk
-                    # size): drop a hash boundary closer than 16 bytes
-                    # to the PREVIOUS RAW boundary — kills the tiny
-                    # chunks whose digests collide across unrelated
-                    # payloads; the trailing end-of-payload cut is
-                    # always kept
-                    raw = pos.tolist()
-                    keep = [e for j, e in enumerate(raw)
-                            if (e if j == 0 else e - raw[j - 1]) >= 16]
-                    ends = sorted(set(keep) | {n})
                 st = 0
-                for e in ends:
+                for e in _cdc_ends(payload):
                     if e > st:
                         out.append(
                             (hashlib.md5(payload[st:e]).hexdigest(),
@@ -882,29 +883,7 @@ def q_multimodal_cdc_chunking(spark: SparkSession,
 
 @register(
     "q_multimodal_cdc_near_dup",
-    oracle="""
-    WITH d AS (SELECT doc_id, text, length(text) AS n
-               FROM documents WHERE length(text) > 0),
-    pos AS (
-        SELECT doc_id, i,
-               list_reduce(list_prepend(0, list_transform(
-                   split(substr(text, CAST(i - 15 AS INT), 16), ''),
-                   x -> ord(x))),
-                   (a, b) -> (a * 31 + b) % 1000003) AS h
-        FROM d, LATERAL (SELECT unnest(range(16, n + 1)) AS i)),
-    raw AS (
-        SELECT doc_id, CAST(i AS BIGINT) AS b FROM pos
-        WHERE h % 64 = 0),
-    kept AS (
-        SELECT doc_id, b FROM (
-            SELECT doc_id, b,
-                   b - COALESCE(LAG(b) OVER (PARTITION BY doc_id
-                                             ORDER BY b), 0) AS gap
-            FROM raw) g WHERE gap >= 16),
-    bnd AS (
-        SELECT doc_id, b FROM kept
-        UNION ALL SELECT doc_id, n FROM d),
-    ub AS (SELECT DISTINCT doc_id, b FROM bnd),
+    oracle=_CDC_ENDS_SQL + """,
     cuts AS (
         SELECT doc_id,
                COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0)
@@ -955,36 +934,15 @@ def q_multimodal_cdc_near_dup(spark: SparkSession,
     def cdc_batches(batches):
         import hashlib
 
-        import numpy as np
         import pandas as pd
 
-        P, W = 1000003, 16
-        kern = np.array([pow(31, j, P) for j in range(W)],
-                        dtype=np.int64)
         for pdf in batches:
             out = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if not payload:
                     continue
-                c = np.frombuffer(payload, dtype=np.uint8) \
-                    .astype(np.int64)
-                n = len(c)
-                ends = [n]
-                if n >= W:
-                    conv = np.convolve(c, kern, mode="valid") % P
-                    pos = np.nonzero(conv % 64 == 0)[0] + W
-                    # local min-gap guard (production CDC's min chunk
-                    # size): drop a hash boundary closer than 16 bytes
-                    # to the PREVIOUS RAW boundary — kills the tiny
-                    # chunks whose digests collide across unrelated
-                    # payloads; the trailing end-of-payload cut is
-                    # always kept
-                    raw = pos.tolist()
-                    keep = [e for j, e in enumerate(raw)
-                            if (e if j == 0 else e - raw[j - 1]) >= 16]
-                    ends = sorted(set(keep) | {n})
                 st, seen = 0, set()
-                for e in ends:
+                for e in _cdc_ends(payload):
                     if e > st:
                         seen.add(hashlib.md5(payload[st:e]).hexdigest())
                         st = e

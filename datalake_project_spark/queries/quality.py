@@ -47,6 +47,50 @@ def _augmented(d: DataFrame) -> DataFrame:
     )
 
 
+# Heuristic quality score (functions/text.py quality_score) over ``tok``
+# rows (text, toks), rounded at 4 dp.
+_QUALITY_SQL = f"""ROUND(GREATEST(0.0, LEAST(1.0,
+                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
+                   + 0.3 * LEAST(1.0, ({_stop_sql('en')}) * 5.0)
+                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
+                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
+                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
+                   - (CASE WHEN len(toks) > 0 AND
+                           (list_sum(list_transform(toks, t -> len(t)))::DOUBLE
+                            / len(toks)::DOUBLE < 2.0
+                            OR list_sum(list_transform(toks, t -> len(t)))::DOUBLE
+                            / len(toks)::DOUBLE > 12.0)
+                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4)"""
+
+# Per-doc character entropy (nats) of lower(text), rounded at 4 dp.
+_ENTROPY_SQL = """
+    ent AS (
+        SELECT doc_id,
+               ROUND(LN(SUM(n)::DOUBLE) - SUM(n * LN(n::DOUBLE)) / SUM(n)::DOUBLE, 4)
+                   AS entropy
+        FROM (
+            SELECT doc_id, c, COUNT(*) AS n FROM (
+                SELECT doc_id,
+                       unnest([lower(text)[i] FOR i IN range(1, length(text) + 1)]) AS c
+                FROM documents WHERE length(text) > 0)
+            GROUP BY doc_id, c)
+        GROUP BY doc_id)"""
+
+
+def _char_entropy(d: DataFrame) -> DataFrame:
+    """``_ENTROPY_SQL``'s (doc_id, entropy) over non-empty documents."""
+    chars = (d.where(F.length("text") > 0)
+             .select("doc_id",
+                     F.explode(F.filter(F.split(F.lower("text"), ""),
+                                        lambda c: F.length(c) > 0)).alias("c")))
+    hist = chars.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
+    n_sum = F.sum("n")
+    return hist.groupBy("doc_id").agg(
+        F.round(F.log(n_sum.cast("double"))
+                - F.sum(F.col("n") * F.log(F.col("n").cast("double")))
+                / n_sum.cast("double"), 4).alias("entropy"))
+
+
 @register(
     "q_pii_redaction",
     oracle=f"""
@@ -162,30 +206,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat AS (
         SELECT doc_id,
                len(toks) AS n_tokens,
-               ROUND(GREATEST(0.0, LEAST(1.0,
-                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
-                   + 0.3 * LEAST(1.0, ({_stop_sql('en')}) * 5.0)
-                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
-                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
-                   - (CASE WHEN len(toks) > 0 AND
-                           (list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE < 2.0
-                            OR list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE > 12.0)
-                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS quality
-        FROM tok),
-    ent AS (
-        SELECT doc_id,
-               ROUND(LN(SUM(n)::DOUBLE) - SUM(n * LN(n::DOUBLE)) / SUM(n)::DOUBLE, 4)
-                   AS entropy
-        FROM (
-            SELECT doc_id, c, COUNT(*) AS n FROM (
-                SELECT doc_id,
-                       unnest([lower(text)[i] FOR i IN range(1, length(text) + 1)]) AS c
-                FROM documents WHERE length(text) > 0)
-            GROUP BY doc_id, c)
-        GROUP BY doc_id),
+               {_QUALITY_SQL} AS quality
+        FROM tok),{_ENTROPY_SQL},
     staged AS (
         SELECT f.n_tokens,
                (f.n_tokens BETWEEN 10 AND 5000) AS pass_len,
@@ -222,16 +244,7 @@ def q_corpus_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.round(quality_score(F.col("text"), toks), 4).alias("quality"))
-    chars = (d.where(F.length("text") > 0)
-             .select("doc_id",
-                     F.explode(F.filter(F.split(F.lower("text"), ""),
-                                        lambda c: F.length(c) > 0)).alias("c")))
-    hist = chars.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
-    n_sum = F.sum("n")
-    ent = hist.groupBy("doc_id").agg(
-        F.round(F.log(n_sum.cast("double"))
-                - F.sum(F.col("n") * F.log(F.col("n").cast("double")))
-                / n_sum.cast("double"), 4).alias("entropy"))
+    ent = _char_entropy(d)
     pass_len = F.col("n_tokens").between(10, 5000)
     pass_q = pass_len & (F.col("quality") >= 0.3)
     pass_all = pass_q & (F.coalesce(F.col("entropy"), F.lit(0.0)) >= 2.0)
@@ -255,18 +268,7 @@ ENS_W = (0.4, 0.4, 0.2)  # heuristic, classifier, normalized LM weights
     WITH tok AS (SELECT doc_id, text, {_SQL_TOKS} AS toks FROM documents),
     heur AS (
         SELECT doc_id,
-               ROUND(GREATEST(0.0, LEAST(1.0,
-                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
-                   + 0.3 * LEAST(1.0, ({_stop_sql('en')}) * 5.0)
-                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
-                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
-                   - (CASE WHEN len(toks) > 0 AND
-                           (list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE < 2.0
-                            OR list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE > 12.0)
-                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS h
+               {_QUALITY_SQL} AS h
         FROM tok),
     ex AS (SELECT doc_id, unnest(toks) AS t FROM tok WHERE len(toks) > 0),
     vocab AS (SELECT DISTINCT t, ((len(t) % 7) - 3) * 0.05::DOUBLE AS w
@@ -390,18 +392,7 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat AS (
         SELECT doc_id,
                CAST(len(toks) AS BIGINT) AS n_tokens,
-               ROUND(GREATEST(0.0, LEAST(1.0,
-                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
-                   + 0.3 * LEAST(1.0, ({_stop_sql('en')}) * 5.0)
-                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
-                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
-                   - (CASE WHEN len(toks) > 0 AND
-                           (list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE < 2.0
-                            OR list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE > 12.0)
-                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS quality
+               {_QUALITY_SQL} AS quality
         FROM tok),
     cuts AS (SELECT unnest([0.2, 0.3, 0.4, 0.5, 0.6]) AS threshold)
     SELECT threshold::DOUBLE AS threshold,
@@ -447,30 +438,8 @@ def q_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tok AS (SELECT doc_id, text, {_SQL_TOKS} AS toks FROM documents),
     feat AS (
         SELECT doc_id,
-               ROUND(GREATEST(0.0, LEAST(1.0,
-                   0.5 * LEAST(1.0, ln(1.0 + len(toks)::DOUBLE) / ln(101.0))
-                   + 0.3 * LEAST(1.0, ({_stop_sql('en')}) * 5.0)
-                   - 0.3 * LEAST(1.0, (CASE WHEN length(text) > 0 THEN
-                       length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text)::DOUBLE ELSE 0.0 END) * 4.0)
-                   - (CASE WHEN len(toks) > 0 AND
-                           (list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE < 2.0
-                            OR list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                            / len(toks)::DOUBLE > 12.0)
-                      THEN 0.5 ELSE 0.0 END) * 0.2)), 4) AS quality
-        FROM tok),
-    ent AS (
-        SELECT doc_id,
-               ROUND(LN(SUM(n)::DOUBLE) - SUM(n * LN(n::DOUBLE)) / SUM(n)::DOUBLE, 4)
-                   AS entropy
-        FROM (
-            SELECT doc_id, c, COUNT(*) AS n FROM (
-                SELECT doc_id,
-                       unnest([lower(text)[i] FOR i IN range(1, length(text) + 1)]) AS c
-                FROM documents WHERE length(text) > 0)
-            GROUP BY doc_id, c)
-        GROUP BY doc_id),
+               {_QUALITY_SQL} AS quality
+        FROM tok),{_ENTROPY_SQL},
     flags AS (
         SELECT (f.quality < 0.3) AS fail_q,
                (COALESCE(e.entropy, 0.0) < 2.0) AS fail_e
@@ -515,17 +484,7 @@ def q_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = d.select("doc_id",
                     F.round(quality_score(F.col("text"), toks), 4)
                     .alias("quality"))
-    chars = (d.where(F.length("text") > 0)
-             .select("doc_id",
-                     F.explode(F.filter(F.split(F.lower("text"), ""),
-                                        lambda c: F.length(c) > 0))
-                     .alias("c")))
-    hist = chars.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
-    n_sum = F.sum("n")
-    ent = hist.groupBy("doc_id").agg(
-        F.round(F.log(n_sum.cast("double"))
-                - F.sum(F.col("n") * F.log(F.col("n").cast("double")))
-                / n_sum.cast("double"), 4).alias("entropy"))
+    ent = _char_entropy(d)
     flags = (feat.join(ent, "doc_id", "left")
              .select((F.col("quality") < 0.3).alias("fail_q"),
                      (F.coalesce("entropy", F.lit(0.0)) < 2.0)

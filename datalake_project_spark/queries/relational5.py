@@ -1055,12 +1055,14 @@ def q_orders_backlog_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("open_orders")))
 
 
-@register(
-    "q_recs_item_knn",
-    oracle="""
+# Distinct (order, part) baskets and each part's basket count n.
+_ITEMS_SQL = """
     WITH items AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    deg AS (SELECT l_partkey AS p, COUNT(*) AS n FROM items GROUP BY 1),
+    deg AS (SELECT l_partkey AS p, COUNT(*) AS n FROM items GROUP BY 1),"""
+
+# Item-item cosine sim(p, q, c) over parts co-bought in >= 2 orders.
+_ITEM_SIM_SQL = """
     pairs AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS n12
         FROM items a JOIN items b
@@ -1075,7 +1077,12 @@ def q_orders_backlog_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.p, s.q, s.n12 / sqrt(dp.n::DOUBLE * dq.n::DOUBLE) AS c
         FROM sym s
         JOIN deg dp ON dp.p = s.p
-        JOIN deg dq ON dq.p = s.q)
+        JOIN deg dq ON dq.p = s.q)"""
+
+
+@register(
+    "q_recs_item_knn",
+    oracle=_ITEMS_SQL + _ITEM_SIM_SQL + """
     SELECT p AS part, q AS neighbor, ROUND(c, 6) + 0.0 AS cosine
     FROM sim
     QUALIFY ROW_NUMBER() OVER (PARTITION BY p ORDER BY c DESC, q) <= 3
@@ -1487,25 +1494,7 @@ def q_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_recs_coverage",
-    oracle="""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    deg AS (SELECT l_partkey AS p, COUNT(*) AS n FROM items GROUP BY 1),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS n12
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 2),
-    sym AS (
-        SELECT pa AS p, pb AS q, n12 FROM pairs
-        UNION ALL
-        SELECT pb AS p, pa AS q, n12 FROM pairs),
-    sim AS (
-        SELECT s.p, s.q, s.n12 / sqrt(dp.n::DOUBLE * dq.n::DOUBLE) AS c
-        FROM sym s
-        JOIN deg dp ON dp.p = s.p
-        JOIN deg dq ON dq.p = s.q),
+    oracle=_ITEMS_SQL + _ITEM_SIM_SQL + """,
     topk AS (
         SELECT p, q FROM sim
         QUALIFY ROW_NUMBER() OVER (PARTITION BY p ORDER BY c DESC, q) <= 3),

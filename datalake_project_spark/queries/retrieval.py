@@ -130,14 +130,17 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
             .agg((F.count(F.col("b.doc_id")) + 1).alias(rank_col)))
 
 
-@register(
-    "q_hybrid_retrieval_rrf",
-    oracle=f"""
+
+def _kw_vec_sql(depth: int) -> str:
+    """Oracle CTEs kw and vec: the top-``depth`` BM25 docs and the
+    top-``depth`` vectors by rounded cosine to vector 0, each with its
+    1-based ``rank``."""
+    return f"""
     WITH {_BM25_CTE},
     kw AS (
         SELECT doc_id,
                ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
-        FROM bm25 QUALIFY rank <= {N_CAND}),
+        FROM bm25 QUALIFY rank <= {depth}),
     e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     probe AS (SELECT v AS pv FROM e WHERE vec_id = 0),
     vec AS (
@@ -146,7 +149,29 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
                    ORDER BY ROUND(list_cosine_similarity(v, pv), 6) DESC,
                             vec_id) AS rank
         FROM e CROSS JOIN probe WHERE vec_id <> 0
-        QUALIFY rank <= {N_CAND}),
+        QUALIFY rank <= {depth})"""
+
+
+def _probe_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cos): every vector's 6-dp cosine to vector 0, keyed as a
+    doc id — ``_kw_vec_sql``'s vec scores."""
+    e = (Catalog(spark, sf_dir).table("embeddings")
+         .select("vec_id", F.transform(
+             "embedding", lambda x: x.cast("double")).alias("v")))
+    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
+    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    return (e.where(F.col("vec_id") != 0)
+            .crossJoin(F.broadcast(probe))
+            .select(F.col("vec_id").alias("doc_id"),
+                    F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
+
+
+@register(
+    "q_hybrid_retrieval_rrf",
+    oracle=_kw_vec_sql(N_CAND) + f""",
     fused AS (
         SELECT COALESCE(kw.doc_id, vec.doc_id) AS doc_id,
                ROUND(COALESCE(1.0 / ({RRF_K} + kw.rank), 0.0)
@@ -170,18 +195,7 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
 def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = _candidate_ranks(_bm25_scores(spark, sf_dir), "score", "k_rank")
 
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select("vec_id", F.transform(
-             "embedding", lambda x: x.cast("double")).alias("v")))
-    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
-    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = (e.where(F.col("vec_id") != 0)
-           .crossJoin(F.broadcast(probe))
-           .select(F.col("vec_id").alias("doc_id"),
-                   F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
+    cos = _probe_cosines(spark, sf_dir)
     vec = _candidate_ranks(cos, "cos", "v_rank")
 
     fused = (kw.join(vec, "doc_id", "full_outer")
@@ -633,21 +647,7 @@ RBO_DEPTH = 10
 
 @register(
     "q_retrieval_rbo",
-    oracle=f"""
-    WITH {_BM25_CTE},
-    kw AS (
-        SELECT doc_id,
-               ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
-        FROM bm25 QUALIFY rank <= {RBO_DEPTH}),
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    probe AS (SELECT v AS pv FROM e WHERE vec_id = 0),
-    vec AS (
-        SELECT vec_id AS doc_id,
-               ROW_NUMBER() OVER (
-                   ORDER BY ROUND(list_cosine_similarity(v, pv), 6) DESC,
-                            vec_id) AS rank
-        FROM e CROSS JOIN probe WHERE vec_id <> 0
-        QUALIFY rank <= {RBO_DEPTH}),
+    oracle=_kw_vec_sql(RBO_DEPTH) + f""",
     depths AS (SELECT UNNEST(range(1, {RBO_DEPTH} + 1)) AS d),
     ov AS (
         SELECT d.d,
@@ -679,18 +679,7 @@ def q_retrieval_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = (_candidate_ranks(_bm25_scores(spark, sf_dir), "score", "k_rank")
           .where(F.col("k_rank") <= RBO_DEPTH))
 
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select("vec_id", F.transform(
-             "embedding", lambda x: x.cast("double")).alias("v")))
-    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
-    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = (e.where(F.col("vec_id") != 0)
-           .crossJoin(F.broadcast(probe))
-           .select(F.col("vec_id").alias("doc_id"),
-                   F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
+    cos = _probe_cosines(spark, sf_dir)
     vec = (_candidate_ranks(cos, "cos", "v_rank")
            .where(F.col("v_rank") <= RBO_DEPTH))
 

@@ -23,6 +23,8 @@ from pyspark.sql.window import Window
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries.events import _funnel_stages, _funnel_users
+from datalake_project_spark.queries.streaming import _ROLLING_MEDIAN_ORACLE
 
 _SQL_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
@@ -338,30 +340,7 @@ def q_text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_events_rolling_median",
-    oracle="""
-    WITH w5 AS (
-        SELECT event_type, value,
-               quantile_cont(value, 0.5) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS med,
-               COUNT(*) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS wn
-        FROM events WHERE value IS NOT NULL),
-    full5 AS (
-        SELECT event_type,
-               CAST(ROUND(med * 10000) AS BIGINT) AS med_ten_k,
-               CAST(ROUND(ABS(value - med) * 10000) AS BIGINT)
-                   AS dev_ten_k
-        FROM w5 WHERE wn = 5)
-    SELECT event_type, COUNT(*) AS n_windows,
-           ROUND(SUM(med_ten_k)::DOUBLE / (COUNT(*) * 10000.0), 4)
-               AS avg_rolling_med,
-           ROUND(SUM(dev_ten_k)::DOUBLE / (COUNT(*) * 10000.0), 4)
-               AS avg_abs_dev,
-           ROUND(MAX(dev_ten_k) / 10000.0, 4) AS max_abs_dev
-    FROM full5 GROUP BY event_type
-    """,
+    oracle=_ROLLING_MEDIAN_ORACLE,
     doc="Rolling 5-event median smoother per user (the robust twin of "
         "q_events_ewma): median over the trailing 5 events in (ts, "
         "event_id) order, restricted to FULL windows so the median of "
@@ -1006,25 +985,9 @@ def q_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_funnel_by_variant(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    per_user = (
-        e.groupBy("user_id")
-        .agg(F.min(F.when(F.col("event_type") == "signup", F.col("ts")))
-             .alias("s_ts"),
-             F.collect_list(
-                 F.when(F.col("event_type") == "click", F.col("ts")))
-             .alias("click_ts"),
-             F.collect_list(
-                 F.when(F.col("event_type") == "purchase", F.col("ts")))
-             .alias("purchase_ts")))
-    staged = (
-        per_user
-        .where(F.col("s_ts").isNotNull())
-        .withColumn("arm", F.col("user_id") % 2)
-        .withColumn("c_ts", F.array_min(F.filter(
-            "click_ts", lambda t: t >= F.col("s_ts"))))
-        .withColumn("p_ts", F.array_min(F.filter(
-            "purchase_ts", lambda t: t >= F.col("c_ts")))))
+    staged = _funnel_stages(_funnel_users(spark, sf_dir)
+                            .where(F.col("s_ts").isNotNull())
+                            .withColumn("arm", F.col("user_id") % 2))
     return (staged.groupBy("arm")
             .agg(F.count(F.lit(1)).alias("n_signup"),
                  F.count("c_ts").alias("n_click_after"),

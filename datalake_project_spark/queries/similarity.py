@@ -19,9 +19,8 @@ from datalake_project_spark.operators.similarity import (
 from datalake_project_spark.queries import local_df, register
 
 
-@register(
-    "q_ann_cosine_topk",
-    oracle="""
+# Exact cosine top-5 neighbors of the query vectors vec_id < 10.
+_EXACT_TOP5_SQL = """
     SELECT query_id, neighbor_id, rank, ROUND(cos_sim, 6) AS cos_sim
     FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -33,7 +32,51 @@ from datalake_project_spark.queries import local_df, register
         FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
         JOIN embeddings c ON c.vec_id <> q.vec_id) t
     WHERE rank <= 5
-    """,
+    """
+
+# Candidate ``pairs`` (query_id, neighbor_id) rescored by exact cosine,
+# top-5 per query with a (cos desc, id asc) total order.
+_RESCORE_TOP5_SQL = """
+    scored AS (
+        SELECT p.query_id, p.neighbor_id,
+               list_cosine_similarity(a.embedding::DOUBLE[],
+                                      b.embedding::DOUBLE[]) AS cs,
+               ROW_NUMBER() OVER (
+                   PARTITION BY p.query_id
+                   ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
+                                                   b.embedding::DOUBLE[])
+                            DESC, p.neighbor_id ASC) AS rank
+        FROM pairs p
+        JOIN embeddings a ON a.vec_id = p.query_id
+        JOIN embeddings b ON b.vec_id = p.neighbor_id)
+    SELECT query_id, neighbor_id, rank, ROUND(cs, 6) AS cos_sim
+    FROM scored WHERE rank <= 5
+"""
+
+
+def _rescore_top5(e: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``_RESCORE_TOP5_SQL`` over embeddings ``e``."""
+    from pyspark.sql.window import Window
+
+    from datalake_project_spark.functions.vectors import cosine
+
+    qv = e.select(F.col("vec_id").alias("query_id"),
+                  F.col("embedding").alias("_qv"))
+    cv = e.select(F.col("vec_id").alias("neighbor_id"),
+                  F.col("embedding").alias("_cv"))
+    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
+              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= 5)
+            .select("query_id", "neighbor_id", "rank",
+                    F.round("cs", 6).alias("cos_sim")))
+
+
+@register(
+    "q_ann_cosine_topk",
+    oracle=_EXACT_TOP5_SQL,
     doc="Exact brute-force cosine top-5 for 10 query vectors: broadcast "
         "queries x candidate scan, deterministic (sim DESC, id ASC) "
         "ranking. Correctness baseline for the ANN path.",
@@ -46,19 +89,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ann_cosine_topk_arrow",
-    oracle="""
-    SELECT query_id, neighbor_id, rank, ROUND(cos_sim, 6) AS cos_sim
-    FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos_sim,
-               ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                            c.vec_id ASC) AS rank
-        FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
-        JOIN embeddings c ON c.vec_id <> q.vec_id) t
-    WHERE rank <= 5
-    """,
+    oracle=_EXACT_TOP5_SQL,
     doc="Exact brute-force cosine top-5 — the Arrow/BLAS lane: the "
         "bounded probe set is one normalized numpy matrix, and each "
         "candidate Arrow batch is scored by a single "
@@ -765,22 +796,7 @@ _PORTABLE_CTES = """
     pairs AS (
         SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
         FROM codes q JOIN codes c ON q.band = c.band AND q.code = c.code
-        WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
-    scored AS (
-        SELECT p.query_id, p.neighbor_id,
-               list_cosine_similarity(a.embedding::DOUBLE[],
-                                      b.embedding::DOUBLE[]) AS cs,
-               ROW_NUMBER() OVER (
-                   PARTITION BY p.query_id
-                   ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
-                                                   b.embedding::DOUBLE[])
-                            DESC, p.neighbor_id ASC) AS rank
-        FROM pairs p
-        JOIN embeddings a ON a.vec_id = p.query_id
-        JOIN embeddings b ON b.vec_id = p.neighbor_id)
-    SELECT query_id, neighbor_id, rank, ROUND(cs, 6) AS cos_sim
-    FROM scored WHERE rank <= 5
-    """,
+        WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),""" + _RESCORE_TOP5_SQL,
     doc="Random-hyperplane LSH end to end, fully value-checked — the "
         "portable twin the rows-only production query (q_ann_lsh_topk, "
         "numpy-seeded float hyperplanes, not SQL-reproducible) names as "
@@ -796,8 +812,6 @@ _PORTABLE_CTES = """
         "O(collisions) scale path as the production operator.",
 )
 def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     codes = _portable_band_codes(
         spark, _portable_bits(spark, e))
@@ -807,19 +821,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (qc.join(cc, ["band", "code"])
              .where(F.col("query_id") != F.col("neighbor_id"))
              .select("query_id", "neighbor_id").distinct())
-    from datalake_project_spark.functions.vectors import cosine
-    qv = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("_qv"))
-    cv = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("_cv"))
-    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cs", 6).alias("cos_sim")))
+    return _rescore_top5(e, pairs)
 
 
 @register(
@@ -846,22 +848,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
         SELECT p.query_id, cl.vec_id AS neighbor_id
         FROM probe p JOIN cells cl ON cl.cell = p.cell
-        WHERE cl.vec_id <> p.query_id),
-    scored AS (
-        SELECT p.query_id, p.neighbor_id,
-               list_cosine_similarity(a.embedding::DOUBLE[],
-                                      b.embedding::DOUBLE[]) AS cs,
-               ROW_NUMBER() OVER (
-                   PARTITION BY p.query_id
-                   ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
-                                                   b.embedding::DOUBLE[])
-                            DESC, p.neighbor_id ASC) AS rank
-        FROM pairs p
-        JOIN embeddings a ON a.vec_id = p.query_id
-        JOIN embeddings b ON b.vec_id = p.neighbor_id)
-    SELECT query_id, neighbor_id, rank, ROUND(cs, 6) AS cos_sim
-    FROM scored WHERE rank <= 5
-    """,
+        WHERE cl.vec_id <> p.query_id),""" + _RESCORE_TOP5_SQL,
     doc="IVF probe end to end, fully value-checked — the portable twin "
         "the rows-only production query (q_ann_ivf_topk, KMeans "
         "centroids, not SQL-reproducible) names as its oracle-checked "
@@ -898,19 +885,7 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (probe.join(cells, "cell")
              .where(F.col("vec_id") != F.col("query_id"))
              .select("query_id", F.col("vec_id").alias("neighbor_id")))
-    from datalake_project_spark.functions.vectors import cosine
-    qv = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("_qv"))
-    cv = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("_cv"))
-    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cs", 6).alias("cos_sim")))
+    return _rescore_top5(e, pairs)
 
 
 @register(

@@ -392,6 +392,45 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                              state_partitions=_sparts(spark, sf_dir))
 
 
+def _event_halves(spark: SparkSession, sf_dir: str, root: str):
+    """(events, in_dir): events.parquet staged under ``root`` as two
+    files split at the median event time, mtime-ordered (earlier half
+    first) so a ``maxFilesPerTrigger=1`` stream reads them as two ordered
+    micro-batches. The staging is keyed by the source file's size and
+    mtime and reused until it changes."""
+    import glob
+    import os
+    import shutil
+
+    from datalake_project_spark.catalog import Catalog
+
+    src = f"{sf_dir.rstrip('/')}/events.parquet"
+    st = os.stat(src)
+    in_dir = os.path.join(root, f"in_{st.st_size}_{int(st.st_mtime)}")
+    e = Catalog(spark, sf_dir).table("events")
+
+    if not os.path.isdir(in_dir):
+        if os.path.isdir(root):  # stale-key cleanup, bucketed-cache style
+            for stale in os.listdir(root):
+                if stale.startswith("in_"):
+                    shutil.rmtree(os.path.join(root, stale),
+                                  ignore_errors=True)
+        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
+                    .alias("m")).first()["m"]
+        os.makedirs(in_dir)
+        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
+        for i, pred in enumerate(halves):
+            tmp = os.path.join(root, f"_stage{i}")
+            e.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            dst = os.path.join(in_dir, f"half{i}.parquet")
+            shutil.move(part, dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            # FileStreamSource orders micro-batches by mtime
+            os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
+    return e, in_dir
+
+
 @register(
     "q_stream_merge_upsert",
     oracle="""
@@ -421,44 +460,19 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state partition rewrites per batch.",
 )
 def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
 
     from pyspark.sql.window import Window
 
-    from datalake_project_spark.catalog import Catalog
     from datalake_project_spark.lake import Lake
     from datalake_project_spark.scratch import scratch_dir
     from datalake_project_spark.streaming.sinks import stream_upsert_to_lake
 
     root = scratch_dir("stream_merge", sf_dir)
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    st = os.stat(src)
-    in_dir = os.path.join(root, f"in_{st.st_size}_{int(st.st_mtime)}")
-    e = Catalog(spark, sf_dir).table("events")
-
-    if not os.path.isdir(in_dir):
-        if os.path.isdir(root):  # stale-key cleanup, bucketed-cache style
-            for stale in os.listdir(root):
-                if stale.startswith("in_"):
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
-        # any time split preserves the invariant (later half wins per
-        # key == global latest); the median just balances the batches
-        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
-                    .alias("m")).first()["m"]
-        os.makedirs(in_dir)
-        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
-        for i, pred in enumerate(halves):
-            tmp = os.path.join(root, f"_stage{i}")
-            e.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(in_dir, f"half{i}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # FileStreamSource orders micro-batches by mtime
-            os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
+    # any time split preserves the invariant (later half wins per key ==
+    # global latest); the median just balances the batches
+    e, in_dir = _event_halves(spark, sf_dir, root)
 
     lake = Lake(spark, os.path.join(root, "lake"))
     shutil.rmtree(lake.usage_path("user_state"), ignore_errors=True)
@@ -601,9 +615,10 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_partitions=_sparts(spark, sf_dir))
 
 
-@register(
-    "q_stream_rolling_median",
-    oracle="""
+# Per event type: the trailing-5-event rolling median per user over full
+# windows, with its mean and mean/max absolute deviation (also the batch
+# q_events_rolling_median's oracle).
+_ROLLING_MEDIAN_ORACLE = """
     WITH w5 AS (
         SELECT event_type, value,
                quantile_cont(value, 0.5) OVER (
@@ -626,7 +641,12 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS avg_abs_dev,
            ROUND(MAX(dev_ten_k) / 10000.0, 4) AS max_abs_dev
     FROM full5 GROUP BY event_type
-    """,
+    """
+
+
+@register(
+    "q_stream_rolling_median",
+    oracle=_ROLLING_MEDIAN_ORACLE,
     doc="Streaming trailing-5 rolling median per user as a CUSTOM "
         "STATEFUL operator (applyInPandasWithState, O(1) 4-row state "
         "per user at any stream length) drained via availableNow and "
@@ -923,38 +943,14 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_incremental_topk(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
 
-    from datalake_project_spark.catalog import Catalog
     from datalake_project_spark.scratch import scratch_dir
 
     K = 10
     root = scratch_dir("stream_topk", sf_dir)
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    st = os.stat(src)
-    in_dir = os.path.join(root, f"in_{st.st_size}_{int(st.st_mtime)}")
-    e = Catalog(spark, sf_dir).table("events")
-
-    if not os.path.isdir(in_dir):
-        if os.path.isdir(root):  # stale-key cleanup
-            for stale in os.listdir(root):
-                if stale.startswith("in_"):
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
-        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
-                    .alias("m")).first()["m"]
-        os.makedirs(in_dir)
-        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
-        for i, pred in enumerate(halves):
-            tmp = os.path.join(root, f"_stage{i}")
-            e.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(in_dir, f"half{i}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
+    e, in_dir = _event_halves(spark, sf_dir, root)
 
     state_dir = os.path.join(root, "state")
     shutil.rmtree(state_dir, ignore_errors=True)

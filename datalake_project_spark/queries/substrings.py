@@ -30,16 +30,27 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.functions import text as T
-from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries import _sql, local_df, register
 
 _SQL_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
 SPAN_N = 8  # words per span for repeated-span mining
 
 
-@register(
-    "q_dedup_substring_spans",
-    oracle=f"""
+def _doc_bigrams(tok: DataFrame, explode=F.explode, *names) -> DataFrame:
+    """(doc_id, bg) per adjacent word pair "w1 w2" of the token column
+    ``ws`` (docs of >= 2 tokens); ``explode``/``names`` pick e.g. a
+    posexplode into (pos, bg)."""
+    n = F.size("ws")
+    bg_arr = F.zip_with(
+        F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
+        lambda a, b: F.concat_ws(" ", a, b))
+    return (tok.where(n >= 2)
+            .select("doc_id", explode(bg_arr).alias(*(names or ("bg",)))))
+
+
+# Every SPAN_N-word span shared by >= 2 documents, with its counts.
+_REPEATED_SPANS_SQL = f"""
     WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
     sp AS (
         SELECT doc_id,
@@ -52,7 +63,12 @@ SPAN_N = 8  # words per span for repeated-span mining
     FROM sp
     GROUP BY span
     HAVING COUNT(DISTINCT doc_id) >= 2
-    """,
+    """
+
+
+@register(
+    "q_dedup_substring_spans",
+    oracle=_REPEATED_SPANS_SQL,
     doc=f"Exact repeated-span mining: every {SPAN_N}-word span occurring "
         "in >= 2 documents, with document and occurrence counts — the "
         "candidate step of exact substring dedup (Lee et al. 2022 style, "
@@ -80,20 +96,7 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_substring_spans_hashed",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
-    sp AS (
-        SELECT doc_id,
-               unnest([array_to_string(ws[i:i+{SPAN_N - 1}], ' ')
-                       FOR i IN range(1, len(ws) - {SPAN_N - 2})]) AS span
-        FROM tok WHERE len(ws) >= {SPAN_N})
-    SELECT span,
-           COUNT(DISTINCT doc_id) AS n_docs,
-           COUNT(*) AS n_occurrences
-    FROM sp
-    GROUP BY span
-    HAVING COUNT(DISTINCT doc_id) >= 2
-    """,
+    oracle=_REPEATED_SPANS_SQL,
     doc=f"Repeated-span mining with 8-byte shuffle keys — the 100 TB "
         "formulation of q_dedup_substring_spans (its oracle-exact spec "
         "twin, same oracle): candidate generation groups by "
@@ -202,11 +205,10 @@ def q_dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_K = 5  # span length (tokens) hashed for winnowing
 WINNOW_W = 4  # window width (spans) per fingerprint selection
 
-
-@register(
-    "q_dedup_winnow_pairs",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
+# tok -> spans -> hashed -> winnowed: each doc's distinct window-min
+# fingerprints ``fp`` over its WINNOW_K-token span hashes.
+_WINNOWED_SQL = f"""
+    tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
     spans AS (
         SELECT doc_id, t.i AS pos,
                array_to_string(ws[t.i:t.i+{WINNOW_K - 1}], ' ') AS span
@@ -226,7 +228,31 @@ WINNOW_W = 4  # window width (spans) per fingerprint selection
                                 ROWS BETWEEN CURRENT ROW
                                 AND {WINNOW_W - 1} FOLLOWING) AS fp
             FROM hashed)
-        WHERE pos <= n_spans - {WINNOW_W - 1})
+        WHERE pos <= n_spans - {WINNOW_W - 1})"""
+
+
+def _winnow_pairs(spark: SparkSession, sf_dir: str, a_name: str,
+                  b_name: str):
+    """(documents, pairs): doc pairs ``a_name`` < ``b_name`` sharing >= 2
+    winnowed fingerprints, with their count ``n_shared``."""
+    from datalake_project_spark.operators.dedup import winnow_fingerprint_rows
+
+    d = Catalog(spark, sf_dir).table("documents")
+    # fingerprints feed both sides of the pair join
+    fps = winnow_fingerprint_rows(d, k=WINNOW_K, w=WINNOW_W) \
+        .localCheckpoint(eager=False)  # keep: measured
+    a, b = fps.alias("a"), fps.alias("b")
+    return d, (a.join(b, (F.col("a.fp") == F.col("b.fp"))
+                      & (F.col("a.doc_id") < F.col("b.doc_id")))
+               .groupBy(F.col("a.doc_id").alias(a_name),
+                        F.col("b.doc_id").alias(b_name))
+               .agg(F.count(F.lit(1)).alias("n_shared"))
+               .where(F.col("n_shared") >= 2))
+
+
+@register(
+    "q_dedup_winnow_pairs",
+    oracle="WITH" + _WINNOWED_SQL + """
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            COUNT(*) AS n_shared
     FROM winnowed a JOIN winnowed b
@@ -247,21 +273,7 @@ WINNOW_W = 4  # window width (spans) per fingerprint selection
         "carries (id, 8-byte hash) only, cost Σ df², never n².",
 )
 def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.operators.dedup import winnow_fingerprint_rows
-
-    d = Catalog(spark, sf_dir).table("documents")
-    # fingerprints feed both sides of the pair join
-    fps = winnow_fingerprint_rows(d, k=WINNOW_K, w=WINNOW_W) \
-        .localCheckpoint(eager=False)  # keep: measured
-    a, b = fps.alias("a"), fps.alias("b")
-    return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 2)
-    )
+    return _winnow_pairs(spark, sf_dir, "doc_a", "doc_b")[1]
 
 
 @register(
@@ -308,12 +320,7 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle stages at construction, and this query is pinned fully
     # declarative.
     v = c1.agg(F.count(F.lit(1)).alias("vocab"))
-    n = F.size("ws")
-    bg_arr = F.zip_with(
-        F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b))
-    bg = (tok.where(n >= 2)
-          .select("doc_id", F.explode(bg_arr).alias("bg")))
+    bg = _doc_bigrams(tok)
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     scored = (
         bg.join(c2, "bg")
@@ -939,12 +946,7 @@ def q_text_interpolated_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token total = sum of unigram counts — derived from c1, not a
     # second corpus pass
     nt = c1.agg(F.sum("c1").cast("double").alias("n"))
-    n = F.size("ws")
-    bg_arr = F.zip_with(
-        F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b))
-    bg = (tok.where(n >= 2)
-          .select("doc_id", F.explode(bg_arr).alias("bg")))
+    bg = _doc_bigrams(tok)
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     ca = c1.select(F.col("w1").alias("wa"), F.col("c1").alias("ca"))
     cb = c1.select(F.col("w1").alias("wb"), F.col("c1").alias("cb"))
@@ -1009,41 +1011,13 @@ def q_corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_winnow_resolved",
-    oracle=f"""
-    WITH RECURSIVE tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
-    spans AS (
-        SELECT doc_id, t.i AS pos,
-               array_to_string(ws[t.i:t.i+{WINNOW_K - 1}], ' ') AS span
-        FROM tok, unnest(range(1, len(ws) - {WINNOW_K - 2})) AS t(i)
-        WHERE len(ws) >= {WINNOW_K}),
-    hashed AS (
-        SELECT doc_id, pos,
-               list_reduce(list_prepend(0::BIGINT,
-                   [unicode(span[i])::BIGINT FOR i IN range(1, length(span) + 1)]),
-                 (acc, x) -> (acc * 31 + x) % 2147483647) AS h,
-               COUNT(*) OVER (PARTITION BY doc_id) AS n_spans
-        FROM spans),
-    winnowed AS (
-        SELECT DISTINCT doc_id, fp FROM (
-            SELECT doc_id, pos, n_spans,
-                   MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                                ROWS BETWEEN CURRENT ROW
-                                AND {WINNOW_W - 1} FOLLOWING) AS fp
-            FROM hashed)
-        WHERE pos <= n_spans - {WINNOW_W - 1}),
+    oracle="WITH RECURSIVE" + _WINNOWED_SQL + """,
     pairs AS (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM winnowed a JOIN winnowed b
           ON a.fp = b.fp AND a.doc_id < b.doc_id
         GROUP BY a.doc_id, b.doc_id
-        HAVING COUNT(*) >= 2),
-    und AS (SELECT a_id AS u, b_id AS v FROM pairs
-            UNION SELECT b_id, a_id FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS rep FROM reach GROUP BY u)
+        HAVING COUNT(*) >= 2),""" + _sql.REACH + "," + _sql.COMP + """
     SELECT d.doc_id
     FROM documents d
     WHERE NOT EXISTS (SELECT 1 FROM comp WHERE comp.id = d.doc_id
@@ -1060,23 +1034,10 @@ def q_corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fingerprints.",
 )
 def q_dedup_winnow_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.operators.dedup import (
-        connected_components, winnow_fingerprint_rows,
-    )
+    from datalake_project_spark.operators.dedup import connected_components
 
-    d = Catalog(spark, sf_dir).table("documents")
-    # fingerprints feed both sides of the pair join
-    fps = winnow_fingerprint_rows(d, k=WINNOW_K, w=WINNOW_W) \
-        .localCheckpoint(eager=False)  # keep: measured
-    a, b = fps.alias("a"), fps.alias("b")
-    pairs = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("a_id"),
-                      F.col("b.doc_id").alias("b_id"))
-             .agg(F.count(F.lit(1)).alias("n_shared"))
-             .where(F.col("n_shared") >= 2)
-             .select("a_id", "b_id"))
-    comp = connected_components(pairs)
+    d, pairs = _winnow_pairs(spark, sf_dir, "a_id", "b_id")
+    comp = connected_components(pairs.select("a_id", "b_id"))
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     return d.join(non_reps, d.doc_id == non_reps.id, "left_anti") \
         .select("doc_id")
@@ -1088,11 +1049,7 @@ CHUNK_BG = 32  # bigrams per scoring window
 @register(
     "q_text_worst_window_lm",
     oracle=f"""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents),
+    WITH{_sql.WORDS},
     bg AS (SELECT doc_id, i AS pos, ws[i] || ' ' || ws[i+1] AS bg
            FROM words, unnest(range(1, len(ws))) AS u(i)
            WHERE len(ws) >= 2),
@@ -1135,12 +1092,7 @@ def q_text_worst_window_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = uni.groupBy(F.col("w").alias("w1")) \
         .agg(F.count(F.lit(1)).alias("c1"))
     v = c1.agg(F.count(F.lit(1)).alias("vocab"))  # rows of c1 == vocab
-    n = F.size("ws")
-    bg_arr = F.zip_with(
-        F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b))
-    bg = (tok.where(n >= 2)
-          .select("doc_id", F.posexplode(bg_arr).alias("pos", "bg")))
+    bg = _doc_bigrams(tok, F.posexplode, "pos", "bg")
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     lp = (bg
           .join(F.broadcast(c2), "bg")
@@ -1228,9 +1180,15 @@ def q_text_lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register(
-    "q_text_unigram_viterbi",
-    oracle="""
+def _lattice_sql(em: bool) -> str:
+    """Oracle CTEs toks, words, occ, vocab, tot, edges and paths: every
+    segmentation path of every word of <= 12 chars into 1-3-char pieces
+    scored by the frequency-count piece model; with ``em`` each path
+    also carries its piece list ``ps``."""
+    piece = " o.piece," if em else ""
+    ps0 = ",\n               CAST([] AS VARCHAR[]) AS ps" if em else ""
+    ps1 = ", list_append(p.ps, e.piece)" if em else ""
+    return f"""
     WITH RECURSIVE toks AS (
         SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
         FROM documents),
@@ -1247,14 +1205,33 @@ def q_text_lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT piece, CAST(SUM(f) AS BIGINT) AS c FROM occ GROUP BY piece),
     tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab),
     edges AS (
-        SELECT o.w, o.j, o.j + o.k AS i,
+        SELECT o.w, o.j, o.j + o.k AS i,{piece}
                LN(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
         FROM occ o JOIN vocab v ON v.piece = o.piece, tot),
     paths AS (
-        SELECT w, 0 AS i, CAST(0.0 AS DOUBLE) AS s FROM words
+        SELECT w, 0 AS i, CAST(0.0 AS DOUBLE) AS s{ps0}
+        FROM words
         UNION ALL
-        SELECT e.w, e.i, p.s + e.lp
-        FROM paths p JOIN edges e ON e.w = p.w AND e.j = p.i),
+        SELECT e.w, e.i, p.s + e.lp{ps1}
+        FROM paths p JOIN edges e ON e.w = p.w AND e.j = p.i)"""
+
+
+
+# complete paths (with pieces) and per-word log Z over _lattice_sql(True).
+_EM_Z_SQL = """,
+    complete AS (
+        SELECT p.w, p.s, p.ps
+        FROM paths p JOIN words ww ON ww.w = p.w AND len(ww.w) = p.i),
+    mx2 AS (SELECT w, MAX(s) AS m FROM complete GROUP BY w),
+    z AS (
+        SELECT c.w, mx2.m + LN(SUM(EXP(c.s - mx2.m))) AS logz
+        FROM complete c JOIN mx2 ON mx2.w = c.w
+        GROUP BY c.w, mx2.m)"""
+
+
+@register(
+    "q_text_unigram_viterbi",
+    oracle=_lattice_sql(False) + """,
     best AS (
         SELECT p.w, MAX(p.s) AS b
         FROM paths p JOIN words ww ON ww.w = p.w AND len(ww.w) = p.i
@@ -1291,9 +1268,7 @@ def q_text_lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "both sides (the documented cap).",
 )
 def q_text_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words, occ = _unigram_words_occ(spark, sf_dir)
-    probs = occ.groupBy("piece").agg(F.sum("f").alias("c"))
-    lp_b = spark.sparkContext.broadcast(_unigram_lp_map(probs))
+    words, lp_b = _unigram_model(spark, sf_dir)
     # Max-DP over the same lattice the logsumexp queries run: one
     # vectorized mapInPandas pass over the distinct-word table against
     # the broadcast piece table (kernel docstring above) — r12 replaced
@@ -1309,17 +1284,26 @@ def q_text_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- unigram-LM lattice machinery (shared by viterbi / forward / EM) -----
 
-_MAXL = 12  # word-length cap, shared with _unigram_words_occ
+_MAXL = 12  # word-length cap, shared with _unigram_model
 
 
-def _unigram_words_occ(spark: SparkSession, sf_dir: str):
-    """(words, occ): distinct-word frequencies (len 1-12 cap) and every
-    (word, start, len, piece) candidate edge position for pieces of
-    length 1-3 — the lattice every unigram-LM query builds on.
+def _unigram_model(spark: SparkSession, sf_dir: str):
+    """(words, lp_b): distinct-word frequencies (len 1-12 cap) and the
+    broadcast piece model piece -> ln(c / Σc), where c counts every
+    (word, start, len) occurrence of a piece of length 1-3 weighted by
+    word frequency — the lattice every unigram-LM query builds on.
 
     ``words`` is checkpointed because every caller reads it from two
     actions — the collect of the piece model and the DP pass —
-    so the corpus token-count pass runs once per query."""
+    so the corpus token-count pass runs once per query.
+
+    The collect is BOUNDED at any corpus scale, not data-dependent:
+    pieces are substrings of length 1-3 over the [a-z0-9] token
+    alphabet, so the table can never exceed 36 + 36² + 36³ = 47,988
+    rows — dimension-table size, the same class as a broadcast-join
+    build side (guide §3.1)."""
+    import math
+
     d = Catalog(spark, sf_dir).table("documents")
     toks = d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
     words = (toks.where(F.length("w").between(1, _MAXL))
@@ -1335,22 +1319,10 @@ def _unigram_words_occ(spark: SparkSession, sf_dir: str):
            .where(F.col("j") + F.col("k") <= F.length("w"))
            .withColumn("piece", F.substring(F.col("w"), F.col("j") + 1,
                                             F.col("k"))))
-    return words, occ
-
-
-def _unigram_lp_map(probs: DataFrame) -> dict[str, float]:
-    """piece -> ln(c / Σc) as a plain dict for broadcast.
-
-    The collect is BOUNDED at any corpus scale, not data-dependent:
-    pieces are substrings of length 1-3 over the [a-z0-9] token
-    alphabet, so the table can never exceed 36 + 36² + 36³ = 47,988
-    rows — dimension-table size, the same class as a broadcast-join
-    build side (guide §3.1)."""
-    import math
-
-    rows = probs.collect()
+    rows = occ.groupBy("piece").agg(F.sum("f").alias("c")).collect()
     tot = float(sum(r[1] for r in rows))
-    return {r[0]: math.log(float(r[1]) / tot) for r in rows}
+    return words, spark.sparkContext.broadcast(
+        {r[0]: math.log(float(r[1]) / tot) for r in rows})
 
 
 def _lattice_kernel(lp_b, mode: str):
@@ -1474,31 +1446,7 @@ _EM_SCHEMA = "piece string, wt double"
 
 @register(
     "q_text_unigram_forward",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        FROM documents),
-    words AS (
-        SELECT w, COUNT(*) AS f FROM toks
-        WHERE len(w) BETWEEN 1 AND 12 GROUP BY w),
-    occ AS (
-        SELECT w.w, w.f, j.j, k.k, substr(w.w, j.j + 1, k.k) AS piece
-        FROM words w,
-             (SELECT unnest(range(0, 12)) AS j) j,
-             (SELECT unnest([1, 2, 3]) AS k) k
-        WHERE j.j + k.k <= len(w.w)),
-    vocab AS (
-        SELECT piece, CAST(SUM(f) AS BIGINT) AS c FROM occ GROUP BY piece),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab),
-    edges AS (
-        SELECT o.w, o.j, o.j + o.k AS i,
-               LN(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-        FROM occ o JOIN vocab v ON v.piece = o.piece, tot),
-    paths AS (
-        SELECT w, 0 AS i, CAST(0.0 AS DOUBLE) AS s FROM words
-        UNION ALL
-        SELECT e.w, e.i, p.s + e.lp
-        FROM paths p JOIN edges e ON e.w = p.w AND e.j = p.i),
+    oracle=_lattice_sql(False) + """,
     complete AS (
         SELECT p.w, p.s
         FROM paths p JOIN words ww ON ww.w = p.w AND len(ww.w) = p.i),
@@ -1529,9 +1477,7 @@ _EM_SCHEMA = "piece string, wt double"
         "enumeration only at ulp level, absorbed by 4-dp rounding.",
 )
 def q_text_unigram_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words, occ = _unigram_words_occ(spark, sf_dir)
-    probs = occ.groupBy("piece").agg(F.sum("f").alias("c"))
-    lp_b = spark.sparkContext.broadcast(_unigram_lp_map(probs))
+    words, lp_b = _unigram_model(spark, sf_dir)
     scored = words.mapInPandas(_lattice_kernel(lp_b, "logz"),
                                _LATTICE_SCHEMA)
     return (scored.select(F.col("w").alias("word"), F.col("f").alias("freq"),
@@ -1541,41 +1487,7 @@ def q_text_unigram_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_unigram_em_counts",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        FROM documents),
-    words AS (
-        SELECT w, COUNT(*) AS f FROM toks
-        WHERE len(w) BETWEEN 1 AND 12 GROUP BY w),
-    occ AS (
-        SELECT w.w, w.f, j.j, k.k, substr(w.w, j.j + 1, k.k) AS piece
-        FROM words w,
-             (SELECT unnest(range(0, 12)) AS j) j,
-             (SELECT unnest([1, 2, 3]) AS k) k
-        WHERE j.j + k.k <= len(w.w)),
-    vocab AS (
-        SELECT piece, CAST(SUM(f) AS BIGINT) AS c FROM occ GROUP BY piece),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab),
-    edges AS (
-        SELECT o.w, o.j, o.j + o.k AS i, o.piece,
-               LN(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-        FROM occ o JOIN vocab v ON v.piece = o.piece, tot),
-    paths AS (
-        SELECT w, 0 AS i, CAST(0.0 AS DOUBLE) AS s,
-               CAST([] AS VARCHAR[]) AS ps
-        FROM words
-        UNION ALL
-        SELECT e.w, e.i, p.s + e.lp, list_append(p.ps, e.piece)
-        FROM paths p JOIN edges e ON e.w = p.w AND e.j = p.i),
-    complete AS (
-        SELECT p.w, p.s, p.ps
-        FROM paths p JOIN words ww ON ww.w = p.w AND len(ww.w) = p.i),
-    mx2 AS (SELECT w, MAX(s) AS m FROM complete GROUP BY w),
-    z AS (
-        SELECT c.w, mx2.m + LN(SUM(EXP(c.s - mx2.m))) AS logz
-        FROM complete c JOIN mx2 ON mx2.w = c.w
-        GROUP BY c.w, mx2.m),
+    oracle=_lattice_sql(True) + _EM_Z_SQL + """,
     weighted AS (
         SELECT c.w, EXP(c.s - z.logz) * ww.f AS wt, c.ps
         FROM complete c JOIN z ON z.w = c.w JOIN words ww ON ww.w = c.w),
@@ -1604,9 +1516,7 @@ def q_text_unigram_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ulp-level, absorbed by 4-dp rounding.",
 )
 def q_text_unigram_em_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words, occ = _unigram_words_occ(spark, sf_dir)
-    probs = occ.groupBy("piece").agg(F.sum("f").alias("c"))
-    lp_b = spark.sparkContext.broadcast(_unigram_lp_map(probs))
+    words, lp_b = _unigram_model(spark, sf_dir)
     ec = (words.mapInPandas(_lattice_kernel(lp_b, "em"), _EM_SCHEMA)
           .where(F.col("piece") != "")
           .groupBy("piece").agg(F.sum("wt").alias("c")))
@@ -1617,41 +1527,7 @@ def q_text_unigram_em_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_unigram_em_round",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        FROM documents),
-    words AS (
-        SELECT w, COUNT(*) AS f FROM toks
-        WHERE len(w) BETWEEN 1 AND 12 GROUP BY w),
-    occ AS (
-        SELECT w.w, w.f, j.j, k.k, substr(w.w, j.j + 1, k.k) AS piece
-        FROM words w,
-             (SELECT unnest(range(0, 12)) AS j) j,
-             (SELECT unnest([1, 2, 3]) AS k) k
-        WHERE j.j + k.k <= len(w.w)),
-    vocab AS (
-        SELECT piece, CAST(SUM(f) AS BIGINT) AS c FROM occ GROUP BY piece),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab),
-    edges AS (
-        SELECT o.w, o.j, o.j + o.k AS i, o.piece,
-               LN(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-        FROM occ o JOIN vocab v ON v.piece = o.piece, tot),
-    paths AS (
-        SELECT w, 0 AS i, CAST(0.0 AS DOUBLE) AS s,
-               CAST([] AS VARCHAR[]) AS ps
-        FROM words
-        UNION ALL
-        SELECT e.w, e.i, p.s + e.lp, list_append(p.ps, e.piece)
-        FROM paths p JOIN edges e ON e.w = p.w AND e.j = p.i),
-    complete AS (
-        SELECT p.w, p.s, p.ps
-        FROM paths p JOIN words ww ON ww.w = p.w AND len(ww.w) = p.i),
-    mx2 AS (SELECT w, MAX(s) AS m FROM complete GROUP BY w),
-    z AS (
-        SELECT c.w, mx2.m + LN(SUM(EXP(c.s - mx2.m))) AS logz
-        FROM complete c JOIN mx2 ON mx2.w = c.w
-        GROUP BY c.w, mx2.m),
+    oracle=_lattice_sql(True) + _EM_Z_SQL + """,
     lik0 AS (
         SELECT SUM(ww.f * z.logz) AS l
         FROM z JOIN words ww ON ww.w = z.w),
@@ -1704,9 +1580,7 @@ def q_text_unigram_em_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    words, occ = _unigram_words_occ(spark, sf_dir)
-    probs0 = occ.groupBy("piece").agg(F.sum("f").alias("c"))
-    lp0 = spark.sparkContext.broadcast(_unigram_lp_map(probs0))
+    words, lp0 = _unigram_model(spark, sf_dir)
     # E-step pass: per-piece expected counts + the piece='' likelihood
     # partials, aggregated to a ≤48k-row table and pinned (eager
     # checkpoint) because the M-step collect AND the final result both
@@ -1715,7 +1589,7 @@ def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy("piece").agg(F.sum("wt").alias("c"))
              .localCheckpoint(eager=True))  # keep: multi-action
     # M-step: renormalize expected counts into the new piece model
-    # (bounded collect — same ≤48k-entry argument as _unigram_lp_map).
+    # (bounded collect — same ≤48k-entry argument as _unigram_model).
     ec_rows = [r for r in passa.collect() if r["piece"] != ""]
     tot = float(sum(r["c"] for r in ec_rows))
     lp1 = spark.sparkContext.broadcast(
@@ -1731,9 +1605,8 @@ def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("l1") >= F.col("l0")).alias("improved")))
 
 
-@register(
-    "q_text_kneser_ney",
-    oracle=f"""
+# Kneser-Ney bigram counts: tok -> bg -> sp(w1, w2) -> c2, c1, bw, tot.
+_KN_SQL = f"""
     WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
     bg AS (
         SELECT doc_id,
@@ -1748,20 +1621,25 @@ def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
                   COUNT(*) AS n1fw
            FROM c2 GROUP BY w1),
     bw AS (SELECT w2, COUNT(*) AS n1bw FROM c2 GROUP BY w2),
-    tot AS (SELECT COUNT(*) AS n1all FROM c2)
-    SELECT sp.doc_id,
-           COUNT(*) AS n_bigrams,
+    tot AS (SELECT COUNT(*) AS n1all FROM c2)"""
+
+# Per-doc mean KN log probability over _KN_SQL, as column {alias}.
+_KN_SCORE_SQL = """
            ROUND(AVG(LN(
                GREATEST(c2.c2 - 0.75, 0.0) / c1.c1::DOUBLE
                + 0.75 * c1.n1fw / c1.c1::DOUBLE
-                 * bw.n1bw / tot.n1all::DOUBLE)), 4) AS avg_logprob
+                 * bw.n1bw / tot.n1all::DOUBLE)), 4) AS {alias}
     FROM sp
-    JOIN c2 USING (w1, w2)
-    JOIN c1 USING (w1)
-    JOIN bw USING (w2)
+    JOIN c2 USING (w1, w2) JOIN c1 USING (w1) JOIN bw USING (w2)
     CROSS JOIN tot
-    GROUP BY sp.doc_id
-    """,
+    GROUP BY sp.doc_id"""
+
+
+@register(
+    "q_text_kneser_ney",
+    oracle=_KN_SQL + """
+    SELECT sp.doc_id,
+           COUNT(*) AS n_bigrams,""" + _KN_SCORE_SQL.format(alias="avg_logprob"),
     doc="Interpolated Kneser-Ney bigram LM scoring — the smoothing that "
         "actually ships in KenLM/CCNet-grade perplexity filters, beside "
         "the add-one twin (q_text_bigram_lm): P(w2|w1) = "
@@ -1782,12 +1660,7 @@ def q_text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     tok = d.select("doc_id", T.tokens("text").alias("ws"))
-    n = F.size("ws")
-    bg_arr = F.zip_with(
-        F.slice("ws", 1, n - 1), F.slice(F.col("ws"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b))
-    sp = (tok.where(n >= 2)
-          .select("doc_id", F.explode(bg_arr).alias("bg"))
+    sp = (_doc_bigrams(tok)
           .select("doc_id", F.split("bg", " ")[0].alias("w1"),
                   F.split("bg", " ")[1].alias("w2")))
     c2 = sp.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -1811,32 +1684,9 @@ def q_text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_ppl_buckets",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS ws FROM documents),
-    bg AS (
-        SELECT doc_id,
-               unnest([ws[i] || ' ' || ws[i+1] FOR i IN range(1, len(ws))])
-                   AS bg
-        FROM tok WHERE len(ws) >= 2),
-    sp AS (SELECT doc_id, string_split(bg, ' ')[1] AS w1,
-                  string_split(bg, ' ')[2] AS w2
-           FROM bg),
-    c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM sp GROUP BY w1, w2),
-    c1 AS (SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1,
-                  COUNT(*) AS n1fw
-           FROM c2 GROUP BY w1),
-    bw AS (SELECT w2, COUNT(*) AS n1bw FROM c2 GROUP BY w2),
-    tot AS (SELECT COUNT(*) AS n1all FROM c2),
+    oracle=_KN_SQL + """,
     scored AS (
-        SELECT sp.doc_id,
-               ROUND(AVG(LN(
-                   GREATEST(c2.c2 - 0.75, 0.0) / c1.c1::DOUBLE
-                   + 0.75 * c1.n1fw / c1.c1::DOUBLE
-                     * bw.n1bw / tot.n1all::DOUBLE)), 4) AS lp
-        FROM sp
-        JOIN c2 USING (w1, w2) JOIN c1 USING (w1) JOIN bw USING (w2)
-        CROSS JOIN tot
-        GROUP BY sp.doc_id),
+        SELECT sp.doc_id,""" + _KN_SCORE_SQL.format(alias="lp") + """),
     b AS (
         SELECT d.source, scored.lp,
                NTILE(3) OVER (PARTITION BY d.source

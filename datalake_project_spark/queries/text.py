@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.functions import text as T
-from datalake_project_spark.queries import local_df, register
+from datalake_project_spark.queries import _sql, local_df, register
 
 # Shared DuckDB fragments (same semantics as functions/text.py).
 _SQL_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
@@ -23,6 +23,65 @@ def _stop_sql(lang: str) -> str:
     return (f"CASE WHEN len(toks) > 0 THEN "
             f"len(list_filter(toks, t -> t IN ({words})))::DOUBLE / len(toks)::DOUBLE "
             f"ELSE 0.0 END")
+
+
+# Per-doc stopword share for each of en/es/fr/de (s_en .. s_de).
+_LANGID_SCORED_SQL = f"""
+    WITH tok AS (SELECT doc_id, lang, {_SQL_TOKS} AS toks FROM documents),
+    scored AS (
+        SELECT doc_id, lang,
+               {_stop_sql('en')} AS s_en,
+               {_stop_sql('es')} AS s_es,
+               {_stop_sql('fr')} AS s_fr,
+               {_stop_sql('de')} AS s_de
+        FROM tok)"""
+
+# Word-3-gram term frequencies (term, c) over every document.
+_TRIGRAM_TF_SQL = """
+    WITH words AS (
+        SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+        FROM documents),
+    toks AS (
+        SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS term
+        FROM words, unnest(range(1, len(ws) - 1)) AS u(i)
+        WHERE len(ws) >= 3),
+    tf AS (SELECT term, COUNT(*) AS c FROM toks GROUP BY term)"""
+
+
+def _trigram_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_TRIGRAM_TF_SQL``'s (term, c) table."""
+    d = Catalog(spark, sf_dir).table("documents")
+    tri = (d.select(T.tokens("text").alias("ws"))
+           .where(F.size("ws") >= 3)
+           .select(F.explode(F.expr(
+               "transform(sequence(0, size(ws) - 3), "
+               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
+               .alias("term")))
+    return tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _ngrams(ws: DataFrame, n: int) -> DataFrame:
+    """One row ``g`` per word n-gram occurrence ("w1 .. wn") of the
+    token column ``ws``; unigrams are the exploded list itself."""
+    if n == 1:
+        return ws.select(F.explode("ws").alias("g"))
+    expr = " , ' ', ".join(f"ws[i+{k}]" for k in range(n))
+    return (ws.where(F.size("ws") >= n)
+            .select(F.explode(F.expr(
+                f"transform(sequence(0, size(ws) - {n}), "
+                f"i -> concat({expr}))")).alias("g")))
+
+
+def _probe_shingles(spark: SparkSession, sf_dir: str):
+    """(documents, sh, probe): per-doc 3-gram shingle arrays ``_sh`` of
+    the docs that have any, and the distinct shingles ``_s`` of the
+    probe set (doc_id < 3)."""
+    d = Catalog(spark, sf_dir).table("documents")
+    sh = d.select("doc_id", T.shingles(T.tokens("text"), n=3).alias("_sh")) \
+        .where(F.size("_sh") >= 1)
+    probe = (sh.where(F.col("doc_id") < 3)
+             .select(F.explode("_sh").alias("_s")).distinct())
+    return d, sh, probe
 
 
 @register(
@@ -117,15 +176,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_langid",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, lang, {_SQL_TOKS} AS toks FROM documents),
-    scored AS (
-        SELECT doc_id, lang,
-               {_stop_sql('en')} AS s_en,
-               {_stop_sql('es')} AS s_es,
-               {_stop_sql('fr')} AS s_fr,
-               {_stop_sql('de')} AS s_de
-        FROM tok)
+    oracle=_LANGID_SCORED_SQL + """
     SELECT doc_id, lang AS labeled_lang,
            CASE WHEN GREATEST(s_en, s_es, s_fr, s_de) <= 0 THEN 'unknown'
                 WHEN s_en >= GREATEST(s_es, s_fr, s_de) THEN 'en'
@@ -299,16 +350,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_contamination",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    oracle=_sql.WITH_SHINGLES + """,
     probes AS (
         SELECT list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
                               FOR i IN range(1, len(ws) - 1)]) AS pshingles
@@ -326,13 +368,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inverted index the dedup family already builds.",
 )
 def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions.text import shingles
-
-    d = Catalog(spark, sf_dir).table("documents")
-    sh = d.select("doc_id", shingles(T.tokens("text"), n=3).alias("_sh")) \
-        .where(F.size("_sh") >= 1)
-    probe = (sh.where(F.col("doc_id") < 3)
-             .select(F.explode("_sh").alias("_s")).distinct())
+    _, sh, probe = _probe_shingles(spark, sf_dir)
     corpus = (sh.where(F.col("doc_id") >= 3)
               .select("doc_id", F.explode("_sh").alias("_s")))
     return (corpus.join(F.broadcast(probe), "_s", "left_semi")
@@ -432,15 +468,7 @@ def q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_langid_confusion",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, lang, {_SQL_TOKS} AS toks FROM documents),
-    scored AS (
-        SELECT doc_id, lang,
-               {_stop_sql('en')} AS s_en,
-               {_stop_sql('es')} AS s_es,
-               {_stop_sql('fr')} AS s_fr,
-               {_stop_sql('de')} AS s_de
-        FROM tok),
+    oracle=_LANGID_SCORED_SQL + """,
     pred AS (
         SELECT lang AS labeled_lang,
                CASE WHEN GREATEST(s_en, s_es, s_fr, s_de) <= 0 THEN 'unknown'
@@ -625,16 +653,7 @@ def q_text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_decontaminate",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id,
-               list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), w -> w <> '') AS ws
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              FOR i IN range(1, len(ws) - 1)]) AS shingles
-        FROM words WHERE len(ws) >= 3),
+    oracle=_sql.WITH_SHINGLES + """,
     probe_sh AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id < 3),
     ov AS (
         SELECT sh.doc_id, COUNT(DISTINCT s) AS n_overlap
@@ -668,13 +687,7 @@ def q_text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan plus one keyed aggregate, no extra corpus pass.",
 )
 def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions.text import shingles
-
-    d = Catalog(spark, sf_dir).table("documents")
-    sh = d.select("doc_id", shingles(T.tokens("text"), n=3).alias("_sh")) \
-        .where(F.size("_sh") >= 1)
-    probe = (sh.where(F.col("doc_id") < 3)
-             .select(F.explode("_sh").alias("_s")).distinct())
+    d, sh, probe = _probe_shingles(spark, sf_dir)
     ov = (sh.where(F.col("doc_id") >= 3)
           .select("doc_id", F.explode("_sh").alias("_s"))
           .join(F.broadcast(probe), "_s", "left_semi")
@@ -906,15 +919,7 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_chao1_vocab",
-    oracle="""
-    WITH words AS (
-        SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
-        FROM documents),
-    toks AS (
-        SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS term
-        FROM words, unnest(range(1, len(ws) - 1)) AS u(i)
-        WHERE len(ws) >= 3),
-    tf AS (SELECT term, COUNT(*) AS c FROM toks GROUP BY term),
+    oracle=_TRIGRAM_TF_SQL + """,
     s AS (
         SELECT COUNT(*) AS v,
                SUM(c) AS n_tokens,
@@ -952,14 +957,7 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "not O(corpus).",
 )
 def q_text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tri = (d.select(T.tokens("text").alias("ws"))
-           .where(F.size("ws") >= 3)
-           .select(F.explode(F.expr(
-               "transform(sequence(0, size(ws) - 3), "
-               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-               .alias("term")))
-    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+    tf = _trigram_tf(spark, sf_dir)
     s = tf.agg(
         F.count(F.lit(1)).alias("v"),
         F.sum("c").alias("n_tokens"),
@@ -983,15 +981,7 @@ def q_text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_good_turing",
-    oracle="""
-    WITH words AS (
-        SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
-        FROM documents),
-    toks AS (
-        SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS term
-        FROM words, unnest(range(1, len(ws) - 1)) AS u(i)
-        WHERE len(ws) >= 3),
-    tf AS (SELECT term, COUNT(*) AS c FROM toks GROUP BY term),
+    oracle=_TRIGRAM_TF_SQL + """,
     coc AS (SELECT c AS r, COUNT(*) AS nr FROM tf GROUP BY c),
     n_ AS (SELECT SUM(c) AS n FROM tf)
     SELECT CAST(a.r AS BIGINT) AS r,
@@ -1023,14 +1013,7 @@ def q_text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "end-to-end with one rounded division per row.",
 )
 def q_text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tri = (d.select(T.tokens("text").alias("ws"))
-           .where(F.size("ws") >= 3)
-           .select(F.explode(F.expr(
-               "transform(sequence(0, size(ws) - 3), "
-               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-               .alias("term")))
-    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+    tf = _trigram_tf(spark, sf_dir)
     coc = (tf.groupBy(F.col("c").alias("r"))
            .agg(F.count(F.lit(1)).alias("nr")))
     n_ = tf.agg(F.sum("c").alias("n"))
@@ -1180,15 +1163,7 @@ def q_text_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = d.select(T.tokens("text").alias("ws"))
 
     def grams(n: int):
-        if n == 1:
-            g = ws.select(F.explode("ws").alias("g"))
-        else:
-            expr = " , ' ', ".join(f"ws[i+{k}]" for k in range(n))
-            g = (ws.where(F.size("ws") >= n)
-                 .select(F.explode(F.expr(
-                     f"transform(sequence(0, size(ws) - {n}), "
-                     f"i -> concat({expr}))")).alias("g")))
-        return g.agg(F.lit(n).alias("n"),
+        return _ngrams(ws, n).agg(F.lit(n).alias("n"),
                      F.count(F.lit(1)).alias("total"),
                      F.countDistinct("g").alias("uniq"))
 
@@ -1340,15 +1315,7 @@ def q_text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = d.select(T.tokens("text").alias("ws"))
 
     def order(n: int):
-        if n == 1:
-            g = ws.select(F.explode("ws").alias("g"))
-        else:
-            expr = " , ' ', ".join(f"ws[i+{k}]" for k in range(n))
-            g = (ws.where(F.size("ws") >= n)
-                 .select(F.explode(F.expr(
-                     f"transform(sequence(0, size(ws) - {n}), "
-                     f"i -> concat({expr}))")).alias("g")))
-        return (g.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
+        return (_ngrams(ws, n).groupBy("g").agg(F.count(F.lit(1)).alias("c"))
                 .agg(F.lit(n).alias("n"),
                      F.sum("c").alias("nn"),
                      F.count(F.lit(1)).alias("v"),
@@ -1418,14 +1385,7 @@ def q_text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rounded share per row.",
 )
 def q_text_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tri = (d.select(T.tokens("text").alias("ws"))
-           .where(F.size("ws") >= 3)
-           .select(F.explode(F.expr(
-               "transform(sequence(0, size(ws) - 3), "
-               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-               .alias("term")))
-    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+    tf = _trigram_tf(spark, sf_dir)
     n_ = tf.agg(F.sum("c").alias("n"), F.count(F.lit(1)).alias("v"))
 
     def headsum(k: int):

@@ -60,17 +60,13 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
     commits; see the tuning helper's docstring for numbers)."""
     spark = stream_df.sparkSession
     name = f"dlps_stream_sink_{next(_query_seq)}"
-    if state_partitions is None:
-        q = (
-            stream_df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode).trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return spark.table(name)
+    # An unsized drain takes the lock too: its start() freezes whatever
+    # width the session holds, which may be another drain's temporary one.
     with _conf_lock:
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(state_partitions))
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(state_partitions))
         try:
             q = (
                 stream_df.writeStream.format("memory").queryName(name)

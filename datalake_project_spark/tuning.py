@@ -8,8 +8,10 @@ runtime but cannot SPLIT a too-large partition of a non-skewed shuffle —
 the initial number must be at least input_bytes / target_partition_bytes.
 
 These helpers derive that number from the actual input footprint (file
-sizes on disk), clamp it to sane bounds, and hand it to a session conf
-or a per-stage ``repartition``. They are advisory arithmetic, not magic:
+sizes on disk) and clamp it to sane bounds; the caller hands it to a
+per-stage keyed ``repartition``, or to one streaming drain's state width
+(``streaming.ops.run_available_now``, which scopes the session conf to
+that drain). They are advisory arithmetic, not magic:
 the unit test pins the arithmetic, and the engine's session factory
 keeps its local default for fixture-scale work.
 """

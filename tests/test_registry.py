@@ -155,3 +155,38 @@ def test_every_local_checkpoint_names_its_keep_category():
             if not (tag.search(line) or (i and tag.search(lines[i - 1]))):
                 untagged.append(f"{path.relative_to(pkg.parent)}:{i + 1}")
     assert not untagged, f"localCheckpoint without a keep tag: {untagged}"
+
+
+# Ratchet: lower it when a change folds more repeated code; never raise it.
+CLONE_BUDGET = 345
+
+
+def test_query_code_clone_budget():
+    """Copy-paste ratchet over the engine package: count the distinct
+    lines lying in a window of 6 consecutive stripped lines (blank lines
+    and lines starting with ``#`` or ``\"\"\"`` skipped, >= 120 chars in
+    total) that repeats an earlier window — earlier in sorted path
+    order, then by position. Lines inside triple-quoted strings count,
+    so oracle SQL is included. A repeated sub-plan or oracle CTE belongs
+    in a shared builder (``queries/_sql.py`` for SQL used by several
+    modules), not in a fresh copy."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "datalake_project_spark"
+    seen, cloned = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        lines = [(i, s) for i, s in
+                 enumerate(x.strip() for x in path.read_text().splitlines())
+                 if s and not s.startswith(("#", '"""'))]
+        for k in range(len(lines) - 5):
+            window = lines[k:k + 6]
+            key = tuple(s for _, s in window)
+            if sum(map(len, key)) < 120:
+                continue
+            if key in seen:
+                cloned.update((path, i) for i, _ in window)
+            else:
+                seen.add(key)
+    assert len(cloned) <= CLONE_BUDGET, (
+        f"{len(cloned)} lines repeat an earlier 6-line window "
+        f"(budget {CLONE_BUDGET}): fold the copy into a shared builder")

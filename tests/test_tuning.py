@@ -131,8 +131,10 @@ def test_run_available_now_concurrent_drains_each_get_their_width(
     """Two drains submitted concurrently with DIFFERENT state_partitions
     must each run at their own width (r12 ADVICE: the session-global
     conf save/restore could interleave across threads; drains now
-    serialize the conf window under a module lock). Widths are observed
-    via StreamingQueryListener progress (numShufflePartitions of the
+    serialize the conf window under a module lock), and an unsized
+    drain overlapping them must run at the session width, never at a
+    sized drain's temporary one. Widths are observed via
+    StreamingQueryListener progress (numShufflePartitions of the
     stateful operator)."""
     import time
     from concurrent.futures import ThreadPoolExecutor
@@ -169,7 +171,7 @@ def test_run_available_now_concurrent_drains_each_get_their_width(
     rec = Rec()
     spark.streams.addListener(rec)
     try:
-        def drain(n_parts: int):
+        def drain(n_parts: int | None):
             stream = spark.readStream.schema(df.schema).parquet(str(src))
             agg = stream.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
             out = run_available_now(agg, "complete",
@@ -177,18 +179,20 @@ def test_run_available_now_concurrent_drains_each_get_their_width(
             return {(r["k"], r["n"]) for r in out.collect()}
 
         saved = spark.conf.get("spark.sql.shuffle.partitions")
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f3 = pool.submit(inheritable_thread_target(drain), 3)
-            f5 = pool.submit(inheritable_thread_target(drain), 5)
-            assert f3.result() == {(k, 20) for k in range(5)}
-            assert f5.result() == {(k, 20) for k in range(5)}
+        assert int(saved) not in (3, 5)
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futures = [pool.submit(inheritable_thread_target(drain), n)
+                       for n in (3, None, 5)]
+            for f in futures:
+                assert f.result() == {(k, 20) for k in range(5)}
         assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-        # listener events are async: wait for both queries' progress
+        # listener events are async: wait for all three queries' progress
         deadline = time.time() + 30
-        while time.time() < deadline and len(widths) < 2:
+        while time.time() < deadline and len(widths) < 3:
             time.sleep(0.2)
         assert all(len(s) == 1 for s in widths.values()), widths
-        assert sorted(min(s) for s in widths.values()) == [3, 5], widths
+        assert (sorted(min(s) for s in widths.values())
+                == sorted([3, 5, int(saved)])), widths
     finally:
         spark.streams.removeListener(rec)
 
